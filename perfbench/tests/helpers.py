@@ -1,0 +1,8 @@
+"""Puts the benchmark's modules on the import path of its tests."""
+import os
+import sys
+
+PERFBENCH = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(PERFBENCH)
+if PERFBENCH not in sys.path:
+    sys.path.insert(0, PERFBENCH)
