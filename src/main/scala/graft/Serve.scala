@@ -34,9 +34,16 @@ import graft.streaming.SubmitSink
   *
   * Scale shape: the single JVM here is local-mode packaging, not a
   * design limit — N receivers spool N prefixes into the same
-  * directory behind one query; every stage after the spool is
-  * ordinary distributed Structured Streaming (no driver-side row
-  * handling, no collect).
+  * directory behind one query, and no stage handles rows on the
+  * driver (no collect). Each micro-batch is narrowed to ONE partition
+  * before its dedup ([[dedupBatch]]): the batches this path sees are
+  * small (about 18 rows at a steady 20 points/s, about 226 under a
+  * four-client flood; `perfbench/LAYERS.md`), far below what one task
+  * handles, and a single partition lets the dedup and the sink's
+  * broadcast anti-join run without a shuffle: 4 Spark jobs a batch,
+  * each a driver round trip that costs more than the rows do. A rate
+  * at which one task per batch becomes the bottleneck would need
+  * wider batches again.
   */
 object Serve {
 
@@ -61,11 +68,20 @@ object Serve {
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        SubmitSink.processBatch(batch.dropDuplicates("msg_key"),
+        SubmitSink.processBatch(dedupBatch(batch),
           "msg_key", order, submitDir, stateDir)
         ()
       }
       .start()
+
+  /** One micro-batch as the sink receives it: a narrow `coalesce(1)`
+    * (no shuffle), then the in-batch dedup by message identity. A
+    * single partition already satisfies the dedup's clustering, so
+    * neither it nor a broadcast anti-join downstream plans an
+    * Exchange (see the object doc for the batch sizes this suits).
+    */
+  private[graft] def dedupBatch(batch: DataFrame): DataFrame =
+    batch.coalesce(1).dropDuplicates("msg_key")
 
   def main(args: Array[String]): Unit = {
     val pos = args.filterNot(_.startsWith("--"))

@@ -19,7 +19,11 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   *    Spark-side V1 validator agree by construction;
   *  - DEBUG → any body accepted (`body: Type.Any()`, `task.ts:110`)
   *    and logged to stderr (`task.ts:116-118`);
-  *  - non-POST → 405.
+  *  - non-POST → 405;
+  *  - body over [[WebhookReceiver.MaxBodyBytes]] → 413, nothing
+  *    spooled;
+  *  - spool write fails (an `IOException`: disk full, dir gone) →
+  *    503, so the sender knows the point was not taken and can retry.
   *
   * Accepted payloads land as immutable `part-` files (write hidden
   * tmp + atomic rename, so a concurrent directory listing never sees
@@ -71,14 +75,25 @@ final class WebhookReceiver(spoolDir: java.io.File,
         respond(ex, 405, "Method Not Allowed")
       } else {
         val webhookid = ex.getRequestURI.getPath.stripPrefix("/")
-        val body = new String(
-          ex.getRequestBody.readAllBytes(), "UTF-8")
-        if (debug)
-          System.err.println(s"DEBUG Webhook: $webhookid - $body")
-        if (debug || isValid(body)) {
-          spool(body)
-          respond(ex, 200, "Received")
-        } else respond(ex, 400, "Invalid webhook body")
+        // one byte past the cap tells "at the cap" from "over it"
+        val raw = ex.getRequestBody.readNBytes(
+          WebhookReceiver.MaxBodyBytes + 1)
+        if (raw.length > WebhookReceiver.MaxBodyBytes)
+          respond(ex, 413, "Webhook body too large")
+        else {
+          val body = new String(raw, "UTF-8")
+          if (debug)
+            System.err.println(s"DEBUG Webhook: $webhookid - $body")
+          if (debug || isValid(body)) {
+            // a 200 promises the point was spooled; a spool that
+            // cannot be written says so instead of dropping the socket
+            val spooled = try { spool(body); true } catch {
+              case _: java.io.IOException => false
+            }
+            if (spooled) respond(ex, 200, "Received")
+            else respond(ex, 503, "Spool unavailable")
+          } else respond(ex, 400, "Invalid webhook body")
+        }
       }
     } finally ex.close()
   })
@@ -123,11 +138,16 @@ final class WebhookReceiver(spoolDir: java.io.File,
     // flatten BOTH newline flavors: Hadoop's line reader splits on
     // lone CR too, so a CRLF pretty-printed body would otherwise
     // spool as several malformed JSON fragments after a 200
-    java.nio.file.Files.write(tmp.toPath,
-      body.replace('\n', ' ').replace('\r', ' ').getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp.toPath,
-      new java.io.File(spoolDir, f"$prefix$i%09d").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    try {
+      java.nio.file.Files.write(tmp.toPath,
+        body.replace('\n', ' ').replace('\r', ' ').getBytes("UTF-8"))
+      java.nio.file.Files.move(tmp.toPath,
+        new java.io.File(spoolDir, f"$prefix$i%09d").toPath,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    } catch { case e: java.io.IOException =>
+      java.nio.file.Files.deleteIfExists(tmp.toPath)
+      throw e
+    }
   }
 
   private def respond(ex: HttpExchange, status: Int,
@@ -142,4 +162,13 @@ final class WebhookReceiver(spoolDir: java.io.File,
   }
 
   override def close(): Unit = server.stop(0)
+}
+
+object WebhookReceiver {
+
+  /** Largest accepted body. A valid `EverywhereItem` is about 400 B;
+    * the cap bounds what one request can make the receiver hold in
+    * memory and write to the spool.
+    */
+  val MaxBodyBytes: Int = 1 << 20
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** The reference pipeline writes its two sinks — the feature submit
   * (K1) and the entity-state persist (K2) — in OPPOSITE orders on
@@ -28,6 +29,22 @@ import org.apache.spark.sql.functions.col
   * loss). Everything is executor-side distributed I/O — no driver
   * collect; the anti-join broadcasts or shuffles by Catalyst's
   * choice over the processed-log size.
+  *
+  * Job shape of a [[StateFirst]] batch: while the processed log is
+  * under the broadcast threshold, a batch runs 4 Spark jobs — the
+  * state-keys broadcast, the `localCheckpoint`, the state write and
+  * the submit write. Each job is a driver round trip that, at the
+  * webhook's ~20-row batches, costs more than the work, so two
+  * others are left out on purpose:
+  *  - no schema inference: the log is read with the batch's own key
+  *    field as its schema (the log holds nothing else), so no footer
+  *    job runs before the plan is built;
+  *  - no `distinct` on the log: a left-anti join keeps each batch row
+  *    at most once however often its key repeats in the log (a
+  *    [[SubmitFirst]] replay writes a key twice), so a distinct only
+  *    added a shuffle stage.
+  * A log past the threshold makes Catalyst shuffle both sides
+  * instead; the guard stays correct, only the job count grows.
   */
 object SubmitSink {
 
@@ -59,7 +76,7 @@ object SubmitSink {
     * yet"; only files outside the `_`/`.` marker namespace count.
     */
   private def processedKeys(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, keyCol: String): Option[DataFrame] = {
+      stateDir: String, keyField: StructField): Option[DataFrame] = {
     val path = new org.apache.hadoop.fs.Path(stateDir)
     val fs = path.getFileSystem(
       spark.sparkContext.hadoopConfiguration)
@@ -69,8 +86,7 @@ object SubmitSink {
         st.isFile && !n.startsWith("_") && !n.startsWith(".")
       }
     if (committed)
-      Some(spark.read.parquet(stateDir)
-        .select(col(keyCol)).distinct())
+      Some(spark.read.schema(StructType(Seq(keyField))).parquet(stateDir))
     else None
   }
 
@@ -98,7 +114,8 @@ object SubmitSink {
       // nothing downstream can re-read stateDir. Executor loss
       // between the writes fails the batch → streaming retry →
       // replay is guarded off by the state log: still at-most-once.
-      val fresh = processedKeys(batch.sparkSession, stateDir, keyCol)
+      val fresh = processedKeys(batch.sparkSession, stateDir,
+          batch.schema(keyCol))
         .fold(batch)(seen =>
           batch.join(seen, Seq(keyCol), "left_anti"))
         .localCheckpoint()

@@ -17,6 +17,14 @@ class ServeSpec extends SparkSpec {
       s""" "trackPoint": {"time": $t, "isEmergency": false,""" +
       s""" "direction": 90.0, "point": {"x": 1.5, "y": 2.5}}}"""
 
+  private def post(port: Int, body: String) =
+    java.net.http.HttpClient.newHttpClient().send(
+      java.net.http.HttpRequest.newBuilder()
+        .uri(java.net.URI.create(s"http://127.0.0.1:$port/h1"))
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
+        .build(),
+      java.net.http.HttpResponse.BodyHandlers.ofString())
+
   test("Serve pipeline: POST → submit parquet, dedupe by message identity") {
     val root = java.nio.file.Files.createTempDirectory("serve").toFile
     def dir(n: String) = new java.io.File(root, n).getAbsolutePath
@@ -29,24 +37,16 @@ class ServeSpec extends SparkSpec {
     val q = Serve.pipeline(spark, spool.getAbsolutePath,
       dir("ckpt"), dir("submit"), dir("state"))
     try {
-      val client = java.net.http.HttpClient.newHttpClient()
-      def post(body: String) = client.send(
-        java.net.http.HttpRequest.newBuilder()
-          .uri(java.net.URI.create(s"http://127.0.0.1:${recv.port}/h1"))
-          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
-          .build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-
-      assert(post(item(1, 1704844800000L)).statusCode() == 200)
-      assert(post(item(1, 1704844800000L)).statusCode() == 200) // dup POST
-      assert(post(item(2, 1704844860000L)).statusCode() == 200)
-      assert(post("""{"no": "entityId"}""").statusCode() == 400)
+      assert(post(recv.port, item(1, 1704844800000L)).statusCode() == 200)
+      assert(post(recv.port, item(1, 1704844800000L)).statusCode() == 200) // dup POST
+      assert(post(recv.port, item(2, 1704844860000L)).statusCode() == 200)
+      assert(post(recv.port, """{"no": "entityId"}""").statusCode() == 400)
       q.processAllAvailable()
       // replay across batches: the duplicate arrives again later —
       // the StateFirst processed-log guard must drop it
-      assert(post(item(1, 1704844800000L)).statusCode() == 200)
+      assert(post(recv.port, item(1, 1704844800000L)).statusCode() == 200)
       // a NEWER point for entity 1 is a new message identity: flows
-      assert(post(item(1, 1704844980000L)).statusCode() == 200)
+      assert(post(recv.port, item(1, 1704844980000L)).statusCode() == 200)
       q.processAllAvailable()
 
       val out = spark.read.parquet(dir("submit"))
@@ -69,6 +69,49 @@ class ServeSpec extends SparkSpec {
     }
   }
 
+  /** A receiver on a fresh spool dir, or cancel where the sandbox
+    * forbids loopback sockets.
+    */
+  private def receiver(): (java.io.File, WebhookReceiver) = {
+    val spool = java.nio.file.Files.createTempDirectory("spool").toFile
+    scala.util.Try(new WebhookReceiver(spool)) match {
+      case scala.util.Success(r) => (spool, r)
+      case scala.util.Failure(e) =>
+        cancel(s"sandbox forbids loopback sockets: $e")
+    }
+  }
+
+  test("receiver: a spool that cannot be written answers 503, not a dropped connection") {
+    val (spool, recv) = receiver()
+    try {
+      assert(spool.delete(), s"could not remove $spool")
+      val r = post(recv.port, item(1, 1704844800000L))
+      assert(r.statusCode() == 503, s"got ${r.statusCode()}: ${r.body()}")
+      assert(r.body().contains("\"status\":503") &&
+        r.body().contains("\"message\":"), r.body())
+      // the receiver keeps serving once the spool is back
+      assert(spool.mkdirs())
+      assert(post(recv.port, item(1, 1704844800000L)).statusCode() == 200)
+      assert(spool.list().toSeq.filter(_.startsWith("part-")).size == 1,
+        spool.list().toSeq)
+    } finally recv.close()
+  }
+
+  test("receiver: a body over the 1 MiB cap answers 413 and spools nothing") {
+    val (spool, recv) = receiver()
+    try {
+      val cap = WebhookReceiver.MaxBodyBytes
+      val over = post(recv.port, "x" * (cap + 1))
+      assert(over.statusCode() == 413,
+        s"got ${over.statusCode()}: ${over.body()}")
+      assert(over.body().contains("\"status\":413"), over.body())
+      // exactly at the cap is read in full and judged on its content
+      assert(post(recv.port, "x" * cap).statusCode() == 400)
+      assert(spool.list().isEmpty, spool.list().toSeq)
+      assert(post(recv.port, item(1, 1704844800000L)).statusCode() == 200)
+    } finally recv.close()
+  }
+
   test("N receivers, one stream: distinct spool prefixes merge behind one query") {
     // the documented scale-out shape (Serve.scala scaladoc): N HTTP
     // receivers spool N prefixes into the SAME directory behind one
@@ -89,13 +132,6 @@ class ServeSpec extends SparkSpec {
     val q = Serve.pipeline(spark, spool.getAbsolutePath,
       dir("ckpt"), dir("submit"), dir("state"))
     try {
-      val client = java.net.http.HttpClient.newHttpClient()
-      def post(port: Int, body: String) = client.send(
-        java.net.http.HttpRequest.newBuilder()
-          .uri(java.net.URI.create(s"http://127.0.0.1:$port/h1"))
-          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
-          .build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
       // interleave across receivers, including the same entity
       // hitting BOTH receivers with distinct event times (load
       // balancer reassignment): all 4 identities are distinct

@@ -114,6 +114,39 @@ class SinkOrderingSpec extends SparkSpec {
       s"state-first must never duplicate: ${r.submitCounts}")
   }
 
+  test("StateFirst: a state log with repeated keys across files drops each seen key, multiplies nothing") {
+    // SubmitFirst leaves a key in the log more than once when a batch
+    // replays after its state write landed; StateFirst reads that
+    // log with no distinct and no schema inference, so pin both: a
+    // seen key is dropped however often the log repeats it, a new
+    // key submits once, and String keys (the webhook's msg_key)
+    // read back under the batch's own key field
+    def tmp(p: String) = java.nio.file.Files
+      .createTempDirectory(s"graft-dupstate-$p").toString
+    val stateDir = tmp("state") + "/st"
+    def batch(ks: String*) =
+      ks.map(k => (k, k.length.toDouble)).toDF("msg_key", "course")
+    val replayed = tmp("replayed") + "/out"
+    Seq(batch("a", "b"), batch("a", "b"), batch("b", "c")).foreach(
+      SubmitSink.processBatch(_, "msg_key", SubmitSink.SubmitFirst,
+        replayed, stateDir))
+    val log = spark.read.parquet(stateDir)
+    assert(log.inputFiles.length > 1 &&
+      log.count() > log.distinct().count(),
+      s"log should repeat keys across files: ${log.collect().toSeq}")
+
+    val submitDir = tmp("submit") + "/out"
+    SubmitSink.processBatch(batch("a", "b", "c", "d", "e"), "msg_key",
+      SubmitSink.StateFirst, submitDir, stateDir)
+    val sent = spark.read.parquet(submitDir)
+      .select("msg_key").as[String].collect().sorted.toSeq
+    assert(sent == Seq("d", "e"), s"submitted: $sent")
+    val state = spark.read.parquet(stateDir)
+      .groupBy("msg_key").count().as[(String, Long)].collect().toMap
+    assert(state("d") == 1L && state("e") == 1L,
+      s"new keys must be logged once: $state")
+  }
+
   test("StateFirst: uncommitted state dir (crash during first write) reads as nothing-processed") {
     // a kill mid-way through the FIRST state write leaves the dir
     // existing with only _temporary scaffolding — replay must treat
