@@ -69,10 +69,9 @@ con.execute(f"SET temp_directory = '{_spill_dir}'")
 
 
 # ---- scale-tier disk guard (VERDICT r12 #2) ------------------------
-# Both r12 oracle casualties died on DuckDB spill ENOSPC because the
-# serial campaign tail doesn't route through soak_lanes' SIGSTOP
-# guard. Three layers, all scale-tier-only (the default tier stays
-# byte-identical to the driver's gate):
+# Both r12 oracle casualties died on DuckDB spill ENOSPC: a serial
+# oracle run has no outside guard watching the disk. Three layers,
+# all scale-tier-only (the default tier is unchanged):
 #   1. pre-flight: if free disk < GRAFT_ORACLE_MIN_DISK_GB (30), fail
 #      fast with a clear reason BEFORE touching any oracle;
 #   2. hard cap: SET max_temp_directory_size = free - margin, so

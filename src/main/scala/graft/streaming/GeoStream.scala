@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.functions.GeoFunctions
 
 /** A live track ping with derived coordinates (the streaming shape of
@@ -49,34 +48,21 @@ object GeoStream {
     val spark = pings.sparkSession
     import spark.implicits._
     val minDq = GeoFunctions.minStationDistQ(col("lat"), col("lon"), stations)
-    pings
+    val statuses = pings
       .withColumn("minM", minDq)
       .withColumn("inside", col("minM") <= radiusM)
       .select(col("entityId"), col("eventId"), col("ts"),
         col("inside"), col("minM"))
-      .as(Encoders.product[GeoStatus])
-      .groupByKey(_.entityId)
-      .flatMapGroupsWithState[Boolean, FenceEvent](
-        OutputMode.Append, GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[GeoStatus], state: GroupState[Boolean]) =>
-          // full-µs ordering (getTime is ms-truncated): the batch
-          // geofence window orders by (ts, event_id) at µs
-          // precision, and a sub-ms tie sorted differently here
-          // would emit a divergent enter/exit sequence
-          val ordered = rows.toSeq
-            .sortBy(r => (StreamArith.micros(r.ts), r.eventId))
-          val (events, last) =
-            ordered.foldLeft((Vector.empty[FenceEvent],
-                state.getOption)) { case ((acc, prev), r) =>
-              val acc2 =
-                if (prev.exists(_ != r.inside))
-                  acc :+ FenceEvent(r.entityId, r.eventId, r.ts,
-                    if (r.inside) "enter" else "exit", r.minM)
-                else acc
-              (acc2, Some(r.inside))
-            }
-          last.foreach(state.update)
-          events.iterator
-      }
+    // (µs, event_id) order: the batch geofence window's, so a sub-ms
+    // tie can't emit a divergent enter/exit sequence
+    KeyedFold(statuses.as(Encoders.product[GeoStatus]))(_.entityId,
+        Some(KeyedFold.byTime[GeoStatus](_.ts, _.eventId))) {
+      (_: Long, prev: Option[Boolean], r: GeoStatus) =>
+        (r.inside,
+          if (prev.exists(_ != r.inside))
+            Some(FenceEvent(r.entityId, r.eventId, r.ts,
+              if (r.inside) "enter" else "exit", r.minM))
+          else None)
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One keyed metric observation arriving on the stream. */
 case class MetricPoint(event_id: Long, ts: java.sql.Timestamp,
@@ -40,42 +39,31 @@ case class RingState(values: List[Double])
   */
 object StreamAnomaly {
 
-  private def micros(ts: java.sql.Timestamp): Long =
-    StreamArith.micros(ts)
-
   def zScores(events: Dataset[MetricPoint], window: Int = 20,
       zMax: Double = 3.0): Dataset[AnomalyScore] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[MetricPoint],
-         state: GroupState[RingState]) =>
-          var buf = state.getOption.map(_.values).getOrElse(Nil)
-          val out = List.newBuilder[AnomalyScore]
-          it.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            val z: Option[Double] =
-              if (buf.length == window) {
-                val q = buf.map(v => BigDecimal.decimal(v)
-                  .setScale(6, BigDecimal.RoundingMode.HALF_UP))
-                val sm = q.sum
-                val sq = q.map(d => d * d).sum
-                val mean = sm.toDouble / window
-                // exact-decimal numerator — same formula as the
-                // batch rollingZ and its oracle (no E[x²] − E[x]²
-                // double cancellation)
-                val variance = (sq * window - sm * sm).toDouble /
-                  (window.toLong * window)
-                if (variance > 0)
-                  Some((e.value - mean) / math.sqrt(variance))
-                else None
-              } else None
-            out += AnomalyScore(e.event_id, key, z,
-              z.exists(v => math.abs(v) > zMax))
-            buf = (buf :+ e.value).takeRight(window)
-          }
-          state.update(RingState(buf))
-          out.result().iterator
-      }
+    KeyedFold(events)(_.event_type,
+        Some(KeyedFold.byTime[MetricPoint](_.ts, _.event_id))) {
+      (key: String, prev: Option[RingState], e: MetricPoint) =>
+        val buf = prev.map(_.values).getOrElse(Nil)
+        val z: Option[Double] =
+          if (buf.length == window) {
+            val q = buf.map(StreamArith.dec6)
+            val sm = q.sum
+            val sq = q.map(d => d * d).sum
+            val mean = sm.toDouble / window
+            // exact-decimal numerator — same formula as the batch
+            // rollingZ and its oracle (no E[x²] − E[x]² double
+            // cancellation)
+            val variance = (sq * window - sm * sm).toDouble /
+              (window.toLong * window)
+            if (variance > 0)
+              Some((e.value - mean) / math.sqrt(variance))
+            else None
+          } else None
+        (RingState((buf :+ e.value).takeRight(window)),
+          Some(AnomalyScore(e.event_id, key, z,
+            z.exists(v => math.abs(v) > zMax))))
+    }
   }
 }

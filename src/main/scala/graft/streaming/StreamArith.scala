@@ -6,10 +6,9 @@ package graft.streaming
   * enough when the batch side orders by `unix_micros`), the HALF_UP
   * rounding/quantization grid the DuckDB oracles pin, and the
   * md5-prefix hashes the batch SQL derives with
-  * `conv(substring(md5(x), 1, n), 16, 10)`. One definition each:
-  * previously nine private copies lived across the twin files, and a
-  * fix applied to one copy but not another would silently break
-  * parity for the unpatched operators.
+  * `conv(substring(md5(x), 1, n), 16, 10)`. One definition each,
+  * called directly: a fix applied to one copy but not another would
+  * silently break parity for the unpatched operators.
   */
 private[graft] object StreamArith {
 

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One attribution-relevant event arriving on the stream. */
 case class TouchEvent(user_id: Long, event_id: Long,
@@ -28,25 +27,16 @@ object StreamAttribution {
 
   private val touches = Set("click", "view", "signup")
 
-  private def micros(ts: java.sql.Timestamp): Long =
-    StreamArith.micros(ts)
-
   def attributions(events: Dataset[TouchEvent]): Dataset[Attribution] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[TouchEvent],
-         state: GroupState[String]) =>
-          var channel = state.getOption.getOrElse("unattributed")
-          val out = List.newBuilder[Attribution]
-          it.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            if (touches(e.event_type)) channel = e.event_type
-            else if (e.event_type == "purchase")
-              out += Attribution(uid, e.event_id, channel, e.value)
-          }
-          state.update(channel)
-          out.result().iterator
-      }
+    KeyedFold(events)(_.user_id,
+        Some(KeyedFold.byTime[TouchEvent](_.ts, _.event_id))) {
+      (uid: Long, prev: Option[String], e: TouchEvent) =>
+        val channel = prev.getOrElse("unattributed")
+        if (touches(e.event_type)) (e.event_type, None)
+        else if (e.event_type == "purchase")
+          (channel, Some(Attribution(uid, e.event_id, channel, e.value)))
+        else (channel, None)
+    }
   }
 }

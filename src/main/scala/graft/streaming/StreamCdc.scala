@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One change-log record arriving on the stream. */
 case class ChangeEvent(user_id: Long, event_id: Long,
@@ -29,29 +28,19 @@ case class CdcState(op: String, value: Double, tsUs: Long,
   */
 object StreamCdc {
 
-  private def micros(ts: java.sql.Timestamp): Long =
-    StreamArith.micros(ts)
-
   def applyChanges(changes: Dataset[ChangeEvent]): Dataset[SnapshotRow] = {
     import changes.sparkSession.implicits._
-    changes.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[ChangeEvent],
-         state: GroupState[CdcState]) =>
-          var cur = state.getOption.orNull
-          it.foreach { c =>
-            val u = micros(c.ts)
-            val newer = cur == null ||
-              u > cur.tsUs || (u == cur.tsUs && c.event_id > cur.eventId)
-            val n = if (cur == null) 1L else cur.n + 1
-            cur =
-              if (newer) CdcState(c.op, c.value, u, c.event_id, n)
-              else cur.copy(n = n)
-          }
-          state.update(cur)
-          Iterator.single(SnapshotRow(uid, cur.op, cur.value,
-            cur.tsUs / 1000L, cur.n))
-      }
+    KeyedFold(changes)(_.user_id)(
+      step = (_: Long, prev: Option[CdcState], c: ChangeEvent) => {
+        val u = StreamArith.micros(c.ts)
+        val newer = prev.forall(cur =>
+          u > cur.tsUs || (u == cur.tsUs && c.event_id > cur.eventId))
+        val n = prev.fold(1L)(_.n + 1)
+        (if (newer) CdcState(c.op, c.value, u, c.event_id, n)
+         else prev.get.copy(n = n), None)
+      },
+      emit = (uid: Long, _: Option[CdcState], cur: CdcState) =>
+        Iterator.single(SnapshotRow(uid, cur.op, cur.value,
+          cur.tsUs / 1000L, cur.n)))
   }
 }

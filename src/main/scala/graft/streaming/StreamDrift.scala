@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One binned observation from the live (current) period. */
 case class DriftEvent(event_type: String, bin: Long)
@@ -28,8 +27,6 @@ case class DriftState(cur: Map[Long, Long])
   */
 object StreamDrift {
 
-  private def dec6(v: Double): BigDecimal = StreamArith.dec6(v)
-
   /** PSI of `cur` vs `ref` replicating q_drift_psi's quantized form. */
   private[streaming] def psi(ref: Map[Long, Long],
       cur: Map[Long, Long]): (Long, Long, Long, Double) = {
@@ -40,7 +37,7 @@ object StreamDrift {
     val total = bins.map { b =>
       val p = (ref.getOrElse(b, 0L) + 1).toDouble / (nRef + nBins)
       val q = (cur.getOrElse(b, 0L) + 1).toDouble / (nCur + nBins)
-      dec6((p - q) * dec6(math.log(p / q)).toDouble)
+      StreamArith.dec6((p - q) * StreamArith.dec6(math.log(p / q)).toDouble)
     }.sum
     (nRef, nCur, nBins,
       total.toDouble) // exact decimal sum, then one double round
@@ -49,22 +46,17 @@ object StreamDrift {
   def monitor(events: Dataset[DriftEvent],
       ref: Map[String, Map[Long, Long]]): Dataset[DriftEstimate] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[DriftEvent],
-         state: GroupState[DriftState]) =>
-          var cur = state.getOption.map(_.cur)
-            .getOrElse(Map.empty[Long, Long])
-          it.foreach { e =>
-            cur = cur.updated(e.bin, cur.getOrElse(e.bin, 0L) + 1)
-          }
-          state.update(DriftState(cur))
-          val (nRef, nCur, nBins, v) =
-            psi(ref.getOrElse(key, Map.empty), cur)
-          Iterator.single(DriftEstimate(key, nRef, nCur, nBins,
-            dec6(v).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-              .toDouble))
-      }
+    KeyedFold(events)(_.event_type)(
+      step = (_: String, prev: Option[DriftState], e: DriftEvent) => {
+        val cur = prev.fold(Map.empty[Long, Long])(_.cur)
+        (DriftState(cur.updated(e.bin, cur.getOrElse(e.bin, 0L) + 1)),
+          None)
+      },
+      emit = (key: String, _: Option[DriftState], st: DriftState) => {
+        val (nRef, nCur, nBins, v) =
+          psi(ref.getOrElse(key, Map.empty), st.cur)
+        Iterator.single(DriftEstimate(key, nRef, nCur, nBins,
+          StreamArith.round6(v)))
+      })
   }
 }

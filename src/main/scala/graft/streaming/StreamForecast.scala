@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One observation for the forecast monitor: the event's hour bucket
   * (epoch µs, already truncated) and its metric value.
@@ -51,10 +50,6 @@ object StreamForecast {
 
   private val HourUs = 3600L * 1000000L
 
-  private def dec6(v: Double): BigDecimal = StreamArith.dec6(v)
-
-  private def round4(v: Double): Double = StreamArith.round4(v)
-
   /** Score the seasonal-naive baseline over the dense spine implied
     * by `sums` — exactly the batch query's arithmetic. Returns None
     * while the spine is shorter than one season (< 24h of history):
@@ -88,32 +83,25 @@ object StreamForecast {
     }
     if (n == 0) None
     else Some(ForecastEstimate(key, n,
-      round4(sae.toDouble / n),
-      round4(math.sqrt(sse.toDouble / n)),
+      StreamArith.round4(sae.toDouble / n),
+      StreamArith.round4(math.sqrt(sse.toDouble / n)),
       if (sa.signum == 0) None
-      else Some(round4(sae.toDouble / sa.toDouble))))
+      else Some(StreamArith.round4(sae.toDouble / sa.toDouble))))
   }
 
   def monitor(events: Dataset[ForecastEvent])
       : Dataset[ForecastEstimate] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[ForecastEvent],
-         state: GroupState[ForecastState]) =>
-          var sums = state.getOption
-            .map(_.sums.map { case (h, s) => h -> BigDecimal(s) })
-            .getOrElse(Map.empty[Long, BigDecimal])
-          it.foreach { e =>
-            val v = dec6(e.value)
-            sums = sums.updated(e.hour_us,
-              sums.getOrElse(e.hour_us,
-                BigDecimal(0).setScale(6)) + v)
-          }
-          state.update(ForecastState(
-            sums.map { case (h, d) => h -> d.toString }))
-          score(key, sums).iterator
-      }
+    KeyedFold(events)(_.event_type)(
+      step = (_: String, prev: Option[ForecastState], e: ForecastEvent) => {
+        // the unscaled string round-trips the decimal exactly
+        val sums = prev.fold(Map.empty[Long, String])(_.sums)
+        val sum = sums.get(e.hour_us).fold(BigDecimal(0).setScale(6))(
+          BigDecimal(_)) + StreamArith.dec6(e.value)
+        (ForecastState(sums.updated(e.hour_us, sum.toString)), None)
+      },
+      emit = (key: String, _: Option[ForecastState], st: ForecastState) =>
+        score(key, st.sums.map { case (h, s) => h -> BigDecimal(s) })
+          .iterator)
   }
 }

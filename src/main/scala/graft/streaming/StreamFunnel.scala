@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One funnel-relevant event arriving on the stream. */
 case class FunnelEvent(user_id: Long, event_id: Long,
@@ -36,33 +35,21 @@ case class VariantStageAdvance(variant: String, user_id: Long,
   */
 object StreamFunnel {
 
-  private def micros(ts: java.sql.Timestamp): Long =
-    StreamArith.micros(ts)
-
   def stageAdvances(events: Dataset[FunnelEvent]): Dataset[StageAdvance] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[FunnelEvent],
-         state: GroupState[FunnelState]) =>
-          var st = state.getOption.map(_.st).getOrElse(0)
-          var t = state.getOption.map(_.t).getOrElse(-1L)
-          val out = List.newBuilder[StageAdvance]
-          it.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            val u = micros(e.ts)
-            val advance =
-              (st == 0 && e.event_type == "signup") ||
-              (st == 1 && e.event_type == "click" && u > t) ||
-              (st == 2 && e.event_type == "purchase" && u > t)
-            if (advance) {
-              st += 1; t = u
-              out += StageAdvance(uid, st, u)
-            }
-          }
-          state.update(FunnelState(st, t))
-          out.result().iterator
-      }
+    KeyedFold(events)(_.user_id,
+        Some(KeyedFold.byTime[FunnelEvent](_.ts, _.event_id))) {
+      (uid: Long, prev: Option[FunnelState], e: FunnelEvent) =>
+        val cur = prev.getOrElse(FunnelState(0, -1L))
+        val u = StreamArith.micros(e.ts)
+        val advance =
+          (cur.st == 0 && e.event_type == "signup") ||
+          (cur.st == 1 && e.event_type == "click" && u > cur.t) ||
+          (cur.st == 2 && e.event_type == "purchase" && u > cur.t)
+        if (advance)
+          (FunnelState(cur.st + 1, u), Some(StageAdvance(uid, cur.st + 1, u)))
+        else (cur, None)
+    }
   }
 
   /** The user's experiment arm — byte-identical to the batch

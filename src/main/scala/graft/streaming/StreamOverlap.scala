@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One (user, event-type) observation arriving on the stream. */
 case class TypeUserEvent(user_id: Long, event_type: String)
@@ -32,19 +31,14 @@ object StreamOverlap {
   def userTypeSets(events: Dataset[TypeUserEvent])
       : Dataset[UserTypeSet] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[TypeUserEvent],
-         state: GroupState[Seq[String]]) =>
-          val before = state.getOption.getOrElse(Seq.empty).toSet
-          val after = before ++ it.map(_.event_type)
-          if (after.size == before.size) Iterator.empty
-          else {
-            val sorted = after.toSeq.sorted
-            state.update(sorted)
-            Iterator.single(UserTypeSet(uid, sorted))
-          }
-      }
+    KeyedFold(events)(_.user_id)(
+      step = (_: Long, prev: Option[Seq[String]], e: TypeUserEvent) => {
+        val types = prev.getOrElse(Seq.empty)
+        (if (types.contains(e.event_type)) types
+         else (types :+ e.event_type).sorted, None)
+      },
+      emit = (uid: Long, before: Option[Seq[String]], after: Seq[String]) =>
+        if (before.exists(_.size == after.size)) Iterator.empty
+        else Iterator.single(UserTypeSet(uid, after)))
   }
 }

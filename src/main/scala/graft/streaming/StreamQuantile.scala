@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One keyed value observation arriving on the stream. */
 case class QPoint(event_id: Long, event_type: String, value: Double)
@@ -26,38 +25,30 @@ case class QSketchState(entries: List[(Long, Long, Double)])
   */
 object StreamQuantile {
 
-  /** Same 60-bit hash as the batch SQL:
-    * `conv(substring(md5(id), 1, 15), 16, 10)` — shared numeric
-    * form (per-thread digest, no hex-string allocation per event).
-    */
-  private def hash60(s: String): Long = StreamArith.hash60(s)
-
-  private def round4(v: Double): Double = StreamArith.round4(v)
-
   def estimates(points: Dataset[QPoint], k: Int = 256)
       : Dataset[QuantileEstimate] = {
     import points.sparkSession.implicits._
-    points.groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[QPoint],
-         state: GroupState[QSketchState]) =>
-          val prev = state.getOption.map(_.entries).getOrElse(Nil)
-          // .distinct BEFORE take(k): an at-least-once source can
-          // re-deliver an event; its (hash, id, value) triple is
-          // identical, and without dedup it would occupy two sample
-          // slots and evict a legitimate distinct event — membership
-          // must stay a pure function of the id set
-          val merged = (prev ++ it.map(p =>
-              (hash60(p.event_id.toString), p.event_id, p.value)))
-            .distinct.sortBy(e => (e._1, e._2)).take(k)
-          state.update(QSketchState(merged))
-          val sv = merged.map(_._3).sorted
-          val n = sv.length
-          def est(q: Double) =
-            round4(sv(math.max(1, math.ceil(q * n).toInt) - 1))
-          Iterator.single(
-            QuantileEstimate(key, n.toLong, est(0.5), est(0.9)))
-      }
+    KeyedFold(points)(_.event_type)(
+      step = (_: String, prev: Option[QSketchState], p: QPoint) => {
+        // the batch SQL's 60-bit md5 hash of the id
+        val e = (StreamArith.hash60(p.event_id.toString), p.event_id,
+          p.value)
+        val entries = prev.fold(List.empty[(Long, Long, Double)])(_.entries)
+        // skip a re-delivered triple BEFORE take(k): an at-least-once
+        // source can replay an event, and a duplicate would occupy
+        // two sample slots and evict a legitimate distinct event —
+        // membership must stay a pure function of the id set
+        (if (entries.contains(e)) QSketchState(entries)
+         else QSketchState((entries :+ e).sortBy(x => (x._1, x._2)).take(k)),
+          None)
+      },
+      emit = (key: String, _: Option[QSketchState], st: QSketchState) => {
+        val sv = st.entries.map(_._3).sorted
+        val n = sv.length
+        def est(q: Double) = StreamArith.round4(
+          sv(math.max(1, math.ceil(q * n).toInt) - 1))
+        Iterator.single(
+          QuantileEstimate(key, n.toLong, est(0.5), est(0.9)))
+      })
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One ingest observation: the event's calendar day (ISO string). */
 case class RowcountEvent(event_type: String, day: String)
@@ -30,8 +29,6 @@ case class RowcountState(counts: Map[String, Long])
   */
 object StreamRowcount {
 
-  private def round4(v: Double): Double = StreamArith.round4(v)
-
   /** Score the day series exactly like the batch query: trailing
     * 7-ROW window, scored only with ≥3 prior days.
     */
@@ -56,7 +53,7 @@ object StreamRowcount {
         scored += 1
         if (math.abs(z) > 3.0) anomalies += 1
         lastDay = d
-        lastZ = round4(z)
+        lastZ = StreamArith.round4(z)
       }
     }
     RowcountEstimate(key, days.size.toLong, scored, anomalies,
@@ -66,19 +63,13 @@ object StreamRowcount {
   def monitor(events: Dataset[RowcountEvent])
       : Dataset[RowcountEstimate] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[RowcountEvent],
-         state: GroupState[RowcountState]) =>
-          var counts = state.getOption.map(_.counts)
-            .getOrElse(Map.empty[String, Long])
-          it.foreach { e =>
-            counts = counts.updated(e.day,
-              counts.getOrElse(e.day, 0L) + 1)
-          }
-          state.update(RowcountState(counts))
-          Iterator.single(score(key, counts))
-      }
+    KeyedFold(events)(_.event_type)(
+      step = (_: String, prev: Option[RowcountState], e: RowcountEvent) => {
+        val counts = prev.fold(Map.empty[String, Long])(_.counts)
+        (RowcountState(counts.updated(e.day,
+          counts.getOrElse(e.day, 0L) + 1)), None)
+      },
+      emit = (key: String, _: Option[RowcountState], st: RowcountState) =>
+        Iterator.single(score(key, st.counts)))
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One session-relevant event arriving on the stream. */
 case class SessionEvent(user_id: Long, event_id: Long,
@@ -33,32 +32,22 @@ object StreamSessionize {
 
   val gapUs: Long = 21600L * 1000000L // 6 hours, matches q_sessionize
 
-  private def micros(ts: java.sql.Timestamp): Long =
-    StreamArith.micros(ts)
-
   def closedSessions(events: Dataset[SessionEvent]): Dataset[ClosedSession] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[SessionEvent],
-         state: GroupState[SessionState]) =>
-          var cur = state.getOption.orNull
-          val out = List.newBuilder[ClosedSession]
-          it.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            val u = micros(e.ts)
-            if (cur == null)
-              cur = SessionState(1L, u, u, 1L, Set(e.event_type))
-            else if (u - cur.last_us > gapUs) {
-              out += ClosedSession(uid, cur.seq, cur.n,
-                (cur.last_us - cur.start_us) / 1000L, cur.types.size.toLong)
-              cur = SessionState(cur.seq + 1, u, u, 1L, Set(e.event_type))
-            } else
-              cur = cur.copy(last_us = u, n = cur.n + 1,
-                types = cur.types + e.event_type)
-          }
-          state.update(cur)
-          out.result().iterator
-      }
+    KeyedFold(events)(_.user_id,
+        Some(KeyedFold.byTime[SessionEvent](_.ts, _.event_id))) {
+      (uid: Long, prev: Option[SessionState], e: SessionEvent) =>
+        val u = StreamArith.micros(e.ts)
+        prev match {
+          case None => (SessionState(1L, u, u, 1L, Set(e.event_type)), None)
+          case Some(cur) if u - cur.last_us > gapUs =>
+            (SessionState(cur.seq + 1, u, u, 1L, Set(e.event_type)),
+              Some(ClosedSession(uid, cur.seq, cur.n,
+                (cur.last_us - cur.start_us) / 1000L, cur.types.size.toLong)))
+          case Some(cur) =>
+            (cur.copy(last_us = u, n = cur.n + 1,
+              types = cur.types + e.event_type), None)
+        }
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One keyed item observation arriving on the stream. */
 case class TKEvent(event_id: Long, event_type: String, item: String)
@@ -51,23 +50,18 @@ object StreamTopK {
   def topK(events: Dataset[TKEvent], capacity: Int = 64, k: Int = 10)
       : Dataset[TopKEstimate] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[TKEvent],
-         state: GroupState[TopKState]) =>
-          // intra-batch determinism: micro-batch contents replay in
-          // (event_id) order no matter how tasks interleaved upstream
-          val sorted = it.toSeq.sortBy(_.event_id)
-          var counters = state.getOption.map(_.counters)
-            .getOrElse(Map.empty[String, (Long, Long)])
-          sorted.foreach(e => counters = feed(counters, e.item, capacity))
-          state.update(TopKState(counters))
-          counters.toSeq
-            .sortBy { case (i, (c, _)) => (-c, i) }.take(k)
-            .zipWithIndex.iterator
-            .map { case ((item, (c, e)), r) =>
-              TopKEstimate(key, item, c, e, r + 1) }
-      }
+    // intra-batch determinism: micro-batch contents replay in
+    // (event_id) order no matter how tasks interleaved upstream
+    KeyedFold(events)(_.event_type,
+        Some(Ordering.by[TKEvent, Long](_.event_id)))(
+      step = (_: String, prev: Option[TopKState], e: TKEvent) =>
+        (TopKState(feed(prev.fold(Map.empty[String, (Long, Long)])(
+          _.counters), e.item, capacity)), None),
+      emit = (key: String, _: Option[TopKState], st: TopKState) =>
+        st.counters.toSeq
+          .sortBy { case (i, (c, _)) => (-c, i) }.take(k)
+          .zipWithIndex.iterator
+          .map { case ((item, (c, e)), r) =>
+            TopKEstimate(key, item, c, e, r + 1) })
   }
 }

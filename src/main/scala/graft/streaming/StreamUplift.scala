@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One experiment observation: the segment, the md5-assigned arm,
   * and the binary response (value above the static median).
@@ -35,38 +34,28 @@ case class UpliftState(nC: Long, nT: Long, rC: Long, rT: Long)
   */
 object StreamUplift {
 
-  private def round4(v: Double): Double = StreamArith.round4(v)
-  private def round6(v: Double): Double = StreamArith.round6(v)
-
   private[graft] def readout(key: String, st: UpliftState)
       : UpliftEstimate = {
     val pc = st.rC / st.nC.toDouble
     val pt = st.rT / st.nT.toDouble
     UpliftEstimate(key, st.nC, st.nT,
-      round4(pc), round4(pt), round4(pt - pc),
-      round6(math.sqrt(pc * (1.0 - pc) / st.nC +
+      StreamArith.round4(pc), StreamArith.round4(pt),
+      StreamArith.round4(pt - pc),
+      StreamArith.round6(math.sqrt(pc * (1.0 - pc) / st.nC +
         pt * (1.0 - pt) / st.nT)))
   }
 
   def monitor(events: Dataset[UpliftEvent])
       : Dataset[UpliftEstimate] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[UpliftEvent],
-         state: GroupState[UpliftState]) =>
-          var st = state.getOption.getOrElse(UpliftState(0, 0, 0, 0))
-          it.foreach { e =>
-            st =
-              if (e.treated)
-                st.copy(nT = st.nT + 1, rT = st.rT + e.resp)
-              else st.copy(nC = st.nC + 1, rC = st.rC + e.resp)
-          }
-          state.update(st)
-          if (st.nC > 0 && st.nT > 0)
-            Iterator.single(readout(key, st))
-          else Iterator.empty
-      }
+    KeyedFold(events)(_.event_type)(
+      step = (_: String, prev: Option[UpliftState], e: UpliftEvent) => {
+        val st = prev.getOrElse(UpliftState(0, 0, 0, 0))
+        (if (e.treated) st.copy(nT = st.nT + 1, rT = st.rT + e.resp)
+         else st.copy(nC = st.nC + 1, rC = st.rC + e.resp), None)
+      },
+      emit = (key: String, _: Option[UpliftState], st: UpliftState) =>
+        if (st.nC > 0 && st.nT > 0) Iterator.single(readout(key, st))
+        else Iterator.empty)
   }
 }

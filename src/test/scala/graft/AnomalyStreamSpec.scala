@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.{MetricPoint, StreamAnomaly}
 
 /** Stream/batch parity for rolling z-score anomaly detection: the
@@ -12,20 +10,8 @@ import graft.streaming.{MetricPoint, StreamAnomaly}
   * uneven micro-batch splits — the decimal-quantized moments are
   * what make that equality exact rather than ulp-close.
   */
-class AnomalyStreamSpec extends SparkSpec {
+class AnomalyStreamSpec extends SparkSpec with StreamTwins {
   import spark.implicits._
-  private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext =
-    spark.sqlContext
-
-  private def points: Seq[MetricPoint] =
-    Tables(spark, sf("0.001"), "events")
-      .select(col("event_id"), col("ts"), col("event_type"),
-        col("value"))
-      .as[MetricPoint].collect().toSeq
-      .sortBy { p => // in-order feed contract, at full µs precision
-        val i = p.ts.toInstant
-        (i.getEpochSecond * 1000000L + i.getNano / 1000L, p.event_id)
-      }
 
   test("streaming z-scores == batch rollingZ, bit-exact, across splits") {
     val batch = graft.operators.Anomaly.rollingZ(
@@ -36,20 +22,7 @@ class AnomalyStreamSpec extends SparkSpec {
         (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
       .toMap
 
-    val all = points
-    val input = MemoryStream[MetricPoint]
-    val q = StreamAnomaly.zScores(input.toDS())
-      .writeStream.format("memory").queryName("anom")
-      .outputMode(OutputMode.Append).start()
-    val streamed = try {
-      val (a, rest) = all.splitAt(all.size / 3)
-      val (b, c) = rest.splitAt(rest.size / 2)
-      Seq(a, b, c).foreach { chunk =>
-        input.addData(chunk); q.processAllAvailable()
-      }
-      spark.table("anom").as[(Long, String, Option[Double], Boolean)]
-        .collect().map(t => t._1 -> t._3).toMap
-    } finally q.stop()
+    val streamed = replay(anomaly).rows.map(s => s.event_id -> s.z).toMap
 
     assert(streamed.size == batch.size,
       s"row counts differ: stream ${streamed.size} vs batch ${batch.size}")
@@ -75,15 +48,8 @@ class AnomalyStreamSpec extends SparkSpec {
       MetricPoint(2L, ts(1000100L), "k", 20.0), // first by µs, 2nd by id
       MetricPoint(1L, ts(1000900L), "k", 40.0))
 
-    val input = MemoryStream[MetricPoint]
-    val q = StreamAnomaly.zScores(input.toDS(), window = 2)
-      .writeStream.format("memory").queryName("anom_us")
-      .outputMode(OutputMode.Append).start()
-    val got = try {
-      input.addData(pts); q.processAllAvailable()
-      spark.table("anom_us").as[(Long, String, Option[Double], Boolean)]
-        .collect().map(t => t._1 -> t._3).toMap
-    } finally q.stop()
+    val got = replay(pts)(StreamAnomaly.zScores(_, window = 2))
+      .rows.map(s => s.event_id -> s.z).toMap
 
     // µs order: pA(20) vs [0,10] → z=3; pB(40) vs [10,20] → z=5.
     // ms+id order would give pB z=7 and pA z=-1/3 instead.
@@ -96,7 +62,6 @@ class AnomalyStreamSpec extends SparkSpec {
     // cancels to var = 0 (both terms ~1e14, true difference ~1e-6 —
     // below double's 15-16 significant digits) and silently leaves
     // every row unscored; the exact-decimal numerator must score
-    import org.apache.spark.sql.functions._
     val base = 1.0e7
     val rows = (1 to 30).map { i =>
       (i.toLong,

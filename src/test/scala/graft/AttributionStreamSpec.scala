@@ -1,44 +1,15 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
-import graft.streaming.{Attribution, StreamAttribution, TouchEvent}
-
 /** Stream/batch parity for last-touch attribution: replaying the
   * event table through the O(1)-state tracker must credit every
   * channel with exactly the batch window's conversion count and
   * DECIMAL revenue, across uneven micro-batch splits.
   */
-class AttributionStreamSpec extends SparkSpec {
-  import spark.implicits._
-  private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext =
-    spark.sqlContext
-
-  private def micros(ts: java.sql.Timestamp): Long = {
-    val i = ts.toInstant
-    i.getEpochSecond * 1000000L + i.getNano / 1000L
-  }
+class AttributionStreamSpec extends SparkSpec with StreamTwins {
 
   test("streamed attributions equal the batch window per channel") {
-    val all = Tables(spark, sf("0.001"), "events")
-      .select(col("user_id"), col("event_id"), col("ts"),
-        col("event_type"), col("value"))
-      .as[TouchEvent].collect().toSeq
-      .sortBy(e => (micros(e.ts), e.event_id)) // in-order feed contract
-
-    val input = MemoryStream[TouchEvent]
-    val q = StreamAttribution.attributions(input.toDS())
-      .writeStream.format("memory").queryName("attrib")
-      .outputMode(OutputMode.Append).start()
-    val streamed = try {
-      val (a, rest) = all.splitAt(all.size / 4)
-      val (b, c) = rest.splitAt(rest.size / 3)
-      Seq(a, b, c).foreach { chunk =>
-        input.addData(chunk); q.processAllAvailable()
-      }
-      spark.table("attrib").as[Attribution].collect().toSeq
-    } finally q.stop()
+    // in-order feed contract: the twin table sorts by (µs, event_id)
+    val streamed = replay(attribution).rows
 
     def dec(d: Double) = BigDecimal(d).setScale(6,
       BigDecimal.RoundingMode.HALF_UP)

@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
-import graft.streaming.{ChangeEvent, StreamCdc}
+import graft.streaming.{ChangeEvent, StreamArith, StreamCdc}
 
 /** Stream/batch parity for CDC apply-changes: replaying the change
   * log through the stateful collapser — in a SHUFFLED order, since
@@ -11,10 +8,13 @@ import graft.streaming.{ChangeEvent, StreamCdc}
   * key on the batch q_cdc_apply snapshot, with deleted keys' final
   * emission carrying op="D".
   */
-class CdcStreamSpec extends SparkSpec {
+class CdcStreamSpec extends SparkSpec with StreamTwins {
   import spark.implicits._
-  private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext =
-    spark.sqlContext
+
+  /** A key's winning change: last by full-µs ts, then event_id — the
+    * batch `max_by` order (getTime would truncate to ms). */
+  private def winner(es: Seq[ChangeEvent]): ChangeEvent =
+    es.maxBy(e => (StreamArith.micros(e.ts), e.event_id))
 
   test("streaming snapshot == batch q_cdc_apply, shuffled arrival order") {
     val batch = SparkEntry.queries("q_cdc_apply")(spark, sf())
@@ -24,58 +24,58 @@ class CdcStreamSpec extends SparkSpec {
           r.getAs[Long]("last_ts_ms"), r.getAs[Long]("n_changes")))
       .toMap
 
-    val all = Tables(spark, sf(), "events")
-      .select(col("user_id"), col("event_id"), col("ts"),
-        when(col("event_type") === "signup", "I")
-          .when(col("event_type") === "error", "D")
-          .otherwise("U").as("op"),
-        col("value"))
-      .as[ChangeEvent].collect().toSeq
-      // deterministic NON-chronological order: the collapser must not care
-      .sortBy(e => (e.event_id * 2654435761L) % 1000003)
-
-    val input = MemoryStream[ChangeEvent]
-    val q = StreamCdc.applyChanges(input.toDS())
-      .writeStream.format("memory").queryName("cdc")
-      .outputMode(OutputMode.Append).start()
-    val finalRows = try {
-      val (a, rest) = all.splitAt(all.size / 3)
-      val (b, c) = rest.splitAt(rest.size / 2)
-      Seq(a, b, c).foreach { chunk =>
-        input.addData(chunk); q.processAllAvailable()
-      }
-      spark.table("cdc").as[(Long, String, Double, Long, Long)]
-        .collect().zipWithIndex
-        .groupBy(_._1._1)
-        .map { case (k, rows) => k -> rows.maxBy(_._2)._1 }
-    } finally q.stop()
+    val all = cdc.feed
+    val finalRows = replay(cdc).latest(_.user_id)
 
     // live keys match the batch snapshot (value rounded like batch)
     batch.foreach { case (uid, (op, v, ms, n)) =>
-      val (_, sOp, sV, sMs, sN) = finalRows(uid)
-      val sVr = BigDecimal.decimal(sV)
+      val s = finalRows(uid)
+      val sVr = BigDecimal.decimal(s.last_value)
         .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      assert(sOp == op && sVr == v && sMs == ms && sN == n,
-        s"key $uid: stream ($sOp,$sVr,$sMs,$sN) != batch ($op,$v,$ms,$n)")
+      assert(s.last_op == op && sVr == v && s.last_ts_ms == ms &&
+        s.n_changes == n,
+        s"key $uid: stream (${s.last_op},$sVr,${s.last_ts_ms}," +
+          s"${s.n_changes}) != batch ($op,$v,$ms,$n)")
     }
     // every key absent from the batch snapshot ended deleted — AND
     // every deleted key must actually appear in the stream's final
     // emissions (iterating only finalRows let a stream that swallows
     // deleted keys pass, since q_cdc_apply filters them out of batch)
     val deleted = all.groupBy(_.user_id).collect {
-      case (uid, es) if es.maxBy(e => (e.ts.getTime, e.event_id)).op
-        == "D" => uid
+      case (uid, es) if winner(es).op == "D" => uid
     }.toSet
     assert(deleted.nonEmpty,
       "fixture has no deleted keys — the delete leg is vacuous")
     deleted.foreach { uid =>
-      assert(finalRows.contains(uid) && finalRows(uid)._2 == "D",
+      assert(finalRows.contains(uid) && finalRows(uid).last_op == "D",
         s"deleted key $uid: final stream emission is " +
           s"${finalRows.get(uid)}, expected op=D")
     }
     finalRows.foreach { case (uid, row) =>
       if (!batch.contains(uid))
-        assert(row._2 == "D", s"key $uid missing from batch but not deleted")
+        assert(row.last_op == "D", s"key $uid missing from batch but not deleted")
     }
+  }
+
+  test("same-millisecond changes: the later one by µs wins, not the larger id") {
+    // both changes fall in millisecond 1000; the delete is later by
+    // µs but carries the SMALLER event_id, so an ms-truncated
+    // (getTime, event_id) order would wrongly crown the update. The
+    // delete arrives first, so the update must not displace it
+    // across the batch boundary either.
+    def ts(us: Long) = {
+      val t = new java.sql.Timestamp(us / 1000L)
+      t.setNanos((us % 1000000L).toInt * 1000); t
+    }
+    val del = ChangeEvent(7L, 1L, ts(1000900L), "D", 0.0)
+    val upd = ChangeEvent(7L, 2L, ts(1000100L), "U", 3.0)
+    assert(del.ts.getTime == upd.ts.getTime, "fixture must share a ms")
+    assert(winner(Seq(del, upd)) == del)
+
+    val last = replay(Seq(del, upd), 2)(StreamCdc.applyChanges)
+      .latest(_.user_id)(7L)
+    assert(last.last_op == "D" && last.last_value == 0.0,
+      s"µs winner is the delete, stream emitted $last")
+    assert(last.last_ts_ms == 1000L && last.n_changes == 2L, s"$last")
   }
 }

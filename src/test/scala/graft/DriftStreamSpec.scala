@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
-import graft.streaming.{DriftEvent, StreamDrift}
-
 /** Stream/batch parity for the PSI drift monitor: after the stream
   * has absorbed the whole current period — in shuffled order, across
   * uneven micro-batches — its final per-key emission must equal the
   * batch `q_drift_psi` row exactly (same smoothing, same DECIMAL
   * quantization, same union bin set).
   */
-class DriftStreamSpec extends SparkSpec {
-  import spark.implicits._
-  private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext =
-    spark.sqlContext
+class DriftStreamSpec extends SparkSpec with StreamTwins {
 
   test("final streaming PSI == batch q_drift_psi") {
     val batch = SparkEntry.queries("q_drift_psi")(spark, sf())
@@ -23,49 +15,18 @@ class DriftStreamSpec extends SparkSpec {
         (r.getAs[Long]("n_ref"), r.getAs[Long]("n_cur"),
           r.getAs[Long]("n_bins"), r.getAs[Double]("psi"))).toMap
 
-    // replicate the batch split: wk cutoff derived the same way
-    val e = Tables(spark, sf(), "events")
-      .select(col("event_type"),
-        expr("unix_micros(ts) div 604800000000").as("wk"),
-        floor(col("value") / 10).cast("long").as("bin"))
-    val Array(minWk, maxWk) = e
-      .agg(min(col("wk")), max(col("wk"))).collect()
-      .head.toSeq.map(_.asInstanceOf[Long]).toArray
-    val cut = Math.floorDiv(minWk + maxWk + 1, 2L)
-    val ref = e.filter(col("wk") < cut)
-      .groupBy(col("event_type"), col("bin")).count().collect()
-      .groupBy(_.getString(0))
-      .map { case (k, rows) =>
-        k -> rows.map(r => r.getLong(1) -> r.getLong(2)).toMap
-      }
-    val current = e.filter(col("wk") >= cut)
-      .select(col("event_type"), col("bin")).as[DriftEvent]
-      .collect().toSeq.reverse // deliberately not arrival order
-
-    val input = MemoryStream[DriftEvent]
-    val q = StreamDrift.monitor(input.toDS(), ref)
-      .writeStream.format("memory").queryName("driftsink")
-      .outputMode(OutputMode.Append).start()
-    val streamed = try {
-      val (a, rest) = current.splitAt(current.size / 4)
-      val (b, c) = rest.splitAt(rest.size / 3)
-      Seq(a, b, c).foreach { chunk =>
-        input.addData(chunk); q.processAllAvailable()
-      }
-      spark.table("driftsink")
-        .as[(String, Long, Long, Long, Double)].collect()
-        .zipWithIndex.groupBy(_._1._1)
-        .map { case (k, rows) => k -> rows.maxBy(_._2)._1 }
-    } finally q.stop()
+    // the twin table replicates the batch split (same wk cutoff) and
+    // feeds the current period in reverse, not arrival order
+    val streamed = replay(drift).latest(_.event_type)
 
     assert(batch.nonEmpty, "q_drift_psi returned no rows — vacuous")
     assert(streamed.keySet == batch.keySet)
     batch.foreach { case (et, (nRef, nCur, nBins, psi)) =>
-      val (_, sRef, sCur, sBins, sPsi) = streamed(et)
-      assert(sRef == nRef && sCur == nCur && sBins == nBins,
-        s"$et: histogram shape ($sRef,$sCur,$sBins) != " +
+      val s = streamed(et)
+      assert(s.n_ref == nRef && s.n_cur == nCur && s.n_bins == nBins,
+        s"$et: histogram shape (${s.n_ref},${s.n_cur},${s.n_bins}) != " +
           s"batch ($nRef,$nCur,$nBins)")
-      assert(sPsi == psi, s"$et: stream PSI $sPsi != batch $psi")
+      assert(s.psi == psi, s"$et: stream PSI ${s.psi} != batch $psi")
     }
   }
 }

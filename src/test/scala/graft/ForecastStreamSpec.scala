@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
-import graft.streaming.{ForecastEvent, StreamForecast}
+import graft.streaming.StreamForecast
 
 /** Stream/batch parity for the seasonal-naive forecast monitor:
   * after the stream has absorbed every event — shuffled, across
@@ -11,10 +8,7 @@ import graft.streaming.{ForecastEvent, StreamForecast}
   * batch `q_forecast_backtest` row exactly (same zero-filled spine,
   * same DECIMAL quantization, same rounding).
   */
-class ForecastStreamSpec extends SparkSpec {
-  import spark.implicits._
-  private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext =
-    spark.sqlContext
+class ForecastStreamSpec extends SparkSpec with StreamTwins {
 
   test("final streaming backtest == batch q_forecast_backtest") {
     val batch = SparkEntry.queries("q_forecast_backtest")(spark, sf())
@@ -24,36 +18,16 @@ class ForecastStreamSpec extends SparkSpec {
           r.getAs[Double]("rmse"), r.getAs[Double]("wape"))).toMap
     assert(batch.nonEmpty)
 
-    val feed = Tables(spark, sf(), "events")
-      .select(col("event_type"),
-        expr("unix_micros(date_trunc('hour', ts))").as("hour_us"),
-        col("value"))
-      .as[ForecastEvent]
-      .collect().toSeq.reverse // deliberately not arrival order
-
-    val input = MemoryStream[ForecastEvent]
-    val q = StreamForecast.monitor(input.toDS())
-      .writeStream.format("memory").queryName("fcsink")
-      .outputMode(OutputMode.Append).start()
-    val streamed = try {
-      val (a, rest) = feed.splitAt(feed.size / 5)
-      val (b, c) = rest.splitAt(rest.size / 2)
-      Seq(a, b, c).foreach { chunk =>
-        input.addData(chunk); q.processAllAvailable()
-      }
-      spark.table("fcsink")
-        .as[(String, Long, Double, Double, Option[Double])].collect()
-        .zipWithIndex.groupBy(_._1._1)
-        .map { case (k, rows) => k -> rows.maxBy(_._2)._1 }
-    } finally q.stop()
+    // the twin table feeds the events in reverse, not arrival order
+    val streamed = replay(forecast).latest(_.event_type)
 
     assert(batch.keySet.subsetOf(streamed.keySet))
     batch.foreach { case (et, (n, mae, rmse, wape)) =>
-      val (_, sN, sMae, sRmse, sWape) = streamed(et)
-      assert(sN == n, s"$et: n_eval $sN != batch $n")
-      assert(sMae == mae, s"$et: MAE $sMae != batch $mae")
-      assert(sRmse == rmse, s"$et: RMSE $sRmse != batch $rmse")
-      assert(sWape.contains(wape), s"$et: WAPE $sWape != batch $wape")
+      val s = streamed(et)
+      assert(s.n_eval == n, s"$et: n_eval ${s.n_eval} != batch $n")
+      assert(s.mae == mae, s"$et: MAE ${s.mae} != batch $mae")
+      assert(s.rmse == rmse, s"$et: RMSE ${s.rmse} != batch $rmse")
+      assert(s.wape.contains(wape), s"$et: WAPE ${s.wape} != batch $wape")
     }
   }
 

@@ -1,52 +1,23 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
-import graft.streaming.{FunnelEvent, StreamFunnel}
+import graft.streaming.StreamFunnel
 
 /** Stream/batch parity for the ordered funnel: replaying the event
   * table through the stateful stage tracker must land every user on
   * the same final stage as the batch HOF fold, across uneven
   * micro-batch splits — and stage advances must arrive monotonically.
   */
-class FunnelStreamSpec extends SparkSpec {
+class FunnelStreamSpec extends SparkSpec with StreamTwins {
   import spark.implicits._
-  private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext =
-    spark.sqlContext
-
-  private def events: Seq[FunnelEvent] =
-    Tables(spark, sf("0.001"), "events")
-      .select(col("user_id"), col("event_id"), col("ts"),
-        col("event_type"))
-      .as[FunnelEvent].collect().toSeq
-      // in-order feed contract at FULL µs precision (getTime is
-      // ms-truncated — same fix as AnomalyStreamSpec)
-      .sortBy(e => (micros(e.ts), e.event_id))
-
-  private def micros(ts: java.sql.Timestamp): Long = {
-    val i = ts.toInstant
-    i.getEpochSecond * 1000000L + i.getNano / 1000L
-  }
 
   test("streaming stage advances land on the batch fold's final stages") {
     val batch = graft.queries.AnalyticsQueries
       .userStages(spark, sf("0.001"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
 
-    val all = events
-    val input = MemoryStream[FunnelEvent]
-    val q = StreamFunnel.stageAdvances(input.toDS())
-      .writeStream.format("memory").queryName("funnel")
-      .outputMode(OutputMode.Append).start()
-    val advances = try {
-      val (a, rest) = all.splitAt(all.size / 4)
-      val (b, c) = rest.splitAt(rest.size / 3)
-      Seq(a, b, c).foreach { chunk =>
-        input.addData(chunk); q.processAllAvailable()
-      }
-      spark.table("funnel").as[(Long, Int, Long)].collect().toSeq
-    } finally q.stop()
+    // the table's feed is in full-µs order (the in-order contract)
+    val advances = replay(funnel).rows
+      .map(a => (a.user_id, a.stage, a.at_us))
 
     // advances are strictly monotone per user: 1, 2, 3 with no skips
     advances.groupBy(_._1).foreach { case (uid, rows) =>
@@ -78,20 +49,9 @@ class FunnelStreamSpec extends SparkSpec {
           r.getAs[Double]("cr_purchase"))).toMap
     assert(batch.nonEmpty)
 
-    val all = events
-    val input = MemoryStream[FunnelEvent]
-    val q = StreamFunnel.variantStageAdvances(input.toDS())
-      .writeStream.format("memory").queryName("vfunnel")
-      .outputMode(OutputMode.Append).start()
-    val advances = try {
-      val (a, rest) = all.splitAt(all.size / 3)
-      val (b, c) = rest.splitAt(rest.size / 2)
-      Seq(a, b, c).foreach { chunk =>
-        input.addData(chunk); q.processAllAvailable()
-      }
-      spark.table("vfunnel")
-        .as[(String, Long, Int, Long)].collect().toSeq
-    } finally q.stop()
+    val advances = replay(funnel.feed, 3, 2)(
+        StreamFunnel.variantStageAdvances)
+      .rows.map(a => (a.variant, a.user_id, a.stage, a.at_us))
 
     // per-variant conversion table from each user's final stage
     val streamed = advances.groupBy(_._2)

@@ -1,45 +1,12 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
-import graft.streaming.{FenceEvent, GeoPing, GeoStream}
 
 /** Streaming geofence transitions pinned row-identical to the batch
   * `q_geo_geofence` query on the same derived track data — the
   * stream/batch parity gate for the geo family.
   */
-class GeoStreamSpec extends SparkSpec {
-  import spark.implicits._
-  private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext =
-    spark.sqlContext
-
-  private def pings: Seq[GeoPing] =
-    Tables(spark, sf("0.001"), "events")
-      .withColumn("lat",
-        lit(30.0) + (col("event_id") * 37 % 3000).cast("double") / 100.0)
-      .withColumn("lon", lit(-120.0) +
-        ((col("event_id") * 73 + col("user_id") * 131) % 6000)
-          .cast("double") / 100.0)
-      .select(col("user_id").as("entityId"), col("event_id").as("eventId"),
-        col("ts"), col("lat"), col("lon"))
-      .as[GeoPing].collect().toSeq
-      // full-µs order (getTime truncates to ms): the operator's
-      // cross-batch state sequences enter/exit at µs precision, so a
-      // ms-sorted feed would break the in-order contract on sub-ms
-      // ties (same fix as AnomalyStreamSpec)
-      .sortBy(p => (p.ts.getTime * 1000 + p.ts.getNanos / 1000 % 1000,
-        p.eventId))
-
-  private def stationSeq: Seq[(Double, Double)] =
-    Tables(spark, sf("0.001"), "nation")
-      .select(
-        (lit(30.0) + (col("n_nationkey") * 613 % 3000).cast("double") / 100.0)
-          .as("sla"),
-        (lit(-120.0) + (col("n_nationkey") * 937 % 6000).cast("double") / 100.0)
-          .as("slo"))
-      .orderBy(col("sla"), col("slo"))
-      .as[(Double, Double)].collect().toSeq
+class GeoStreamSpec extends SparkSpec with StreamTwins {
 
   test("streaming transitions == batch q_geo_geofence, across batch splits") {
     val batch = graft.queries.GeoQueries
@@ -50,20 +17,10 @@ class GeoStreamSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3)))
       .toSet
 
-    val all = pings
-    val input = MemoryStream[GeoPing]
-    val q = GeoStream.fenceTransitions(input.toDS(), stationSeq, 100000.0)
-      .writeStream.format("memory").queryName("fence")
-      .outputMode(OutputMode.Append).start()
-    val streamed = try {
-      // three uneven micro-batches: transitions must survive the splits
-      val (a, rest) = all.splitAt(all.size / 3)
-      val (b, c) = rest.splitAt(rest.size / 2)
-      Seq(a, b, c).foreach { chunk =>
-        input.addData(chunk); q.processAllAvailable()
-      }
-      spark.table("fence").as[FenceEvent].collect().toSeq
-    } finally q.stop()
+    // three uneven micro-batches: transitions must survive the splits;
+    // the feed is in full-µs order (getTime truncates to ms), the
+    // order the operator's cross-batch state sequences enter/exit in
+    val streamed = replay(geo).rows
 
     val got = streamed
       .map(e => (e.eventId, e.entityId, e.transition, e.minM)).toSet

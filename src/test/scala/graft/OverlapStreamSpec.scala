@@ -1,10 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
-import graft.streaming.{StreamOverlap, TypeUserEvent}
-
 /** Stream/batch parity for the audience-overlap Jaccard matrix:
   * replaying the event table through the per-user type-set tracker
   * must reproduce `q_user_overlap_jaccard` cell-for-cell from the
@@ -12,10 +7,7 @@ import graft.streaming.{StreamOverlap, TypeUserEvent}
   * |their distinct types| rows (growth-only emission, the bound
   * that keeps the append stream retraction-free).
   */
-class OverlapStreamSpec extends SparkSpec {
-  import spark.implicits._
-  private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext =
-    spark.sqlContext
+class OverlapStreamSpec extends SparkSpec with StreamTwins {
 
   test("latest per-user type sets reproduce q_user_overlap_jaccard") {
     val batch = SparkEntry.queries("q_user_overlap_jaccard")(
@@ -27,23 +19,7 @@ class OverlapStreamSpec extends SparkSpec {
       .toMap
     assert(batch.nonEmpty)
 
-    val feed = Tables(spark, sf("0.001"), "events")
-      .select(col("user_id"), col("event_type"))
-      .as[TypeUserEvent].collect().toSeq
-
-    val input = MemoryStream[TypeUserEvent]
-    val q = StreamOverlap.userTypeSets(input.toDS())
-      .writeStream.format("memory").queryName("overlap")
-      .outputMode(OutputMode.Append).start()
-    val emissions = try {
-      val (a, rest) = feed.splitAt(feed.size / 4)
-      val (b, c) = rest.splitAt(rest.size / 2)
-      Seq(a, b, c).foreach { chunk =>
-        input.addData(chunk); q.processAllAvailable()
-      }
-      spark.table("overlap")
-        .as[(Long, Seq[String])].collect().toSeq
-    } finally q.stop()
+    val emissions = replay(overlap).rows.map(s => (s.user_id, s.types))
 
     // growth-only emission bound: ≤ |distinct types| rows per user,
     // strictly growing set sizes

@@ -11,7 +11,7 @@ import graft.streaming.{QPoint, StreamQuantile}
   * query's — even when the stream sees the data in a different order
   * across uneven micro-batch splits.
   */
-class QuantileStreamSpec extends SparkSpec {
+class QuantileStreamSpec extends SparkSpec with StreamTwins {
   import spark.implicits._
   private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext =
     spark.sqlContext
@@ -24,37 +24,18 @@ class QuantileStreamSpec extends SparkSpec {
       .map(r => r.getString(0) ->
         (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
 
-    val all = Tables(spark, sf(), "events")
-      .select(col("event_id"), col("event_type"), col("value"))
-      .as[QPoint].collect().toSeq
-      .sortBy(_.event_id).reverse // deliberately NOT arrival order
-
-    val input = MemoryStream[QPoint]
-    val q = StreamQuantile.estimates(input.toDS())
-      .writeStream.format("memory").queryName("qsketch")
-      .outputMode(OutputMode.Append).start()
-    val streamed = try {
-      val (a, rest) = all.splitAt(all.size / 5)
-      val (b, c) = rest.splitAt(rest.size / 2)
-      Seq(a, b, c).zipWithIndex.foreach { case (chunk, i) =>
-        input.addData(chunk); q.processAllAvailable()
-        spark.sql(s"SELECT '$i'").collect() // batch boundary marker
-      }
-      // last emission per key is the final sketch
-      spark.table("qsketch")
-        .as[(String, Long, Double, Double)].collect()
-        .zipWithIndex.groupBy(_._1._1)
-        .map { case (k, rows) => k -> rows.maxBy(_._2)._1 }
-    } finally q.stop()
+    // the twin table feeds by descending event_id, NOT arrival
+    // order; the last emission per key is the final sketch
+    val streamed = replay(quantile).latest(_.event_type)
 
     assert(batch.nonEmpty,
       "q_agg_quantile_sketch returned no rows — vacuous")
     assert(streamed.keySet == batch.keySet)
     batch.foreach { case (et, (n, p50, p90)) =>
-      val (_, sn, s50, s90) = streamed(et)
-      assert(sn == n, s"$et: sample size $sn != $n")
-      assert(s50 == p50 && s90 == p90,
-        s"$et: stream ($s50,$s90) != batch ($p50,$p90)")
+      val s = streamed(et)
+      assert(s.n_sample == n, s"$et: sample size ${s.n_sample} != $n")
+      assert(s.est_p50 == p50 && s.est_p90 == p90,
+        s"$et: stream (${s.est_p50},${s.est_p90}) != batch ($p50,$p90)")
     }
   }
 

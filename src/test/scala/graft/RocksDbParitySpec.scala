@@ -1,32 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
-import graft.streaming._
-
-/** RocksDB-provider parity for the flatMapGroupsWithState twins
+/** RocksDB-provider parity for the keyed-fold streaming twins
   * (VERDICT r9 #4): at 100 TB keyed state must survive state > heap,
   * which means the RocksDB state store, and a twin whose
   * encoder/state class misbehaves under the provider's
   * serialize-every-access regime would silently diverge. The
-  * latest-cache twin has had a pinned v1==v2 leg since r9
-  * (StreamingSpec); this spec closes the remaining five named twins
-  * — funnel, sessionize, attribution, CDC, top-k — by running each
-  * pipeline twice over identical micro-batch splits, default
-  * provider vs RocksDBStateStoreProvider, and requiring identical
-  * output rows.
+  * latest-cache twin has its own v1==v2 leg (StreamingSpec); this
+  * spec runs every twin in the [[StreamTwins]] table twice over
+  * identical micro-batch splits, default provider vs
+  * RocksDBStateStoreProvider, and requires identical output rows.
   */
-class RocksDbParitySpec extends SparkSpec {
-  import spark.implicits._
-  private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext =
-    spark.sqlContext
-
-  private def micros(ts: java.sql.Timestamp): Long = {
-    val i = ts.toInstant
-    i.getEpochSecond * 1000000L + i.getNano / 1000L
-  }
+class RocksDbParitySpec extends SparkSpec with StreamTwins {
 
   private def withRocksDb[T](body: => T): T = {
     val key = "spark.sql.streaming.stateStore.providerClass"
@@ -39,201 +23,28 @@ class RocksDbParitySpec extends SparkSpec {
     }
   }
 
-  /** Returns the output rows AND whether any state operator reported
-    * a rocksdb* custom metric — the provider's own fingerprint, so
-    * the RocksDB leg can prove it didn't silently run the default
-    * provider (which would make every parity gate vacuously true). */
-  private def runStream[I: Encoder, O: Encoder](name: String,
-      feed: Seq[I], pipe: Dataset[I] => Dataset[O]): (Seq[O], Boolean) = {
-    val input = MemoryStream[I]
-    val q = pipe(input.toDS()).writeStream.format("memory")
-      .queryName(name).outputMode(OutputMode.Append).start()
-    try {
-      // same uneven splits as the twins' own parity specs
-      val (a, rest) = feed.splitAt(feed.size / 4)
-      val (b, c) = rest.splitAt(rest.size / 3)
-      Seq(a, b, c).foreach { ch =>
-        input.addData(ch); q.processAllAvailable()
-      }
-      val sawRocks = q.recentProgress.exists(_.stateOperators.exists(
-        _.customMetrics.keySet.toArray.exists(
-          _.toString.toLowerCase.contains("rocksdb"))))
-      (spark.table(name).as[O].collect().toSeq, sawRocks)
-    } finally q.stop()
-  }
-
-  /** Run the pipeline under both providers, identical feed and
-    * splits; outputs must match as multisets. */
-  private def parity[I: Encoder, O: Encoder](label: String,
-      feed: Seq[I], pipe: Dataset[I] => Dataset[O]): Unit = {
-    val (v1, rocks1) = runStream(label + "_def", feed, pipe)
-    val (v2, rocks2) = withRocksDb(runStream(label + "_rdb", feed, pipe))
-    assert(v1.nonEmpty,
+  /** Run the twin under both providers, identical feed and splits;
+    * outputs must match as multisets. Every leg uses the same uneven
+    * 1/4 + 1/3-of-the-rest split. */
+  private def parity[I, O](t: Twin[I, O]): Unit = {
+    val label = t.label
+    val v1 = replay(t, 4, 3)
+    val v2 = withRocksDb(replay(t, 4, 3))
+    assert(v1.rows.nonEmpty,
       s"$label: default-provider run emitted nothing — parity vacuous")
-    assert(!rocks1, s"$label: default leg reported rocksdb metrics — " +
+    assert(!v1.sawRocksDb, s"$label: default leg reported rocksdb metrics — " +
       "the provider conf leaked between legs")
-    assert(rocks2, s"$label: RocksDB leg reported NO rocksdb state " +
+    assert(v2.sawRocksDb, s"$label: RocksDB leg reported NO rocksdb state " +
       "metrics — the provider conf did not take effect, parity vacuous")
-    val (s1, s2) = (v1.map(_.toString).sorted, v2.map(_.toString).sorted)
+    val (s1, s2) =
+      (v1.rows.map(_.toString).sorted, v2.rows.map(_.toString).sorted)
     assert(s1 == s2, s"$label: RocksDB output diverges from the " +
       s"default provider — first diff: ${
         s1.zipAll(s2, "<missing>", "<missing>")
           .find { case (x, y) => x != y }.getOrElse(("", ""))}")
   }
 
-  test("funnel stage advances: RocksDB == default provider") {
-    val feed = Tables(spark, sf("0.001"), "events")
-      .select(col("user_id"), col("event_id"), col("ts"),
-        col("event_type"))
-      .as[FunnelEvent].collect().toSeq
-      .sortBy(e => (micros(e.ts), e.event_id))
-    parity("fnl", feed, StreamFunnel.stageAdvances)
-  }
-
-  test("sessionize closed sessions: RocksDB == default provider") {
-    val feed = Tables(spark, sf("0.001"), "events")
-      .select(col("user_id"), col("event_id"), col("ts"),
-        col("event_type"))
-      .as[SessionEvent].collect().toSeq
-      .sortBy(e => (micros(e.ts), e.event_id))
-    parity("ssn", feed, StreamSessionize.closedSessions)
-  }
-
-  test("attribution: RocksDB == default provider") {
-    val feed = Tables(spark, sf("0.001"), "events")
-      .select(col("user_id"), col("event_id"), col("ts"),
-        col("event_type"), col("value"))
-      .as[TouchEvent].collect().toSeq
-      .sortBy(e => (micros(e.ts), e.event_id))
-    parity("att", feed, StreamAttribution.attributions)
-  }
-
-  test("CDC snapshot rows: RocksDB == default provider") {
-    val feed = Tables(spark, sf(), "events")
-      .select(col("user_id"), col("event_id"), col("ts"),
-        when(col("event_type") === "signup", "I")
-          .when(col("event_type") === "error", "D")
-          .otherwise("U").as("op"),
-        col("value"))
-      .as[ChangeEvent].collect().toSeq
-      .sortBy(e => (e.event_id * 2654435761L) % 1000003)
-    parity("cdc", feed, StreamCdc.applyChanges)
-  }
-
-  test("space-saving top-k: RocksDB == default provider") {
-    val feed = Tables(spark, sf(), "events")
-      .select(col("event_id"), col("event_type"),
-        col("user_id").cast("string").as("item"))
-      .as[TKEvent].collect().toSeq.sortBy(_.event_id)
-    parity("tpk", feed,
-      (ds: Dataset[TKEvent]) => StreamTopK.topK(ds, capacity = 64, k = 10))
-  }
-
-  // ---- the remaining flatMapGroupsWithState twins, same generic
-  // helper — a parity leg everywhere beats a per-twin exclusion
-  // table (feeds mirror each twin's own spec)
-
-  test("geofence transitions: RocksDB == default provider") {
-    val feed = Tables(spark, sf("0.001"), "events")
-      .withColumn("lat",
-        lit(30.0) + (col("event_id") * 37 % 3000).cast("double") / 100.0)
-      .withColumn("lon", lit(-120.0) +
-        ((col("event_id") * 73 + col("user_id") * 131) % 6000)
-          .cast("double") / 100.0)
-      .select(col("user_id").as("entityId"), col("event_id").as("eventId"),
-        col("ts"), col("lat"), col("lon"))
-      .as[GeoPing].collect().toSeq
-      .sortBy(p => (p.ts.getTime * 1000 + p.ts.getNanos / 1000 % 1000,
-        p.eventId))
-    val stations = Tables(spark, sf("0.001"), "nation")
-      .select(
-        (lit(30.0) + (col("n_nationkey") * 613 % 3000).cast("double") / 100.0)
-          .as("sla"),
-        (lit(-120.0) + (col("n_nationkey") * 937 % 6000).cast("double") / 100.0)
-          .as("slo"))
-      .orderBy(col("sla"), col("slo"))
-      .as[(Double, Double)].collect().toSeq
-    parity("geo", feed, (ds: Dataset[GeoPing]) =>
-      GeoStream.fenceTransitions(ds, stations, 100000.0))
-  }
-
-  test("rolling z-score anomaly: RocksDB == default provider") {
-    val feed = Tables(spark, sf("0.001"), "events")
-      .select(col("event_id"), col("ts"), col("event_type"),
-        col("value"))
-      .as[MetricPoint].collect().toSeq
-      .sortBy(p => (micros(p.ts), p.event_id))
-    parity("anm", feed,
-      (ds: Dataset[MetricPoint]) => StreamAnomaly.zScores(ds))
-  }
-
-  test("drift monitor: RocksDB == default provider") {
-    val e = Tables(spark, sf(), "events")
-      .select(col("event_type"),
-        expr("unix_micros(ts) div 604800000000").as("wk"),
-        floor(col("value") / 10).cast("long").as("bin"))
-    val Array(minWk, maxWk) = e
-      .agg(min(col("wk")), max(col("wk"))).collect()
-      .head.toSeq.map(_.asInstanceOf[Long]).toArray
-    val cut = Math.floorDiv(minWk + maxWk + 1, 2L)
-    val ref = e.filter(col("wk") < cut)
-      .groupBy(col("event_type"), col("bin")).count().collect()
-      .groupBy(_.getString(0))
-      .map { case (k, rows) =>
-        k -> rows.map(r => r.getLong(1) -> r.getLong(2)).toMap
-      }
-    val feed = e.filter(col("wk") >= cut)
-      .select(col("event_type"), col("bin")).as[DriftEvent]
-      .collect().toSeq.reverse
-    parity("drf", feed,
-      (ds: Dataset[DriftEvent]) => StreamDrift.monitor(ds, ref))
-  }
-
-  test("forecast monitor: RocksDB == default provider") {
-    val feed = Tables(spark, sf(), "events")
-      .select(col("event_type"),
-        expr("unix_micros(date_trunc('hour', ts))").as("hour_us"),
-        col("value"))
-      .as[ForecastEvent].collect().toSeq.reverse
-    parity("fct", feed,
-      (ds: Dataset[ForecastEvent]) => StreamForecast.monitor(ds))
-  }
-
-  test("overlap user-type sets: RocksDB == default provider") {
-    val feed = Tables(spark, sf("0.001"), "events")
-      .select(col("user_id"), col("event_type"))
-      .as[TypeUserEvent].collect().toSeq
-    parity("ovl", feed,
-      (ds: Dataset[TypeUserEvent]) => StreamOverlap.userTypeSets(ds))
-  }
-
-  test("quantile sketch: RocksDB == default provider") {
-    val feed = Tables(spark, sf(), "events")
-      .select(col("event_id"), col("event_type"), col("value"))
-      .as[QPoint].collect().toSeq.sortBy(_.event_id).reverse
-    parity("qnt", feed,
-      (ds: Dataset[QPoint]) => StreamQuantile.estimates(ds))
-  }
-
-  test("rowcount monitor: RocksDB == default provider") {
-    val feed = Tables(spark, sf(), "events")
-      .select(col("event_type"),
-        to_date(col("ts")).cast("string").as("day"))
-      .as[RowcountEvent].collect().toSeq.reverse
-    parity("rct", feed,
-      (ds: Dataset[RowcountEvent]) => StreamRowcount.monitor(ds))
-  }
-
-  test("uplift monitor: RocksDB == default provider") {
-    val med = Tables(spark, sf(), "events")
-      .agg(expr("percentile(value, 0.5)")).collect().head.getDouble(0)
-    val feed = Tables(spark, sf(), "events")
-      .select(col("event_type"),
-        (expr("cast(conv(substring(md5(cast(user_id as string)),1,8)" +
-          ",16,10) as bigint)") % 2 =!= 0).as("treated"),
-        when(col("value") > med, 1L).otherwise(0L).as("resp"))
-      .as[UpliftEvent].collect().toSeq.reverse
-    parity("upl", feed,
-      (ds: Dataset[UpliftEvent]) => StreamUplift.monitor(ds))
+  twins.foreach { t =>
+    test(s"${t.label}: RocksDB == default provider")(parity(t))
   }
 }

@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
-import graft.streaming.{RowcountEvent, StreamRowcount}
+import graft.streaming.StreamRowcount
 
 /** Stream/batch parity for the ingest row-count monitor: after the
   * stream has absorbed every event — shuffled, uneven micro-batches
@@ -11,10 +8,7 @@ import graft.streaming.{RowcountEvent, StreamRowcount}
   * `q_dq_rowcount_anomaly` rows exactly (same trailing-7 window,
   * same integer-exact moments, same flags).
   */
-class RowcountStreamSpec extends SparkSpec {
-  import spark.implicits._
-  private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext =
-    spark.sqlContext
+class RowcountStreamSpec extends SparkSpec with StreamTwins {
 
   test("final streaming summary == batch q_dq_rowcount_anomaly") {
     val batchRows = SparkEntry.queries("q_dq_rowcount_anomaly")(
@@ -28,36 +22,17 @@ class RowcountStreamSpec extends SparkSpec {
           last.getAs[String]("day"), last.getAs[Double]("z_score"))
       }
 
-    val feed = Tables(spark, sf(), "events")
-      .select(col("event_type"),
-        to_date(col("ts")).cast("string").as("day"))
-      .as[RowcountEvent]
-      .collect().toSeq.reverse
-
-    val input = MemoryStream[RowcountEvent]
-    val q = StreamRowcount.monitor(input.toDS())
-      .writeStream.format("memory").queryName("rcsink")
-      .outputMode(OutputMode.Append).start()
-    val streamed = try {
-      val (a, rest) = feed.splitAt(feed.size / 4)
-      val (b, c) = rest.splitAt(rest.size / 2)
-      Seq(a, b, c).foreach { chunk =>
-        input.addData(chunk); q.processAllAvailable()
-      }
-      spark.table("rcsink")
-        .as[(String, Long, Long, Long, String, Double)]
-        .collect().zipWithIndex.groupBy(_._1._1)
-        .map { case (k, rows) => k -> rows.maxBy(_._2)._1 }
-    } finally q.stop()
+    val streamed = replay(rowcount).latest(_.event_type)
 
     assert(batch.keySet.subsetOf(streamed.keySet))
     batch.foreach { case (et, (nScored, nAnom, lastDay, lastZ)) =>
-      val (_, _, sScored, sAnom, sDay, sZ) = streamed(et)
-      assert(sScored == nScored,
-        s"$et: scored $sScored != batch $nScored")
-      assert(sAnom == nAnom, s"$et: anomalies $sAnom != batch $nAnom")
-      assert(sDay == lastDay, s"$et: last day $sDay != $lastDay")
-      assert(sZ == lastZ, s"$et: last z $sZ != batch $lastZ")
+      val s = streamed(et)
+      assert(s.n_scored == nScored,
+        s"$et: scored ${s.n_scored} != batch $nScored")
+      assert(s.n_anomalies == nAnom,
+        s"$et: anomalies ${s.n_anomalies} != batch $nAnom")
+      assert(s.last_day == lastDay, s"$et: last day ${s.last_day} != $lastDay")
+      assert(s.last_z == lastZ, s"$et: last z ${s.last_z} != batch $lastZ")
     }
   }
 

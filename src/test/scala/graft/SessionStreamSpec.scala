@@ -1,45 +1,16 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
-import graft.streaming.{ClosedSession, SessionEvent, StreamSessionize}
-
 /** Stream/batch parity for gap sessionization: replaying the event
   * table must close exactly the batch window's sessions — every
   * session except each user's final (still-open) one — with
   * identical ordinals, sizes, durations, and type counts, across
   * uneven micro-batch splits.
   */
-class SessionStreamSpec extends SparkSpec {
-  import spark.implicits._
-  private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext =
-    spark.sqlContext
-
-  private def micros(ts: java.sql.Timestamp): Long = {
-    val i = ts.toInstant
-    i.getEpochSecond * 1000000L + i.getNano / 1000L
-  }
+class SessionStreamSpec extends SparkSpec with StreamTwins {
 
   test("streamed closed sessions equal batch sessions minus each user's open one") {
-    val all = Tables(spark, sf("0.001"), "events")
-      .select(col("user_id"), col("event_id"), col("ts"),
-        col("event_type"))
-      .as[SessionEvent].collect().toSeq
-      .sortBy(e => (micros(e.ts), e.event_id)) // in-order feed contract
-
-    val input = MemoryStream[SessionEvent]
-    val q = StreamSessionize.closedSessions(input.toDS())
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode(OutputMode.Append).start()
-    val streamed = try {
-      val (a, rest) = all.splitAt(all.size / 4)
-      val (b, c) = rest.splitAt(rest.size / 3)
-      Seq(a, b, c).foreach { chunk =>
-        input.addData(chunk); q.processAllAvailable()
-      }
-      spark.table("sessions").as[ClosedSession].collect().toSeq
-    } finally q.stop()
+    // in-order feed contract: the twin table sorts by (µs, event_id)
+    val streamed = replay(sessionize).rows
 
     val batch = SparkEntry.queries("q_sessionize")(spark, sf("0.001"))
       .collect()

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import org.apache.spark.sql.{Dataset, Encoder, SQLContext, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -49,24 +52,49 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  /** Total shuffle records written by everything `f` runs, from real
-    * task metrics. The listener bus is async, so drain it to empty
-    * (via the private-API bridge) before reading the tally.
+  /** Run `f` with `record` called on every finished task's metrics,
+    * then drain the async listener bus to empty (via the private-API
+    * bridge) so every task has been recorded before this returns.
     */
-  def shuffledRecords(f: => Unit): Long = {
-    val tally = new java.util.concurrent.atomic.AtomicLong
+  private def onEveryTask(f: => Unit)(
+      record: org.apache.spark.executor.TaskMetrics => Unit): Unit = {
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(
           te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          tally.addAndGet(te.taskMetrics.shuffleWriteMetrics.recordsWritten)
+        if (te.taskMetrics != null) record(te.taskMetrics)
     }
     spark.sparkContext.addSparkListener(l)
     try {
       f
       org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      tally.get
     } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** Total shuffle records written by everything `f` runs, from real
+    * task metrics.
+    */
+  def shuffledRecords(f: => Unit): Long = {
+    val tally = new AtomicLong
+    onEveryTask(f)(m =>
+      tally.addAndGet(m.shuffleWriteMetrics.recordsWritten))
+    tally.get
+  }
+
+  /** (max single-task, total) shuffle read bytes across `f` — the
+    * skew-ratio form of "no task receives an unbounded payload":
+    * max/total stays near 1/partitions when work is spread, and
+    * approaches the dominant stage's share of the wire when one
+    * task serializes it.
+    */
+  def shuffleReadSkew(f: => Unit): (Long, Long) = {
+    val peak = new AtomicLong
+    val total = new AtomicLong
+    onEveryTask(f) { m =>
+      val b = m.shuffleReadMetrics.totalBytesRead
+      peak.accumulateAndGet(b, Math.max(_, _))
+      total.addAndGet(b)
+    }
+    (peak.get, total.get)
   }
 
   /** Max shuffle bytes read by any SINGLE task across everything `f`
@@ -75,52 +103,58 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * ObjectHashAggregate's per-key buffers are untracked on-heap
     * state, which is exactly why a whale key is dangerous there.)
     */
-  /** (max single-task, total) shuffle read bytes across `f` — the
-    * skew-ratio form of "no task receives an unbounded payload":
-    * max/total stays near 1/partitions when work is spread, and
-    * approaches the dominant stage's share of the wire when one
-    * task serializes it.
-    */
-  def shuffleReadSkew(f: => Unit): (Long, Long) = {
-    val peak = new java.util.concurrent.atomic.AtomicLong
-    val total = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) {
-          val b = te.taskMetrics.shuffleReadMetrics.totalBytesRead
-          peak.accumulateAndGet(b, Math.max(_, _))
-          total.addAndGet(b)
-        }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      f
-      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      (peak.get, total.get)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
+  def maxTaskShuffleReadBytes(f: => Unit): Long = shuffleReadSkew(f)._1
 
-  def maxTaskShuffleReadBytes(f: => Unit): Long = {
-    val peak = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          peak.accumulateAndGet(
-            te.taskMetrics.shuffleReadMetrics.totalBytesRead,
-            Math.max(_, _))
+  /** Replay `feed` through the streaming `pipe` over a MemoryStream
+    * into a memory sink, one micro-batch per chunk. Each of `splits`
+    * cuts `rest.size / d` rows off the front of what is left; the
+    * remainder is the last chunk, so no splits means one batch.
+    */
+  def replay[I: Encoder, O: Encoder](feed: Seq[I], splits: Int*)(
+      pipe: Dataset[I] => Dataset[O]): Replay[O] = {
+    implicit val ctx: SQLContext = spark.sqlContext
+    val (cut, last) = splits.foldLeft((Vector.empty[Seq[I]], feed)) {
+      case ((done, rest), d) =>
+        val (chunk, more) = rest.splitAt(rest.size / d)
+        (done :+ chunk, more)
     }
-    spark.sparkContext.addSparkListener(l)
+    val name = s"replay_${SparkSpec.replays.incrementAndGet()}"
+    val input = MemoryStream[I]
+    val q = pipe(input.toDS()).writeStream.format("memory")
+      .queryName(name).outputMode(OutputMode.Append).start()
     try {
-      f
-      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      peak.get
-    } finally spark.sparkContext.removeSparkListener(l)
+      var seen = 0
+      val batches = (cut :+ last).map { chunk =>
+        input.addData(chunk); q.processAllAvailable()
+        val sink = spark.table(name).as[O].collect().toSeq
+        val fresh = sink.drop(seen)
+        seen = sink.size
+        fresh
+      }
+      // the provider's own fingerprint: a RocksDB leg that silently
+      // ran the default provider would make its parity vacuous
+      val sawRocksDb = q.recentProgress.exists(_.stateOperators.exists(
+        _.customMetrics.keySet.toArray.exists(
+          _.toString.toLowerCase.contains("rocksdb"))))
+      Replay(batches, sawRocksDb)
+    } finally q.stop()
   }
 }
 
+/** What [[SparkSpec.replay]] saw: the rows each micro-batch emitted,
+  * in order, and whether any state operator reported a rocksdb*
+  * custom metric.
+  */
+final case class Replay[O](batches: Seq[Seq[O]], sawRocksDb: Boolean) {
+  def rows: Seq[O] = batches.flatten
+
+  /** Each key's latest emission. */
+  def latest[K](key: O => K): Map[K, O] =
+    rows.groupBy(key).map { case (k, rs) => k -> rs.last }
+}
+
 object SparkSpec {
+  private val replays = new AtomicInteger
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

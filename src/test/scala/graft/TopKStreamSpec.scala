@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery}
 import graft.streaming.{StreamTopK, TKEvent, TopKEstimate}
@@ -11,10 +10,8 @@ import graft.streaming.{StreamTopK, TKEvent, TopKEstimate}
   * over/under-count guarantees when it doesn't, and checkpointed
   * restart recovery of the counters map itself.
   */
-class TopKStreamSpec extends SparkSpec {
+class TopKStreamSpec extends SparkSpec with StreamTwins {
   import spark.implicits._
-  private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext =
-    spark.sqlContext
 
   private type Tagged = (Long, TopKEstimate)
 
@@ -22,8 +19,8 @@ class TopKStreamSpec extends SparkSpec {
     * row: "the final sketch state" is then literally the rows of the
     * last EMITTING batch — no last-k sink-index arithmetic, which
     * mixed rows from two batches whenever a batch emitted fewer than
-    * k rows (ADVICE r8). Shared by all three tests so the fix lives
-    * in one place.
+    * k rows (ADVICE r8). The replayed tests get the same per-batch
+    * rows from [[SparkSpec.replay]].
     */
   private def taggedSink(out: Dataset[TopKEstimate])
       : (scala.collection.mutable.ArrayBuffer[Tagged],
@@ -59,26 +56,12 @@ class TopKStreamSpec extends SparkSpec {
       case (et, ks) => et -> ks.size
     }
 
-    val all = ev.as[TKEvent].collect().toSeq.sortBy(_.event_id)
-    val input = MemoryStream[TKEvent]
     // capacity 512 > any key's distinct users (≤150 at sf0.001)
-    val (emitted, writer) =
-      taggedSink(StreamTopK.topK(input.toDS(), capacity = 512, k = 5))
-    val q = writer.start()
-    val streamed = try {
-      val (a, rest) = all.splitAt(all.size / 3)
-      val (b, c) = rest.splitAt(rest.size / 2)
-      Seq(a, b, c).foreach { chunk =>
-        input.addData(chunk); q.processAllAvailable()
-      }
-      // per KEY, the key's last emitting batch is its end state
-      emitted.synchronized {
-        emitted.toSeq.groupBy(_._2.event_type).map { case (et, rows) =>
-          val lastBatch = rows.map(_._1).max
-          et -> rows.collect { case (b, r) if b == lastBatch => r }
-        }
-      }
-    } finally q.stop()
+    val emitted = replay(topK.feed, topK.splits: _*)(
+      StreamTopK.topK(_, capacity = 512, k = 5))
+    // per KEY, the key's last emitting batch is its end state
+    val streamed = emitted.batches.flatMap(_.groupBy(_.event_type))
+      .groupMap(_._1)(_._2).map { case (et, rows) => et -> rows.last }
 
     // non-vacuity + coverage: a stream that stops emitting (overall
     // or for one event_type) must fail here, not skip the loop below
@@ -112,17 +95,8 @@ class TopKStreamSpec extends SparkSpec {
     val truth = feed.groupBy(_.item).map { case (i, es) =>
       i -> es.size.toLong
     }
-    val input = MemoryStream[TKEvent]
-    val (emitted, writer) =
-      taggedSink(StreamTopK.topK(input.toDS(), capacity = 8, k = 8))
-    val q = writer.start()
-    val rows = try {
-      val (a, b) = feed.splitAt(feed.size / 2)
-      Seq(a, b).foreach { chunk =>
-        input.addData(chunk); q.processAllAvailable()
-      }
-      lastEmitting(emitted)
-    } finally q.stop()
+    val rows = replay(feed, 2)(StreamTopK.topK(_, capacity = 8, k = 8))
+      .batches.filter(_.nonEmpty).lastOption.getOrElse(Seq.empty)
     assert(rows.size == 8, s"final emission should carry k=8 rows: $rows")
 
     val byItem = rows.map(r => r.item -> r).toMap

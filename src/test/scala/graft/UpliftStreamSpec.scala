@@ -1,19 +1,13 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
-import graft.streaming.{StreamUplift, UpliftEvent}
+import graft.streaming.StreamUplift
 
 /** Stream/batch parity for the uplift monitor: after the stream has
   * absorbed every event — shuffled, uneven micro-batches — its final
   * per-segment emission must equal the batch `q_uplift_two_model`
   * row exactly (same arm assignment, same threshold, same rounding).
   */
-class UpliftStreamSpec extends SparkSpec {
-  import spark.implicits._
-  private implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext =
-    spark.sqlContext
+class UpliftStreamSpec extends SparkSpec with StreamTwins {
 
   test("final streaming uplift == batch q_uplift_two_model") {
     val batch = SparkEntry.queries("q_uplift_two_model")(spark, sf())
@@ -26,42 +20,20 @@ class UpliftStreamSpec extends SparkSpec {
           r.getAs[Double]("se_uplift"))).toMap
     assert(batch.nonEmpty)
 
-    // replicate the batch derivation: global median + md5 arms
-    val med = Tables(spark, sf(), "events")
-      .agg(expr("percentile(value, 0.5)")).collect().head.getDouble(0)
-    val feed = Tables(spark, sf(), "events")
-      .select(col("event_type"),
-        (expr("cast(conv(substring(md5(cast(user_id as string)),1,8)" +
-          ",16,10) as bigint)") % 2 =!= 0).as("treated"),
-        when(col("value") > med, 1L).otherwise(0L).as("resp"))
-      .as[UpliftEvent]
-      .collect().toSeq.reverse
-
-    val input = MemoryStream[UpliftEvent]
-    val q = StreamUplift.monitor(input.toDS())
-      .writeStream.format("memory").queryName("upliftsink")
-      .outputMode(OutputMode.Append).start()
-    val streamed = try {
-      val (a, rest) = feed.splitAt(feed.size / 3)
-      val (b, c) = rest.splitAt(rest.size / 4)
-      Seq(a, b, c).foreach { chunk =>
-        input.addData(chunk); q.processAllAvailable()
-      }
-      spark.table("upliftsink")
-        .as[(String, Long, Long, Double, Double, Double, Double)]
-        .collect().zipWithIndex.groupBy(_._1._1)
-        .map { case (k, rows) => k -> rows.maxBy(_._2)._1 }
-    } finally q.stop()
+    // the twin table replicates the batch derivation (global median
+    // + md5 arms) and feeds it in reverse
+    val streamed = replay(uplift).latest(_.event_type)
 
     assert(streamed.keySet == batch.keySet)
     batch.foreach { case (et, (nC, nT, pc, pt, up, se)) =>
-      val (_, sNc, sNt, sPc, sPt, sUp, sSe) = streamed(et)
-      assert(sNc == nC && sNt == nT,
-        s"$et: arm sizes ($sNc,$sNt) != batch ($nC,$nT)")
-      assert(sPc == pc && sPt == pt,
-        s"$et: rates ($sPc,$sPt) != batch ($pc,$pt)")
-      assert(sUp == up, s"$et: uplift $sUp != batch $up")
-      assert(sSe == se, s"$et: SE $sSe != batch $se")
+      val s = streamed(et)
+      assert(s.n_c == nC && s.n_t == nT,
+        s"$et: arm sizes (${s.n_c},${s.n_t}) != batch ($nC,$nT)")
+      assert(s.rate_control == pc && s.rate_treatment == pt,
+        s"$et: rates (${s.rate_control},${s.rate_treatment}) != " +
+          s"batch ($pc,$pt)")
+      assert(s.uplift == up, s"$et: uplift ${s.uplift} != batch $up")
+      assert(s.se_uplift == se, s"$et: SE ${s.se_uplift} != batch $se")
     }
   }
 
