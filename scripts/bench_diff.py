@@ -26,22 +26,10 @@ mostly-untouched corpus, so: median per-query cpu-ratio >= 1.3 (or
 <= 1/1.3) over the common subset => environment, deltas suppressed,
 exit 3.
 
-Solo healing (r10): a Bench artifact whose in-run detectors tripped
-carries a "solo" map — the most-inflated queries re-measured
-back-to-back min-of-3 after the corpus, bracketed by its own
-"solo_cal" probes. When a pair would be suppressed but the current
-artifact has a CLEAN solo map (solo_cal under the contention
-threshold), the solo values are preferred: per-query deltas are
-reported for the healed queries against the prior idle values, and
-the exit code reflects THEM (0 clean / 1 regressed) instead of the
-blanket inconclusive 3. A solo map whose own probes are contended
-stays suppressed — healed numbers taken on a still-loaded box are
-not numbers of record.
-
 Exit codes: 0 = clean pass; 1 = clean pair regressed >2x on the
-common-subset total (the driver's gate threshold) or a solo-healed
-query regressed >2x; 3 = inconclusive (contended/unknown pair,
-deltas suppressed — re-measure idle); 4 = either artifact carries a
+common-subset total (the bench gate's threshold); 3 = inconclusive
+(contended/unknown pair, deltas suppressed — re-measure the suspects
+with SPARK_GRAFT_ONLY on an idle box); 4 = either artifact carries a
 non-empty "failed" entry — since r12 an OBJECT {name: reason}, not a
 list of names (crashed queries silently drop out of the common
 subset, so no comparison over it may read as a clean pass — fix the
@@ -161,54 +149,6 @@ if failed_present:
     sys.exit(4)
 
 if c_prev or c_curr or c_prev is None or c_curr is None or broad_skew:
-    # solo healing: prefer the artifact's own solo re-measure when it
-    # exists AND its bracket probes are clean
-    solo = curr.get("solo") or {}
-    scal = curr.get("solo_cal") or {}
-    # healed ratios are only numbers of record against a CLEAN prior:
-    # if prev was contended/unknown, clean solo values vs inflated
-    # prior numbers would read a real regression as 'ok' (ADVICE r10)
-    solo_clean = (solo and scal and c_prev is False
-                  and max(scal.get("pre", 99), scal.get("post", 99))
-                  < 2 * WARM_FLOOR)
-    if solo_clean:
-        healed = sorted(((solo[q] / prev["queries"][q], q)
-                         for q in solo if q in prev["queries"]
-                         and prev["queries"][q] >= 0.2), reverse=True)
-    if solo_clean and not healed:
-        # a clean solo map that heals ZERO queries (all absent from
-        # prev or sub-0.2s there) is no evidence at all — exit-0 here
-        # would be a clean-pass verdict backed by nothing (ADVICE r10)
-        print("\nsolo map is clean but heals 0 comparable queries "
-              "(none >=0.2s in prev) — no healed evidence, staying "
-              "inconclusive")
-        solo_clean = False
-    if solo_clean:
-        print(f"\ncorpus pass contended (trips: "
-              f"{curr.get('solo_trips', '?')}) but solo map is CLEAN "
-              f"(probes {scal.get('pre')}/{scal.get('post')}s) — "
-              f"per-query record healed for {len(healed)} queries:")
-        for r, q in healed:
-            print(f"  {'SLOWER' if r >= 1.5 else 'ok    '} {r:.2f}x {q} "
-                  f"({prev['queries'][q]:.2f} -> {solo[q]:.2f}s solo)")
-        worst = healed[0][0] if healed else 1.0
-        if worst > 2.0:
-            print("solo-healed regression >2x — this one is real "
-                  "(measured on a clean bracket), not environment")
-            sys.exit(1)
-        print("no solo-healed query regressed >2x; corpus TOTALS "
-              "remain contended and are not comparable, but the "
-              "healed per-query values are the numbers of record")
-        sys.exit(0)
-    if solo and not solo_clean:
-        if c_prev is not False:
-            print("\nsolo map present but the PREV artifact is "
-                  "contended/unknown — clean solo values vs inflated "
-                  "prior numbers are not a comparison of record")
-        else:
-            print(f"\nsolo map present but its own bracket is "
-                  f"contended (solo_cal {scal}) — healed values are "
-                  "not numbers of record")
     print("\nper-query deltas SUPPRESSED: at least one run contended/"
           "unknown or the pair is throughput-skewed — inside the "
           "measured contention band they are noise (BASELINE.md). "

@@ -5,9 +5,9 @@ import org.apache.spark.sql.SparkSession
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},...}`.
   *
   * The driver captures only the last 2000 chars of stdout, and the
-  * full 94-query map is ~2.4 KB even at millisecond precision — it
-  * cannot fit. So the stdout line is budgeted: per-query entries are
-  * added slowest-first until the line would exceed the capture
+  * full per-query map is far larger even at millisecond precision —
+  * it cannot fit. So the stdout line is budgeted: per-query entries
+  * are added slowest-first until the line would exceed the capture
   * window, with `queries_omitted` recording the (fast) remainder.
   * The COMPLETE per-query artifact — every query, full precision —
   * is always written to `SPARK_GRAFT_BENCH_OUT` (default
@@ -27,54 +27,6 @@ object Bench {
     * means the box was contended during the bracketed phase. Kept in
     * lockstep with scripts/bench_diff.py WARM_FLOOR. */
   private[graft] val WarmFloor = 0.18
-
-  /** Contention detectors, same three classes bench_diff.py applies
-    * after the fact — evaluated IN-RUN so the artifact can heal
-    * itself (VERDICT r9 #1): three rounds of official artifacts were
-    * contended, and detection without repair left no per-query
-    * numbers of record. Returns the tripped detector names (empty =
-    * clean). prevQ/prevEff come from the committed prior full
-    * artifact; absent prior (first round, renamed file) degrades to
-    * the probe detector alone. */
-  private[graft] def detectorsTripped(
-      calPre: Double, calPost: Double,
-      prevEff: Double, currEff: Double,
-      prevQ: Map[String, Double],
-      currQ: Map[String, Double]): Seq[String] = {
-    val trips = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (math.max(calPre, calPost) >= 2 * WarmFloor) trips += "probe"
-    if (prevEff > 0 && currEff > 0 &&
-        math.max(prevEff, currEff) / math.min(prevEff, currEff) >= 1.5)
-      trips += "eff_cores"
-    // corpus-wide median wall ratio (>=0.2s prev so micro-query
-    // jitter can't move it): a code change moves the queries it
-    // touched, not the median of a 240-query corpus
-    val common = (prevQ.keySet & currQ.keySet).toSeq
-      .filter(q => prevQ(q) >= 0.2)
-    if (common.size >= 20) {
-      val rs = common.map(q => currQ(q) / prevQ(q)).sorted
-      val med = rs(rs.size / 2)
-      if (med >= 1.25 || med <= 0.8) trips += "median_wall"
-    }
-    trips.toSeq
-  }
-
-  /** The N queries most inflated vs the prior artifact (ratio desc,
-    * prev >= 0.2s so the ranking is not micro-query noise). Queries
-    * >= 1.3x inflated rank first; if nothing clears that bar (probe
-    * tripped but the corpus reads flat) the top-ratio queries are
-    * still healed — a clean solo number for them is cheap insurance
-    * either way. */
-  private[graft] def selectInflated(
-      prevQ: Map[String, Double],
-      currQ: Map[String, Double], n: Int): Seq[String] = {
-    val ranked = (prevQ.keySet & currQ.keySet).toSeq
-      .filter(q => prevQ(q) >= 0.2)
-      .map(q => (currQ(q) / prevQ(q), q))
-      .sortBy { case (r, q) => (-r, q) }
-    val inflated = ranked.filter(_._1 >= 1.3)
-    (if (inflated.nonEmpty) inflated else ranked).map(_._2).take(n)
-  }
 
   /** What a record-hygiene check needs to know about an existing
     * full artifact: its per-query map, the worst calibration probe
@@ -184,33 +136,6 @@ object Bench {
       None
     }
 
-  /** queries map + eff_cores of a prior Bench full artifact (Jackson
-    * ships with Spark). Missing/corrupt file degrades to empty — the
-    * solo machinery then rests on the probe detector alone. */
-  private def readPrevArtifact(path: String): (Map[String, Double], Double) =
-    try {
-      val p = java.nio.file.Paths.get(path)
-      if (!java.nio.file.Files.exists(p)) (Map.empty, -1.0)
-      else {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = om.readTree(java.nio.file.Files.readAllBytes(p))
-        val b = Map.newBuilder[String, Double]
-        Option(root.get("queries")).foreach { q =>
-          val it = q.fields()
-          while (it.hasNext) {
-            val e = it.next(); b += e.getKey -> e.getValue.asDouble()
-          }
-        }
-        val eff = Option(root.get("cpu_wall"))
-          .flatMap(c => Option(c.get("eff_cores")))
-          .map(_.asDouble()).getOrElse(-1.0)
-        (b.result(), eff)
-      }
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] could not read prior artifact $path: $e")
-      (Map.empty, -1.0)
-    }
-
   /** Whole-JVM process CPU seconds. local[32] runs every task thread
     * in this JVM, so (ΔprocessCpu / Δwall) is the effective core
     * count the run actually got: ~10-30 on an idle 32-core box,
@@ -266,7 +191,7 @@ object Bench {
     // SPARK_GRAFT_RUNS: decade-soak legs at sf>=100 can't afford 3
     // full passes (a single sf100 pass is ~1h); min-of-1 is noisier
     // but the decade ratios it feeds are x4-13, far above the noise.
-    // Defensive parse like SOLO_N; the record-hygiene gate below
+    // Parsed defensively; the record-hygiene gate below
     // refuses to let a non-min-of-3 leg replace the record.
     val runs = sys.env.get("SPARK_GRAFT_RUNS")
       .flatMap(v => scala.util.Try(v.toInt).toOption)
@@ -334,70 +259,6 @@ object Bench {
     val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
     val wallByName = results.view.mapValues(_._1).toMap
 
-    // Phase marker for the solo-healing negative-control harness
-    // (scripts/solo_control.py): the corpus phase just ended, so an
-    // external load generator watching this file can release its
-    // load before the solo re-measure below begins.
-    sys.env.get("SPARK_GRAFT_PHASE_MARKER").foreach { mp =>
-      try java.nio.file.Files.write(java.nio.file.Paths.get(mp),
-        "corpus_done\n".getBytes("UTF-8"))
-      catch { case _: Throwable => () }
-    }
-
-    // Self-healing solo re-measure (VERDICT r9 #1): if the in-run
-    // contention detectors trip, re-run the most-inflated queries
-    // (vs the committed prior full artifact) back-to-back min-of-3
-    // NOW — contention is usually transient co-tenant load, and a
-    // min over three later tries rides out what the corpus pass
-    // absorbed. The solo phase carries its own calibration bracket
-    // (solo_cal) so a reader — and bench_diff.py — can tell whether
-    // the healed numbers were themselves taken on a clean box.
-    val effCorpus = if (cpuOk && wallCorpus > 0) cpuCorpus / wallCorpus else -1.0
-    val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", outPath)
-    val (prevQ, prevEff) = readPrevArtifact(prevPath)
-    // degrade-gracefully parse (ADVICE r10): a malformed value here
-    // would throw AFTER the full corpus ran but BEFORE any artifact
-    // was written, discarding a 30+ minute run
-    val soloN = sys.env.get("SPARK_GRAFT_SOLO_N")
-      .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(12)
-    val trips = detectorsTripped(calPre, calPost, prevEff, effCorpus,
-      prevQ, wallByName)
-    val soloNames: Seq[String] = sys.env.get("SPARK_GRAFT_FORCE_SOLO") match {
-      // explicit list: the control harness pins exactly which
-      // queries to heal regardless of detector state
-      case Some(list) if list.nonEmpty && list != "auto" =>
-        list.split(",").map(_.trim).filter(SparkEntry.queries.contains).toSeq
-      case Some(_) => selectInflated(prevQ, wallByName, soloN)
-      // auto path: only on full-set runs (a filtered SPARK_GRAFT_ONLY
-      // run has no corpus to diagnose) with a tripped detector
-      case None if trips.nonEmpty && only.isEmpty =>
-        selectInflated(prevQ, wallByName, soloN)
-      case None => Seq.empty
-    }
-    var soloCalPre = -1.0
-    var soloCalPost = -1.0
-    val soloResults: Seq[(String, Double)] =
-      if (soloNames.isEmpty) Seq.empty
-      else {
-        System.err.println(s"[bench] contention detectors tripped " +
-          s"[${trips.mkString(",")}] — solo re-measure (min-of-$runs) " +
-          s"of ${soloNames.size} queries: ${soloNames.mkString(", ")}")
-        soloCalPre = calibrationProbe(spark)
-        val rs = soloNames.flatMap { name =>
-          val fn = SparkEntry.queries(name)
-          val times = (1 to runs).flatMap { _ =>
-            val t0 = System.nanoTime()
-            try { fn(spark, sfDir).count()
-              Some((System.nanoTime() - t0) / 1e9)
-            } catch { case scala.util.control.NonFatal(_) => None }
-          }
-          graft.CachedPlans.release()
-          if (times.isEmpty) None else Some(name -> times.min)
-        }
-        soloCalPost = calibrationProbe(spark)
-        rs
-      }
-
     // JSON string escape shared with the name/path interpolations —
     // locale-pinned float formatting (a de_DE default locale would
     // print decimal COMMAS and break the driver's parse)
@@ -439,18 +300,9 @@ object Bench {
     val cpuJson = s""","cpu":${entries(
       results.toSeq.map { case (k, (_, c)) => (k, c) }.sortBy(_._1), 3)
       .mkString("{", ",", "}")}"""
-    // solo map only when the healing phase actually ran; solo_cal
-    // brackets it so the healed values carry their own cleanliness
-    // evidence, solo_trips records WHY the phase fired
-    val soloJson =
-      if (soloResults.isEmpty) ""
-      else s""","solo":${entries(soloResults.sortBy(_._1), 9)
-          .mkString("{", ",", "}")}""" +
-        s""","solo_cal":{"pre":${fmt(3, soloCalPre)},"post":${fmt(3, soloCalPost)}}""" +
-        s""","solo_trips":${trips.map(jstr).mkString("[", ",", "]")}"""
     val fullJson = jsonLine(
       entries(wallByName.toSeq.sortBy(_._1), 9).mkString("{", ",", "}"),
-      cpuJson + soloJson)
+      cpuJson)
     // record hygiene (VERDICT r10 #4): never silently replace a
     // better-and-clean record — divert worse/partial legs to a
     // candidate file; promotion to the record is an explicit copy
@@ -511,22 +363,16 @@ object Bench {
     // stdout contract line: slowest queries first, greedily packed
     // under the driver's capture budget
     val bySlowest = entries(wallByName.toSeq.sortBy(-_._2), 3)
-    val fixedOverhead = jsonLine("{}",
-      s""","queries_omitted":${results.size},"full":"$actualOut"""").length +
-      24 // headroom for the optional solo_n tail below
-    var used = fixedOverhead
+    var used = jsonLine("{}",
+      s""","queries_omitted":${results.size},"full":"$actualOut"""").length
     val kept = bySlowest.takeWhile { e =>
       val fits = used + e.length + 1 <= StdoutBudget
       if (fits) used += e.length + 1
       fits
     }
     val omitted = results.size - kept.size
-    // solo_n on the stdout tail too: a totals-only reader learns the
-    // artifact self-healed without opening the full file
-    val soloTail = if (soloResults.isEmpty) ""
-      else s""","solo_n":${soloResults.size}"""
     val line = jsonLine(kept.mkString("{", ",", "}"),
-      s""","queries_omitted":$omitted,"full":"$actualOut"$soloTail""")
+      s""","queries_omitted":$omitted,"full":"$actualOut"""")
     println(line)
     graft.CachedPlans.release()
     spark.stop()

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.graftbridge.ListenerBridge
 
 /** Optimization-round measurement harness (guide §1): for each named
   * query, dump `.explain("formatted")` to `<outDir>/<name>.txt` and
@@ -72,27 +73,22 @@ object PlanDump {
             spark.sparkContext.setJobDescription(null)
             (System.nanoTime() - t0) / 1e9
           }
-          // cold traced run: caches just released, full job structure
+          // the listener bus is async: drain it so every job-end
+          // event of the runs so far has been recorded (a sleep-poll
+          // can miss late events on a loaded box and attribute them
+          // to the next query)
+          def settled(): List[(Int, String, Double)] = {
+            ListenerBridge.drain(spark.sparkContext)
+            done.synchronized(done.toList)
+          }
+          // cold traced run: caches just released, full job structure;
+          // drained first so no earlier job's late events land in it
+          settled()
           done.synchronized(done.clear())
           val cold = run(s"$name#cold")
           graft.CachedPlans.release()
-          // the listener bus is async: poll until the job list
-          // settles (ADVICE r13 — late job-end events were previously
-          // missed or attributed to the next query), then snapshot so
-          // the warm runs' jobs don't pollute the cold trace... and
-          // keep collecting so the warm breakdown is also usable.
-          def settled(): List[(Int, String, Double)] = {
-            var prev = -1
-            var cur = done.synchronized(done.size)
-            var spins = 0
-            while (cur != prev && spins < 20) {
-              Thread.sleep(100); prev = cur
-              cur = done.synchronized(done.size); spins += 1
-            }
-            done.synchronized(done.toList)
-          }
-          settled()
-          // bench protocol: 3 runs back-to-back, caches retained
+          // bench protocol: 3 runs back-to-back, caches retained; the
+          // job list keeps collecting, so it covers cold and warm runs
           val warm = (1 to 3).map(i => run(s"$name#w$i"))
           graft.CachedPlans.release()
           val jobLines = settled().map {

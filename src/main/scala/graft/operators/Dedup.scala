@@ -110,8 +110,10 @@ object Dedup {
     // The pruning threshold is either a constant or derived IN-PLAN
     // as max(⌊|docs| / divisor⌋, 1) — a one-row aggregate broadcast
     // into the df stream. No driver-side count(): building this query
-    // launches zero Spark jobs (PlanAudit asserts it), which matters
-    // at 100 TB where a plan-time count() is a full extra scan.
+    // launches no job beyond the unpruned build's (PlanSpec
+    // "q_dedup_jaccard_pruned: plan build runs no extra driver job"
+    // asserts it), which matters at 100 TB where a plan-time count()
+    // is a full extra scan.
     val thr: Option[DataFrame] =
       (maxShingleDocFreq, maxShingleDocFreqDivisor) match {
         case (Some(m), _) =>

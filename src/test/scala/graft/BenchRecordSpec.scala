@@ -161,4 +161,14 @@ class BenchRecordSpec extends AnyFunSuite {
       assert(Bench.readArtifactMeta(f.toString).isEmpty)
     } finally java.nio.file.Files.deleteIfExists(f)
   }
+
+  test("WarmFloor stays in lockstep with bench_diff.py WARM_FLOOR") {
+    // preserveRecord's clean-record threshold and bench_diff.py's
+    // contention verdict share one warm floor; python reads no scala,
+    // so pin the literal and a one-sided edit fails here
+    val py = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("scripts/bench_diff.py")), "UTF-8")
+    assert(py.contains("WARM_FLOOR = " + Bench.WarmFloor),
+      s"bench_diff.py WARM_FLOOR must equal Bench.WarmFloor=${Bench.WarmFloor}")
+  }
 }

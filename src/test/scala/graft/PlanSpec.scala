@@ -243,23 +243,9 @@ class PlanSpec extends SparkSpec {
     // construction — at 100 TB a plan-time count() is an extra full
     // scan per plan build. Baseline is the unpruned query (same
     // table-load footer job); the pruned build must add nothing.
-    def jobsDuringBuild(name: String): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        SparkEntry.queries(name)(spark, sf())
-          .queryExecution.executedPlan // force full planning
-        // drain the async listener bus (a fixed sleep can undercount
-        // on a loaded machine)
-        org.apache.spark.graftbridge.ListenerBridge
-          .drain(spark.sparkContext)
-        jobs.get()
-      } finally spark.sparkContext.removeSparkListener(listener)
+    def jobsDuringBuild(name: String): Int = jobsDuring {
+      SparkEntry.queries(name)(spark, sf())
+        .queryExecution.executedPlan // force full planning
     }
     val baseline = jobsDuringBuild("q_dedup_ngram_jaccard")
     val pruned = jobsDuringBuild("q_dedup_jaccard_pruned")

@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import org.apache.spark.graftbridge.ListenerBridge
 import org.apache.spark.sql.{Dataset, Encoder, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
@@ -66,8 +67,29 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.addSparkListener(l)
     try {
       f
-      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
+      ListenerBridge.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** Spark jobs started by `f`. The listener bus is async: drain it
+    * before listening so earlier work can't leak in, and after so no
+    * job of `f` is missed.
+    */
+  def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    ListenerBridge.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      f
+      ListenerBridge.drain(sc)
+      jobs.get
+    } finally sc.removeSparkListener(l)
   }
 
   /** Total shuffle records written by everything `f` runs, from real

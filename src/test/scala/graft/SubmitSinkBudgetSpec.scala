@@ -21,36 +21,22 @@ class SubmitSinkBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private val JobBudget = 4
 
   /** Spark jobs started by `f`, and the plans of the actions it ran
-    * (by action name). Both buses are async: drain before listening
-    * so earlier work can't leak in, and after so nothing is missed.
+    * (by action name). The plan listener rides the same async bus
+    * `jobsDuring` drains, so it registers after the first drain.
     */
   private def observed(f: => Unit): (Int, Seq[(String, QueryExecution)]) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
     val plans =
       new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]
-    val jl = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     val ql = new QueryExecutionListener {
       def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
         plans.add(name -> qe)
       def onFailure(name: String, qe: QueryExecution, e: Exception): Unit =
         ()
     }
-    org.apache.spark.graftbridge.ListenerBridge.drain(sc)
-    sc.addSparkListener(jl)
-    spark.listenerManager.register(ql)
     try {
-      f
-      org.apache.spark.graftbridge.ListenerBridge.drain(sc)
-      (jobs.get, plans.toArray(Array.empty[(String, QueryExecution)]).toSeq)
-    } finally {
-      spark.listenerManager.unregister(ql)
-      sc.removeSparkListener(jl)
-    }
+      val jobs = jobsDuring { spark.listenerManager.register(ql); f }
+      (jobs, plans.toArray(Array.empty[(String, QueryExecution)]).toSeq)
+    } finally spark.listenerManager.unregister(ql)
   }
 
   private def keys(df: org.apache.spark.sql.Dataset[_]): DataFrame =
