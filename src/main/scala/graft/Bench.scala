@@ -166,19 +166,25 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }.min
 
+  /** JSON string literal: backslash, quote, and ALL control chars
+    * (<0x20) escaped — a tab or CR in a query name, failure reason or
+    * oracle SQL would otherwise make a reader's json.load fail (for
+    * Verify's oracle_sql.json, silently zeroing the correctness gate).
+    */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.cpus(32))
     // JIT/classloading warmup on the smallest SF so the first timed
     // queries don't absorb JVM startup (3-4 s skew otherwise).
     try SparkEntry.entry(spark).count()
@@ -259,18 +265,11 @@ object Bench {
     val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
     val wallByName = results.view.mapValues(_._1).toMap
 
-    // JSON string escape shared with the name/path interpolations —
     // locale-pinned float formatting (a de_DE default locale would
     // print decimal COMMAS and break the driver's parse)
     def fmt(prec: Int, v: Double): String =
       String.format(java.util.Locale.ROOT, s"%.${prec}f",
         Double.box(v))
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // `failed` is {name: reason} (was a bare name list through r11):
     // the reason must live IN the artifact, not on stderr that gets
     // tail-truncated. bench_diff.py prints the entry verbatim either

@@ -6,7 +6,7 @@ import org.apache.spark.storage.StorageLevel
 /** Registry for long-lived plan caches (shingle sets, LSH band
   * tables, SimHash chunk tables). These persists are deliberately
   * NOT scoped to a single query: Spark's CacheManager matches the
-  * identical sub-plan across queries, so a 94-query Verify/Bench run
+  * identical sub-plan across queries, so a 240-query Verify/Bench run
   * shingles the corpus once, not once per dedup query. The cost of
   * that design is that no single query can safely unpersist them —
   * so ownership lives here, and harness entry points (Bench between

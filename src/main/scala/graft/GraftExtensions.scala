@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.plans.{CosineSimExpr, MinHashSigExpr, SimHash64Expr, ShinglesExpr}
 
-/** Session-extension entry point: makes every native graft expression
-  * available to pure-SQL users of ANY session built with
+/** Session-extension entry point, and the only way graft registers
+  * functions, rules and strategies in a session:
   *
   * {{{
   *   spark.sql.extensions=graft.GraftExtensions
@@ -14,19 +14,34 @@ import graft.plans.{CosineSimExpr, MinHashSigExpr, SimHash64Expr, ShinglesExpr}
   *
   * — the idiomatic deployment path for a Spark library (no code
   * changes in the host application, works from spark-sql / JDBC /
-  * notebooks). This complements `Sketches.registerSql`, which
-  * registers the same functions imperatively on an existing session.
+  * notebooks). Every session the repo builds sets it
+  * ([[graft.LocalSession]], `graft.Serve`); the DataFrame helpers
+  * that build graft plan nodes (`AsOfJoinNative.asOfMerge`) need it
+  * too, and register nothing themselves.
   *
-  * Functions injected (all codegen-era native expressions, no UDFs):
+  * Functions (all native expressions, no UDFs):
   *   - `cosine_sim(a, b)`      — fused double-precision cosine
   *   - `simhash64(arr)`        — portable 60-bit SimHash
   *   - `minhash_sig(arr, k)`   — portable MinHash signature
   *   - `word_shingles(s, n)`   — word n-gram shingles
+  *   - `asof_on(lk = rk, lts, rts)` — as-of join marker (join ON only)
+  *   - `asof_cond`, `graft_replace`, `graft_rename` — parser-internal
+  *     markers for `ASOF JOIN` and star REPLACE / RENAME
   *
-  * Planner strategy injected:
-  *   - [[graft.plans.AsOfJoinStrategy]] — plans the whole-operator
-  *     [[graft.plans.AsOfJoinPlan]] to its sort-merge exec (the
-  *     build-brief (c)-tier path).
+  * Planner strategy: [[graft.plans.AsOfJoinStrategy]] — plans the
+  * whole-operator [[graft.plans.AsOfJoinPlan]] to its sort-merge exec.
+  *
+  * Optimizer rules: [[graft.plans.PruneAsOfJoinColumns]],
+  * [[graft.plans.PushFilterThroughAsOfJoin]] and the conf-gated
+  * [[graft.plans.AutoBloomJoin]].
+  *
+  * Resolution rules: [[graft.plans.RewriteSqlAsOfJoin]] (`asof_on`),
+  * [[graft.plans.RewriteAsOfSyntax]] (`ASOF JOIN`) and
+  * [[graft.plans.RewriteStarModifiers]] (star REPLACE / RENAME).
+  *
+  * Parser: [[graft.plans.GraftSqlParser]], the text sugar for
+  * `ASOF JOIN`, star EXCLUDE / REPLACE / RENAME, `DISTINCT ON` and
+  * `QUALIFY`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -75,18 +90,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "asof_cond(cond) - ASOF JOIN condition marker (parser-internal)"),
       (es: Seq[Expression]) => graft.plans.AsOfCondMarker(es.head)))
     ext.injectResolutionRule(_ => graft.plans.RewriteAsOfSyntax)
-    // `SELECT * REPLACE (expr AS col)` — star expansion with in-place
-    // substitution (parser sugar + marker + resolution swap)
+    // `SELECT * REPLACE (expr AS col)` / `SELECT * RENAME (col AS new)`
+    // — star expansion with in-place substitution or rename (parser
+    // sugar + marker + one resolution swap)
     ext.injectFunction((FunctionIdentifier("graft_replace"),
       info("graft_replace",
         "graft_replace(e) - star-REPLACE item marker (parser-internal)"),
-      (es: Seq[Expression]) => graft.plans.StarReplaceMarker(es.head)))
-    ext.injectResolutionRule(_ => graft.plans.RewriteStarReplace)
-    // `SELECT * RENAME (col AS newname)` — positional star rename
+      (es: Seq[Expression]) =>
+        graft.plans.StarModifierMarker(es.head, rename = false)))
     ext.injectFunction((FunctionIdentifier("graft_rename"),
       info("graft_rename",
         "graft_rename(col) - star-RENAME item marker (parser-internal)"),
-      (es: Seq[Expression]) => graft.plans.StarRenameMarker(es.head)))
-    ext.injectResolutionRule(_ => graft.plans.RewriteStarRename)
+      (es: Seq[Expression]) =>
+        graft.plans.StarModifierMarker(es.head, rename = true)))
+    ext.injectResolutionRule(_ => graft.plans.RewriteStarModifiers)
   }
 }

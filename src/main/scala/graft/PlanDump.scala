@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.graftbridge.ListenerBridge
 
 /** Optimization-round measurement harness (guide §1): for each named
@@ -20,16 +19,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, namesCsv) = args.take(3)
     val names = namesCsv.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.cpus(32))
     new java.io.File(outDir).mkdirs()
 
     // per-job wall clock with the thread-local job description

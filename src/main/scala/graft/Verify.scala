@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,45 +15,15 @@ object Verify {
     // same output directory mid-leg.
     val only: Option[Seq[String]] =
       rest.headOption.map(_.split(',').toSeq.distinct)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Read pandas-written naive parquet timestamps as TimestampType
-      // (session-UTC), not TIMESTAMP_NTZ — keeps epoch/ms functions
-      // applicable and matches DuckDB's naive-timestamp semantics.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // Timestamp dumps stay on the INT96 default deliberately:
-      // pyarrow reads INT96 as NAIVE ns, matching DuckDB's naive
-      // micros after value canonicalization (driver-verified).
-      // TIMESTAMP_MICROS would be physically closer but is written
-      // isAdjustedToUTC=true, which reads back tz-AWARE and fails a
-      // value compare against DuckDB's naive timestamps — a worse
-      // divergence than the ns/us width difference.
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.cpus(4))
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Written BEFORE the query loop (r12): it depends only on
     // SparkEntry.oracleSql, and a pipelined oracle lane polling this
     // outDir for _SUCCESS dumps needs the SQL long before a batched
     // scale leg finishes its last query.
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     only.fold(SparkEntry.queries.toSeq)(names =>
         names.flatMap(n => SparkEntry.queries.get(n).map(n -> _)))

@@ -68,8 +68,7 @@ case class AsOfJoinPlan(left: LogicalPlan, right: LogicalPlan,
 }
 
 /** Plans [[AsOfJoinPlan]] to [[AsOfMergeJoinExec]]. Injected via
-  * `GraftExtensions` (spark.sql.extensions) or lazily through
-  * `spark.experimental.extraStrategies` by the DataFrame API helper.
+  * `GraftExtensions` (spark.sql.extensions).
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -87,10 +86,9 @@ object AsOfJoinStrategy extends SparkStrategy {
   * side's key/ts, which the merge itself consumes) into child
   * Projects, from where the stock rules carry the pruning all the
   * way into the parquet scan's ReadSchema. Registered via
-  * `GraftExtensions.injectOptimizerRule` and lazily through
-  * `spark.experimental.extraOptimizations` by the API helper —
-  * whichever path built the session. No-op at fixed point (children
-  * already minimal), so the optimizer's idempotence check is safe.
+  * `GraftExtensions.injectOptimizerRule`. No-op at fixed point
+  * (children already minimal), so the optimizer's idempotence check
+  * is safe.
   */
 object PruneAsOfJoinColumns
     extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
@@ -171,17 +169,9 @@ case class AsOfOnMarker(eq: Expression, leftTs: Expression,
   * [[AsOfJoinPlan]] — the pure-SQL doorway to the native operator.
   * A pure node swap: the node's output is attribute-for-attribute
   * the stock left-outer join's (`l.* ++ r.*`, right side nullable),
-  * so no reference above needs patching.
-  *
-  * Registered twice, covering both session styles (the rule is a
-  * no-op where the other already ran): `injectResolutionRule` for
-  * `spark.sql.extensions=graft.GraftExtensions` sessions (fires
-  * during analysis, so every later analyzer/optimizer rule sees the
-  * final node), and `spark.experimental.extraOptimizations` via
-  * [[AsOfJoinNative.enableSql]] for plain sessions (fires at the end
-  * of optimization; Catalyst's own join rules leave the marker
-  * untouched because it is neither equi-join-extractable nor
-  * pushable, both sides referenced).
+  * so no reference above needs patching. Injected by
+  * `GraftExtensions` as a resolution rule, so every later analyzer
+  * and optimizer rule sees the final node.
   */
 object RewriteSqlAsOfJoin
     extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
@@ -190,15 +180,11 @@ object RewriteSqlAsOfJoin
   import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join}
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    // Inner is matched too: on the plain-session (enableSql) path the
-    // rewrite runs AFTER the main optimizer, and EliminateOuterJoin
-    // may already have converted the marker join LeftOuter→Inner
-    // (a null-filtering predicate above the join licenses it). The
-    // as-of LEFT result plus an IsNotNull(right key) filter IS the
-    // inner as-of (unmatched rows carry an all-null right side, and
-    // null keys never match) — also giving a direct `INNER JOIN ...
-    // ON asof_on(...)` statement the semantics it asks for instead
-    // of an unevaluable-marker planning crash.
+    // Inner is matched too: a direct `INNER JOIN ... ON asof_on(...)`
+    // gets the semantics it asks for instead of an unevaluable-marker
+    // planning crash. The as-of LEFT result plus an IsNotNull(right
+    // key) filter IS the inner as-of (unmatched rows carry an
+    // all-null right side, and null keys never match).
     case j @ Join(l, r, jt, Some(m: AsOfOnMarker), _)
         if j.resolved && (jt == LeftOuter || jt == Inner) =>
       def fromSides(a: Expression, b: Expression, what: String)
@@ -334,47 +320,14 @@ object AsOfJoinNative {
 
   /** DataFrame API for the native operator. Key and ts column names
     * must exist on both sides; the result is left.* plus the right's
-    * remaining columns as nullable payload. Registers the planner
-    * strategy on the session if `spark.sql.extensions` didn't.
+    * remaining columns as nullable payload. Needs a session built
+    * with `spark.sql.extensions=graft.GraftExtensions`, as every graft
+    * SQL feature does: the extension supplies the planner strategy
+    * and the pruning/pushdown rules for the node built here.
     */
-  private def ensureHooks(spark: org.apache.spark.sql.SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
-    if (!spark.experimental.extraOptimizations
-        .contains(PruneAsOfJoinColumns)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PruneAsOfJoinColumns
-    }
-    if (!spark.experimental.extraOptimizations
-        .contains(PushFilterThroughAsOfJoin)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PushFilterThroughAsOfJoin
-    }
-  }
-
-  /** Imperative enablement of the SQL surface on a session built
-    * WITHOUT `spark.sql.extensions`: registers the `asof_on` marker
-    * function and the join rewrite (as a user-provided optimizer
-    * rule — the latest extension point a plain session exposes).
-    * Extension-built sessions get both from [[graft.GraftExtensions]]
-    * instead, where the rewrite runs at resolution time.
-    */
-  def enableSql(spark: org.apache.spark.sql.SparkSession): Unit = {
-    ensureHooks(spark)
-    ColumnBridge.registerFunction(spark, "asof_on",
-      es => AsOfOnMarker(es(0), es(1), es(2)))
-    if (!spark.experimental.extraOptimizations.contains(RewriteSqlAsOfJoin)) {
-      spark.experimental.extraOptimizations =
-        RewriteSqlAsOfJoin +: spark.experimental.extraOptimizations
-    }
-  }
-
   def asOfMerge(left: DataFrame, right: DataFrame,
       key: String, ts: String): DataFrame = {
     val spark = left.sparkSession
-    ensureHooks(spark)
     val lPlan = left.queryExecution.analyzed
     // self-join hygiene: if the right side shares attribute ids with
     // the left (both derived from the same scan), re-alias it so the

@@ -255,9 +255,10 @@ object RewriteAsOfSyntax extends Rule[LogicalPlan]
   }
 }
 
-/** Delegating parser: [[AsOfSyntax.rewrite]] on plan-level entry
-  * points, everything else passes straight through. Injected via
-  * `GraftExtensions` (`injectParser`).
+/** Delegating parser: the sugar passes ([[AsOfSyntax]],
+  * [[StarModifierSyntax]], [[DistinctOnSyntax]], [[QualifySyntax]])
+  * on plan-level entry points, everything else passes straight
+  * through. Injected via `GraftExtensions` (`injectParser`).
   */
 class GraftSqlParser(
     delegate: org.apache.spark.sql.catalyst.parser.ParserInterface)
@@ -265,8 +266,7 @@ class GraftSqlParser(
 
   private def sugar(sqlText: String): String =
     QualifySyntax.rewrite(DistinctOnSyntax.rewrite(
-      StarRenameSyntax.rewrite(StarReplaceSyntax.rewrite(
-        ExcludeSyntax.rewrite(AsOfSyntax.rewrite(sqlText))))))
+      StarModifierSyntax.rewrite(AsOfSyntax.rewrite(sqlText))))
 
   override def parsePlan(sqlText: String): LogicalPlan =
     delegate.parsePlan(sugar(sqlText))

@@ -180,50 +180,3 @@ object DistinctOnSyntax {
     SqlEdits(sql, edits.result())
   }
 }
-
-/** `SELECT * EXCLUDE (cols)` — DuckDB's spelling of Spark's
-  * `* EXCEPT (cols)`. Pure token rename, applied only where the
-  * previous non-whitespace character is `*` (or a `.*` qualified
-  * star), so EXCLUDE stays usable as an identifier anywhere else.
-  */
-object ExcludeSyntax {
-  def rewrite(sql: String): String = {
-    if (!sql.toUpperCase(java.util.Locale.ROOT).contains("EXCLUDE"))
-      return sql
-    val toks = AsOfSyntax.lex(sql)
-    val spots = toks.filter { t =>
-      if (t.up != "EXCLUDE") false
-      else {
-        var p = t.start - 1
-        while (p >= 0 && Character.isWhitespace(sql.charAt(p))) p -= 1
-        (p >= 0 && sql.charAt(p) == '*') && {
-          // the '*' must itself be a STAR EXPANSION (follows SELECT/
-          // DISTINCT/ALL, ',', '(', or a qualifying '.'), not the
-          // multiplication operator — `price * exclude` with exclude
-          // as an ordinary column must survive untouched
-          var q = p - 1
-          while (q >= 0 && Character.isWhitespace(sql.charAt(q))) q -= 1
-          if (q < 0) true
-          else sql.charAt(q) match {
-            case ',' | '(' | '.' => true
-            case c if Character.isJavaIdentifierPart(c) =>
-              var w = q
-              while (w >= 0 &&
-                Character.isJavaIdentifierPart(sql.charAt(w))) w -= 1
-              val word = sql.substring(w + 1, q + 1)
-                .toUpperCase(java.util.Locale.ROOT)
-              word == "SELECT" || word == "DISTINCT" || word == "ALL"
-            case _ => false
-          }
-        }
-      }
-    }
-    if (spots.isEmpty) sql
-    else {
-      val sb = new StringBuilder(sql)
-      spots.sortBy(-_.start).foreach(t =>
-        sb.replace(t.start, t.end, "EXCEPT"))
-      sb.toString
-    }
-  }
-}

@@ -72,18 +72,6 @@ object Sketches {
 
   def wordShingles(text: Column, n: Int): Column =
     column(ShinglesExpr(expression(text), n))
-
-  /** Expose the native expressions to the SQL front-end:
-    * `simhash64(arr)`, `minhash_sig(arr, k)`, `cosine_sim(a, b)`.
-    */
-  def registerSql(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.registerFunction
-    registerFunction(spark, "simhash64", es => SimHash64Expr(es.head))
-    registerFunction(spark, "minhash_sig", es => MinHashSigExpr(es.head,
-      es(1).eval().asInstanceOf[Number].intValue()))
-    registerFunction(spark, "cosine_sim",
-      es => CosineSimExpr(es.head, es(1)))
-  }
 }
 
 /** Word n-gram shingles of a space-separated string, as one native

@@ -1,7 +1,7 @@
 package graft.plans
 
 /** The ONE edit-application algorithm behind every injected-grammar
-  * rewriter (ASOF / QUALIFY / DISTINCT ON / * REPLACE / * RENAME):
+  * rewriter (ASOF / QUALIFY / DISTINCT ON / star modifiers):
   * positional splices applied right-to-left so earlier positions
   * stay valid.
   *

@@ -57,11 +57,11 @@ object JoinExtQueries {
     },
 
     // The same as-of semantics a third way: PURE SQL through the
-    // asof_on marker + join rewrite (AsOfJoinNative.enableSql) — the
-    // surface a spark-sql / JDBC user gets. Shares the composition
-    // query's oracle; all three implementations must agree.
+    // asof_on marker + join rewrite (RewriteSqlAsOfJoin, injected by
+    // GraftExtensions) — the surface a spark-sql / JDBC user gets.
+    // Shares the composition query's oracle; all three
+    // implementations must agree.
     "q_asof_join_sql" -> { (s, dir) =>
-      graft.plans.AsOfJoinNative.enableSql(s)
       t(s, dir, "events").createOrReplaceTempView("graft_asof_events")
       s.sql("""
         WITH p AS (

@@ -446,87 +446,67 @@ class TrackPointReader(file: String, required: StructType,
   override def close(): Unit = in.close()
 }
 
+/** A derived data set written once per data dir to
+  * `target/fixtures/<tag>_<data dir name>` (inside the repo), then
+  * reused: memoized per dir in this JVM, and skipped across JVMs once
+  * its `_SUCCESS` marker exists. The path is keyed by the data dir's
+  * NAME, so two different dirs of one name share a fixture.
+  */
+class DirFixture(tag: String)(
+    write: (org.apache.spark.sql.SparkSession, String, String) => Unit) {
+  private val done = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** The fixture's absolute path for data dir `dir`, written first if
+    * absent: `write(session, dir, out)`. */
+  def ensure(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    done.computeIfAbsent(dir, { _ =>
+      val out = new java.io.File(
+        s"target/fixtures/${tag}_${new java.io.File(dir).getName}")
+        .getAbsolutePath
+      if (!new java.io.File(out, "_SUCCESS").exists()) write(s, dir, out)
+      out
+    })
+}
+
 /** Deterministic JSONL fixture for the DSv2 source, derived from the
   * `events` table (TESTDATA.md) so the DuckDB oracle can recompute
   * the same result straight from the parquet: entity/event ids, a
   * derived callsign, epoch-ms time, a position derived from `value`,
-  * and the emergency flag. Written once per scale factor under
-  * `target/fixtures` (inside the repo), then reused.
+  * and the emergency flag.
   */
-object TrackPointFixture {
-  import org.apache.spark.sql.{DataFrame, SparkSession}
+object TrackPointFixture extends DirFixture("trackpoints")({ (s, dir, out) =>
   import org.apache.spark.sql.functions._
-
-  private val done = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def ensure(s: SparkSession, dir: String): String =
-    done.computeIfAbsent(dir, { _ =>
-      val out = new java.io.File(
-        s"target/fixtures/trackpoints_${new java.io.File(dir).getName}")
-        .getAbsolutePath
-      if (!new java.io.File(out, "_SUCCESS").exists()) {
-        graft.Tables(s, dir, "events")
-          .select(to_json(struct(
-            col("user_id").as("entity_id"),
-            col("event_id"),
-            concat(lit("u"), col("user_id")).as("name"),
-            unix_millis(col("ts")).as("ts"),
-            col("value").as("lon"),
-            (-col("value")).as("lat"),
-            (col("event_type") === "error").as("emergency"))).as("value"))
-          .write.mode("overwrite").text(out)
-      }
-      out
-    })
-}
+  graft.Tables(s, dir, "events")
+    .select(to_json(struct(
+      col("user_id").as("entity_id"),
+      col("event_id"),
+      concat(lit("u"), col("user_id")).as("name"),
+      unix_millis(col("ts")).as("ts"),
+      col("value").as("lon"),
+      (-col("value")).as("lat"),
+      (col("event_type") === "error").as("emergency"))).as("value"))
+    .write.mode("overwrite").text(out)
+})
 
 /** Deterministic CSV fixture (header + explicit schema read-back),
   * derived from `events` like [[TrackPointFixture]] — covers the
   * delimited-text leg of the source matrix.
   */
-object CsvFixture {
-  import org.apache.spark.sql.SparkSession
+object CsvFixture extends DirFixture("events_csv")({ (s, dir, out) =>
   import org.apache.spark.sql.functions._
+  graft.Tables(s, dir, "events")
+    .select(col("event_id"), col("user_id"),
+      unix_millis(col("ts")).as("t"),
+      col("event_type"), col("value"))
+    .write.mode("overwrite").option("header", "true").csv(out)
+})
 
-  private val done = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def ensure(s: SparkSession, dir: String): String =
-    done.computeIfAbsent(dir, { _ =>
-      val out = new java.io.File(
-        s"target/fixtures/events_csv_${new java.io.File(dir).getName}")
-        .getAbsolutePath
-      if (!new java.io.File(out, "_SUCCESS").exists()) {
-        graft.Tables(s, dir, "events")
-          .select(col("event_id"), col("user_id"),
-            unix_millis(col("ts")).as("t"),
-            col("event_type"), col("value"))
-          .write.mode("overwrite").option("header", "true").csv(out)
-      }
-      out
-    })
-}
-
-/** ORC fixture: the `part` table rewritten as ORC under
-  * target/fixtures, once per SF (idempotent via _SUCCESS, like
-  * [[CsvFixture]]). ORC ships in Spark itself — the columnar
-  * alternative when a lake standardizes on it — and reads through
-  * the same DSv2 scan machinery as parquet (pushed filters, pruned
-  * columns, vectorized reader), which SourcesSpec asserts.
+/** ORC fixture: the `part` table rewritten as ORC. ORC ships in Spark
+  * itself — the columnar alternative when a lake standardizes on it —
+  * and reads through the same DSv2 scan machinery as parquet (pushed
+  * filters, pruned columns, vectorized reader), which SourcesSpec
+  * asserts.
   */
-object OrcFixture {
-  import org.apache.spark.sql.SparkSession
-
-  private val done = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def ensure(s: SparkSession, dir: String): String =
-    done.computeIfAbsent(dir, { _ =>
-      val out = new java.io.File(
-        s"target/fixtures/part_orc_${new java.io.File(dir).getName}")
-        .getAbsolutePath
-      if (!new java.io.File(out, "_SUCCESS").exists()) {
-        graft.Tables(s, dir, "part")
-          .write.mode("overwrite").orc(out)
-      }
-      out
-    })
-}
+object OrcFixture extends DirFixture("part_orc")({ (s, dir, out) =>
+  graft.Tables(s, dir, "part").write.mode("overwrite").orc(out)
+})

@@ -34,13 +34,4 @@ object ColumnBridge {
   def scalarSubquery(df: org.apache.spark.sql.DataFrame): Column =
     column(org.apache.spark.sql.catalyst.expressions.ScalarSubquery(
       df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan))
-
-  /** Register a temp SQL function backed by a catalyst Expression
-    * builder (functionRegistry is also sql-private in Spark 4).
-    */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession,
-      name: String, builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
 }

@@ -202,8 +202,7 @@ class JoinExtSpec extends SparkSpec {
       "pushdown result is not row-for-row identical to composition")
   }
 
-  test("SQL asof_on (plain session, optimizer-phase rewrite) == API merge") {
-    graft.plans.AsOfJoinNative.enableSql(spark)
+  test("SQL asof_on (resolution-phase rewrite) == API merge") {
     val ev = Tables(spark, sf("0.01"), "events")
     ev.createOrReplaceTempView("jx_asof_events")
     val viaSql = spark.sql("""

@@ -107,25 +107,25 @@ class QualifySpec extends SparkSpec {
   }
 
   test("star-EXCLUDE maps to star-EXCEPT; identifiers untouched") {
-    assert(graft.plans.ExcludeSyntax.rewrite(
+    assert(graft.plans.StarModifierSyntax.rewrite(
       "SELECT * EXCLUDE (a, b) FROM t") ===
       "SELECT * EXCEPT (a, b) FROM t")
-    assert(graft.plans.ExcludeSyntax.rewrite(
+    assert(graft.plans.StarModifierSyntax.rewrite(
       "SELECT t.* EXCLUDE (a) FROM t") ===
       "SELECT t.* EXCEPT (a) FROM t")
     // a column named exclude stays a column
     val s = "SELECT exclude FROM t WHERE exclude > 1"
-    assert(graft.plans.ExcludeSyntax.rewrite(s) === s)
+    assert(graft.plans.StarModifierSyntax.rewrite(s) === s)
     // ...including as a MULTIPLICATION operand after '*'
     val m = "SELECT price * exclude FROM t"
-    assert(graft.plans.ExcludeSyntax.rewrite(m) === m)
+    assert(graft.plans.StarModifierSyntax.rewrite(m) === m)
     val m2 = "SELECT (a + b) * exclude FROM t"
-    assert(graft.plans.ExcludeSyntax.rewrite(m2) === m2)
+    assert(graft.plans.StarModifierSyntax.rewrite(m2) === m2)
     // star positions that MUST rewrite: after SELECT, ',', and '.'
-    assert(graft.plans.ExcludeSyntax.rewrite(
+    assert(graft.plans.StarModifierSyntax.rewrite(
       "SELECT a, * EXCLUDE (b) FROM t") ===
       "SELECT a, * EXCEPT (b) FROM t")
-    assert(graft.plans.ExcludeSyntax.rewrite(
+    assert(graft.plans.StarModifierSyntax.rewrite(
       "SELECT DISTINCT * EXCLUDE (b) FROM t") ===
       "SELECT DISTINCT * EXCEPT (b) FROM t")
     Tables.registerViews(spark, sf())
@@ -201,9 +201,42 @@ class QualifySpec extends SparkSpec {
       "SELECT o.* REPLACE (1 AS o_orderkey) FROM orders o").collect())
     assert(qual.getMessage.contains("qualified"), s"got: ${qual.getMessage}")
     // a column named replace is untouched
-    assert(graft.plans.StarReplaceSyntax.rewrite(
+    assert(graft.plans.StarModifierSyntax.rewrite(
       "SELECT replace FROM t WHERE replace > 1") ===
       "SELECT replace FROM t WHERE replace > 1")
+  }
+
+  test("star modifiers after SELECT DISTINCT / ALL") {
+    Tables.registerViews(spark, sf())
+    val src = "(SELECT o_orderstatus, o_orderpriority FROM orders)"
+    val replaced = spark.sql(
+      s"""SELECT DISTINCT * REPLACE (lower(o_orderstatus) AS o_orderstatus)
+          FROM $src""")
+    val byHand = spark.sql(
+      s"""SELECT DISTINCT lower(o_orderstatus) AS o_orderstatus,
+                 o_orderpriority FROM $src""")
+    assert(replaced.columns.toSeq == byHand.columns.toSeq)
+    assert(replaced.count() == byHand.count() &&
+      replaced.exceptAll(byHand).isEmpty && byHand.exceptAll(replaced).isEmpty)
+    // RENAME keeps the column's position and value
+    val renamed = spark.sql(
+      s"SELECT DISTINCT * RENAME (o_orderstatus AS status) FROM $src")
+    val plain = spark.sql(s"SELECT DISTINCT * FROM $src")
+    assert(renamed.columns.toSeq == Seq("status", "o_orderpriority"))
+    assert(renamed.exceptAll(plain).isEmpty && plain.exceptAll(renamed).isEmpty)
+    val all = spark.sql(
+      s"SELECT ALL * REPLACE (lower(o_orderstatus) AS o_orderstatus) FROM $src")
+    assert(all.columns.toSeq == byHand.columns.toSeq &&
+      all.count() == spark.sql(s"SELECT * FROM $src").count())
+  }
+
+  test("star REPLACE inside a function call fails loudly") {
+    Tables.registerViews(spark, sf())
+    // the marker is consumed only in a select list; left inside
+    // struct(...) it must fail, not add a __graft_r_ field
+    intercept[Exception](spark.sql(
+      "SELECT struct(* REPLACE (o_orderkey + 1 AS o_orderkey)) AS s " +
+        "FROM orders").collect())
   }
 
   test("star-RENAME keeps position and value; new name orders") {
@@ -239,7 +272,7 @@ class QualifySpec extends SparkSpec {
     assert(qual.getMessage.contains("qualified"),
       s"got: ${qual.getMessage}")
     // ALTER-style RENAME text (no star) is untouched
-    assert(graft.plans.StarRenameSyntax.rewrite(
+    assert(graft.plans.StarModifierSyntax.rewrite(
       "ALTER TABLE t RENAME COLUMN a TO b") ===
       "ALTER TABLE t RENAME COLUMN a TO b")
   }

@@ -1,0 +1,44 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source lints over `src/main/scala`: patterns that may appear only
+  * at named sites, so a copy of wiring that has one home fails here.
+  */
+class SourceLintSpec extends AnyFunSuite {
+
+  /** Files (relative to `src/main/scala`) matching `re`, with their
+    * match counts. */
+  private def sites(re: scala.util.matching.Regex): Map[String, Int] = {
+    val root = Paths.get("src/main/scala")
+    Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map((p: Path) =>
+        root.relativize(p).toString ->
+          re.findAllIn(new String(Files.readAllBytes(p), "UTF-8")).size)
+      .filter(_._2 > 0).toMap
+  }
+
+  // The keyed fold is written once. Every streaming twin goes through
+  // `graft.streaming.KeyedFold`; the only other group-state operator
+  // is `TrackStream.latestWithTtl`, which needs Update mode and an
+  // event-time timeout. A new twin that copies the `groupByKey` →
+  // `flatMapGroupsWithState` wiring fails here.
+  test("flatMapGroupsWithState is called only by KeyedFold and latestWithTtl") {
+    val found = sites("""\.(flatMap|map)GroupsWithState\b""".r)
+    assert(found == Map(
+      "graft/streaming/KeyedFold.scala" -> 1,
+      "graft/streaming/TrackStream.scala" -> 1),
+      s"group-state call sites outside the fold helper: $found")
+  }
+
+  // GraftExtensions is the one registration path: no imperative
+  // `spark.experimental` strategies/rules and no temp functions, which
+  // would change a shared session mid-run and drift from the extension.
+  test("graft registers into a session only through GraftExtensions") {
+    val found = sites("""spark\.experimental|createOrReplaceTempFunction""".r)
+    assert(found.isEmpty, s"registration outside GraftExtensions: $found")
+  }
+}

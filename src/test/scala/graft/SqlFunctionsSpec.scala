@@ -2,15 +2,14 @@ package graft
 
 import graft.plans.Sketches
 
-/** The native expressions registered into the SQL front-end
-  * (SparkSessionExtensions-style function injection, done at runtime
-  * via the function registry).
+/** The native expressions GraftExtensions injects into the SQL
+  * front-end (`injectFunction`), on the suite session that
+  * `spark.sql.extensions=graft.GraftExtensions` builds.
   */
 class SqlFunctionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("cosine_sim / simhash64 / minhash_sig callable from spark.sql") {
-    Sketches.registerSql(spark)
     Tables.registerViews(spark, sf())
     val cos = spark.sql("""
       SELECT cosine_sim(a.embedding, b.embedding) AS c
@@ -62,9 +61,8 @@ class SqlFunctionsSpec extends SparkSpec {
       assert(row.getLong(1) != 0L)
       assert(row.getSeq[Long](2).size == 4)
       assert(row.getSeq[String](3) == Seq("a b c", "b c d"))
-      // asof_on marker: the injected RESOLUTION rule (analysis-time
-      // path, vs the extraOptimizations path JoinExtSpec covers)
-      // rewrites the LEFT JOIN into the native merge
+      // asof_on marker: the injected RESOLUTION rule rewrites the
+      // LEFT JOIN into the native merge
       val asof = s2.sql("""
         WITH l AS (SELECT * FROM VALUES
             (1, 10L, 'x1'), (1, 20L, 'x2'), (2, 5L, 'y') AS l(k, ts, lv)),
