@@ -44,6 +44,22 @@ import graft.streaming.SubmitSink
   * each a driver round trip that costs more than the rows do. A rate
   * at which one task per batch becomes the bottleneck would need
   * wider batches again.
+  *
+  * Filesystem: [[pipeline]] resolves `file:` to [[NioLocalFs]]'s
+  * fork-free classes on its session. Hadoop's own local filesystem,
+  * without libhadoop, starts a `chmod`, `ls` or `readlink` child
+  * process for every permission or link-status call, about 100 of
+  * them per micro-batch (about 20 per checkpoint-log commit, about
+  * 19 per parquet write), about a fifth of each trigger's time.
+  * [[NioLocalFs.install]] sets three session keys before the query
+  * starts: `fs.file.impl` (the FileSystem class),
+  * `fs.AbstractFileSystem.file.impl` (the FileContext class the
+  * checkpoint logs rename through) and `fs.file.impl.disable.cache`
+  * (the SparkContext has already cached its `file` FileSystem by the
+  * time `pipeline` runs). The spool scan, the checkpoint logs, the
+  * state-log read and both sink writes then share that one
+  * filesystem; other sessions of the SparkContext keep the
+  * classpath's `file` classes.
   */
 object Serve {
 
@@ -56,10 +72,14 @@ object Serve {
     * the StateFirst processed-log anti-join), while a NEWER point
     * for the same entity is a new key and flows through — the
     * reference's keyed upsert granularity (`task.ts:148`).
+    *
+    * `spark` keeps the fork-free `file:` classes afterwards (see the
+    * object doc); the query runs on a copy of its conf taken at start.
     */
   def pipeline(spark: SparkSession, spoolDir: String,
       checkpointDir: String, submitDir: String, stateDir: String,
-      order: SubmitSink.Order = SubmitSink.StateFirst): StreamingQuery =
+      order: SubmitSink.Order = SubmitSink.StateFirst): StreamingQuery = {
+    NioLocalFs.install(spark)
     JsonSources.webhookToCot(
         JsonSources.decodeWebhook(
           spark.readStream.text(spoolDir), "value"))
@@ -73,6 +93,7 @@ object Serve {
         ()
       }
       .start()
+  }
 
   /** One micro-batch as the sink receives it: a narrow `coalesce(1)`
     * (no shuffle), then the in-batch dedup by message identity. A

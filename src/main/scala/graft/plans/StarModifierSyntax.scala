@@ -32,9 +32,12 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * multiplication operator, so `price * exclude` with `exclude` an
   * ordinary column (or a `replace(...)` call) survives untouched.
   *
-  * Loud failures: qualified-star REPLACE/RENAME (`t.* REPLACE`), an
-  * item without `AS`, and a target column that does not exist in the
-  * star expansion.
+  * Loud failures: qualified-star REPLACE/RENAME (`t.* REPLACE`),
+  * REPLACE/RENAME on a call-argument star (`struct(* REPLACE (...))`;
+  * EXCLUDE there is Spark's valid `struct(* EXCEPT (a))`), a modifier
+  * list followed by another modifier (`* EXCLUDE (a) REPLACE (...)`),
+  * an item without `AS`, and a target column that does not exist in
+  * the star expansion.
   */
 object StarModifierSyntax {
 
@@ -55,15 +58,17 @@ object StarModifierSyntax {
       p
     }
     // is the `*` at starPos a star expansion? None = no (not a `*`,
-    // or multiplication), Some(true) = a qualified `t.*`
-    def starSite(starPos: Int): Option[Boolean] =
+    // or multiplication); else the character before it: '.' for a
+    // qualified `t.*`, '(' for a call argument, ' ' for a select-list
+    // star (after SELECT, DISTINCT, ALL or a comma)
+    def starSite(starPos: Int): Option[Char] =
       if (starPos < 0 || sql.charAt(starPos) != '*') None
       else {
         val q = prevNonWs(starPos - 1)
-        if (q < 0) Some(false)
+        if (q < 0) Some(' ')
         else sql.charAt(q) match {
-          case '.' => Some(true)
-          case ',' | '(' => Some(false)
+          case c @ ('.' | '(') => Some(c)
+          case ',' => Some(' ')
           case c if Character.isJavaIdentifierPart(c) =>
             var w = q
             while (w >= 0 && Character.isJavaIdentifierPart(sql.charAt(w)))
@@ -71,27 +76,33 @@ object StarModifierSyntax {
             val word = sql.substring(w + 1, q + 1)
               .toUpperCase(java.util.Locale.ROOT)
             if (word == "SELECT" || word == "DISTINCT" || word == "ALL")
-              Some(false)
+              Some(' ')
             else None
           case _ => None
         }
       }
+    // the parenthesized list after the modifier at toks(ti): where its
+    // `(` is and the `)` token closing it (the first `)` back at the
+    // keyword's depth; the lexer emits `)` with the depth AFTER
+    // closing), or None when no `(` follows
+    def list(ti: Int): Option[(Int, AsOfSyntax.Tok)] = {
+      val t = toks(ti)
+      var openPos = t.end
+      while (openPos < sql.length &&
+        Character.isWhitespace(sql.charAt(openPos))) openPos += 1
+      if (openPos >= sql.length || sql.charAt(openPos) != '(') None
+      else Some(openPos -> toks.drop(ti + 1)
+        .find(x => x.up == ")" && x.depth == t.depth)
+        .getOrElse(fail(t.up, s"unclosed ${t.up} list")))
+    }
     // `(a AS b, ...)` after the modifier at toks(ti) → (text before
     // AS, text after AS) per item, split on commas at the list's own
     // depth; plus the list's end
     def items(ti: Int, usage: String): (Seq[(String, String)], Int) = {
       val t = toks(ti)
       val kind = t.up
-      var openPos = t.end
-      while (openPos < sql.length &&
-        Character.isWhitespace(sql.charAt(openPos))) openPos += 1
-      if (openPos >= sql.length || sql.charAt(openPos) != '(')
-        fail(kind, s"$kind must be followed by a parenthesized list")
-      // matching close: first `)` token after the keyword back at its
-      // depth (the lexer emits `)` with the depth AFTER closing)
-      val closeTok = toks.drop(ti + 1)
-        .find(x => x.up == ")" && x.depth == t.depth)
-        .getOrElse(fail(kind, s"unclosed $kind list"))
+      val (openPos, closeTok) = list(ti).getOrElse(
+        fail(kind, s"$kind must be followed by a parenthesized list"))
       val inner = toks.filter(x => x.start > openPos &&
         x.end <= closeTok.start && x.depth == t.depth + 1)
       val cuts = inner.filter(_.up == ",")
@@ -110,12 +121,22 @@ object StarModifierSyntax {
     toks.indices.filter(ti => Modifiers(toks(ti).up)).foreach { ti =>
       val t = toks(ti)
       val starPos = prevNonWs(t.start - 1)
-      starSite(starPos).foreach { qualified =>
+      starSite(starPos).foreach { site =>
+        // one modifier per star: a second one after the list would
+        // reach Spark's parser as DuckDB-only grammar
+        list(ti).foreach { case (_, close) =>
+          if (toks.find(_.start >= close.end).exists(x => Modifiers(x.up)))
+            fail(t.up, "chained star modifiers are not supported")
+        }
         if (t.up == "EXCLUDE")
           edits += Edit(t.start, t.end - t.start, "EXCEPT")
         else {
-          if (qualified) fail(t.up,
+          if (site == '.') fail(t.up,
             s"qualified-star ${t.up} (t.* ${t.up}) is not supported")
+          // the markers are consumed only in a select list
+          if (site == '(') fail(t.up,
+            s"${t.up} on a star inside a function call " +
+              s"(f(* ${t.up} ...)) is not supported")
           val replace = t.up == "REPLACE"
           val (pairs, end) =
             items(ti, if (replace) "expr AS col" else "col AS newname")
@@ -142,9 +163,10 @@ object StarModifierSyntax {
 
 /** Marker carrying a REPLACE (`rename = false`) or RENAME item
   * through analysis. [[RewriteStarModifiers]] consumes it in a
-  * select-list Project; anywhere else (a `struct(* REPLACE (...))`
-  * argument star) it is left in the plan, and being Unevaluable it
-  * fails the query loudly instead of returning an extra field.
+  * select-list Project; the rewrite rejects a call-argument star, and
+  * a marker left anywhere else (a hand-written `graft_replace(...)`)
+  * is Unevaluable, so it fails the query instead of returning an
+  * extra field.
   */
 case class StarModifierMarker(child: Expression, rename: Boolean)
     extends UnaryExpression with Unevaluable {

@@ -59,7 +59,8 @@ object SubmitSink {
 
   /** Keys already persisted to the state log, or None when the log
     * doesn't exist yet. The existence check goes through the
-    * session's Hadoop FileSystem — a driver-local
+    * session's Hadoop conf, so it resolves the same FileSystem as
+    * the log read and the two writes. A driver-local
     * `java.nio.file.Files.exists` would be false for every
     * non-local stateDir (hdfs://, s3a://) and silently disable the
     * StateFirst anti-join guard, turning at-most-once into
@@ -78,8 +79,7 @@ object SubmitSink {
   private def processedKeys(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, keyField: StructField): Option[DataFrame] = {
     val path = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = path.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     val committed = fs.exists(path) &&
       fs.listStatus(path).exists { st =>
         val n = st.getPath.getName

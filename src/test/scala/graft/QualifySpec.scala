@@ -232,11 +232,38 @@ class QualifySpec extends SparkSpec {
 
   test("star REPLACE inside a function call fails loudly") {
     Tables.registerViews(spark, sf())
-    // the marker is consumed only in a select list; left inside
-    // struct(...) it must fail, not add a __graft_r_ field
-    intercept[Exception](spark.sql(
+    // the marker is consumed only in a select list; inside struct(...)
+    // the rewrite must refuse it, not add a __graft_r_ field
+    val e = intercept[IllegalArgumentException](spark.sql(
       "SELECT struct(* REPLACE (o_orderkey + 1 AS o_orderkey)) AS s " +
         "FROM orders").collect())
+    assert(e.getMessage.contains(
+      "star-REPLACE syntax: REPLACE on a star inside a function call"),
+      s"got: ${e.getMessage}")
+    val r = intercept[IllegalArgumentException](spark.sql(
+      "SELECT struct(* RENAME (o_orderkey AS k)) AS s FROM orders"))
+    assert(r.getMessage.contains("star-RENAME syntax: RENAME on a star " +
+      "inside a function call"), s"got: ${r.getMessage}")
+    // EXCLUDE there is Spark's own struct(* EXCEPT (...))
+    val kept = spark.sql(
+      "SELECT struct(* EXCLUDE (o_orderstatus)) AS s FROM orders")
+    assert(kept.schema("s").dataType
+      .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq ==
+      spark.table("orders").columns.toSeq.filter(_ != "o_orderstatus"))
+  }
+
+  test("chained star modifiers fail with a graft message") {
+    Tables.registerViews(spark, sf())
+    for ((sql, kind) <- Seq(
+        "SELECT * REPLACE (o_orderkey + 1 AS o_orderkey) " +
+          "RENAME (o_custkey AS c) FROM orders" -> "REPLACE",
+        "SELECT * EXCLUDE (o_orderstatus) " +
+          "REPLACE (o_orderkey + 1 AS o_orderkey) FROM orders" -> "EXCLUDE")) {
+      val e = intercept[IllegalArgumentException](spark.sql(sql))
+      assert(e.getMessage.contains(
+        s"star-$kind syntax: chained star modifiers are not supported"),
+        s"got: ${e.getMessage}")
+    }
   }
 
   test("star-RENAME keeps position and value; new name orders") {

@@ -158,4 +158,39 @@ class ServeSpec extends SparkSpec {
       ra.close(); rb.close()
     }
   }
+
+  test("Serve pipeline resolves file: to the fork-free classes on its session only") {
+    val uri = java.net.URI.create("file:///")
+    def classes(s: org.apache.spark.sql.SparkSession) = {
+      val conf = s.sessionState.newHadoopConf()
+      (org.apache.hadoop.fs.FileSystem.get(uri, conf).getClass,
+        org.apache.hadoop.fs.AbstractFileSystem.get(uri, conf).getClass)
+    }
+    val s = spark.newSession()
+    // what the classpath's service files give `file:` (with Hive on it,
+    // Hive's ProxyLocalFileSystem over Hadoop's LocalFileSystem)
+    val hadoopDefault = classes(s)
+    assert(hadoopDefault._2 == classOf[org.apache.hadoop.fs.local.LocalFs],
+      hadoopDefault)
+    assert(hadoopDefault._1 != classOf[NioLocalFileSystem])
+    val root = java.nio.file.Files.createTempDirectory("serveFs").toFile
+    def dir(n: String) = new java.io.File(root, n).getAbsolutePath
+    val spool = new java.io.File(dir("spool")); spool.mkdirs()
+    val staged = new java.io.File(spool, ".part-1")
+    java.nio.file.Files.write(staged.toPath,
+      (item(7, 1704844800000L) + "\n").getBytes("UTF-8"))
+    java.nio.file.Files.move(staged.toPath,
+      new java.io.File(spool, "part-1").toPath,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    val q = Serve.pipeline(s, spool.getAbsolutePath,
+      dir("ckpt"), dir("submit"), dir("state"))
+    try {
+      q.processAllAvailable()
+      assert(classes(s) == (classOf[NioLocalFileSystem], classOf[NioLocalFs]))
+      assert(classes(spark.newSession()) == hadoopDefault)
+      // the batch went through the checkpoint logs and both writes
+      assert(s.read.parquet(dir("submit")).count() == 1)
+      assert(s.read.parquet(dir("state")).count() == 1)
+    } finally q.stop()
+  }
 }

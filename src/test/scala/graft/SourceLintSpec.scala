@@ -41,4 +41,20 @@ class SourceLintSpec extends AnyFunSuite {
     val found = sites("""spark\.experimental|createOrReplaceTempFunction""".r)
     assert(found.isEmpty, s"registration outside GraftExtensions: $found")
   }
+
+  // Nothing in the program starts a child process: a fork per call is
+  // the cost NioLocalFs takes out of Hadoop's local filesystem.
+  test("no source file starts a child process") {
+    val found = sites(("""ProcessBuilder|sys\.process|""" +
+      """Runtime\.getRuntime\.exec|org\.apache\.hadoop\.util\.Shell""").r)
+    assert(found.isEmpty, s"process spawns: $found")
+  }
+
+  // `file:` is rebound in one place, per session (NioLocalFs.install);
+  // a SparkContext-wide or second copy of the keys fails here.
+  test("the file: filesystem keys are set only by NioLocalFs.install") {
+    val found = sites(""""fs\.(AbstractFileSystem\.)?file\.impl"""".r)
+    assert(found == Map("graft/NioLocalFs.scala" -> 2),
+      s"file: filesystem keys outside NioLocalFs.install: $found")
+  }
 }
