@@ -35,8 +35,8 @@ import graft.plans.{CosineSimExpr, MinHashSigExpr, SimHash64Expr, ShinglesExpr}
   * [[graft.plans.PushFilterThroughAsOfJoin]] and the conf-gated
   * [[graft.plans.AutoBloomJoin]].
   *
-  * Resolution rules: [[graft.plans.RewriteSqlAsOfJoin]] (`asof_on`),
-  * [[graft.plans.RewriteAsOfSyntax]] (`ASOF JOIN`) and
+  * Resolution rules: [[graft.plans.RewriteSqlAsOfJoin]] (`asof_on`
+  * and `ASOF JOIN`, both lowered to the as-of node in one step) and
   * [[graft.plans.RewriteStarModifiers]] (star REPLACE / RENAME).
   *
   * Parser: [[graft.plans.GraftSqlParser]], the text sugar for
@@ -80,16 +80,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("asof_on",
         "asof_on(lk = rk, lts, rts) - as-of join marker (join ON only)"),
       (es: Seq[Expression]) => graft.plans.AsOfOnMarker(es.head, es(1), es(2))))
+    // lowers asof_on and asof_cond (below) to the as-of node
     ext.injectResolutionRule(_ => graft.plans.RewriteSqlAsOfJoin)
     // first-class `ASOF [LEFT] JOIN ... ON ...` syntax: a delegating
     // parser wraps the ON condition in asof_cond(...), which resolves
-    // through this marker function and lowers in RewriteAsOfSyntax
+    // through this marker function
     ext.injectParser((_, delegate) => new graft.plans.GraftSqlParser(delegate))
     ext.injectFunction((FunctionIdentifier("asof_cond"),
       info("asof_cond",
         "asof_cond(cond) - ASOF JOIN condition marker (parser-internal)"),
       (es: Seq[Expression]) => graft.plans.AsOfCondMarker(es.head)))
-    ext.injectResolutionRule(_ => graft.plans.RewriteAsOfSyntax)
     // `SELECT * REPLACE (expr AS col)` / `SELECT * RENAME (col AS new)`
     // — star expansion with in-place substitution or rename (parser
     // sugar + marker + one resolution swap)

@@ -59,7 +59,11 @@ import graft.streaming.SubmitSink
   * time `pipeline` runs). The spool scan, the checkpoint logs, the
   * state-log read and both sink writes then share that one
   * filesystem; other sessions of the SparkContext keep the
-  * classpath's `file` classes.
+  * classpath's `file` classes. [[pipeline]] also sets
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` to
+  * `Int.MaxValue`: a spool batch of any size is listed on the driver
+  * through that filesystem, never by a Spark job of one task per file
+  * (the default for a batch of more than 32 files).
   */
 object Serve {
 
@@ -73,13 +77,16 @@ object Serve {
     * for the same entity is a new key and flows through — the
     * reference's keyed upsert granularity (`task.ts:148`).
     *
-    * `spark` keeps the fork-free `file:` classes afterwards (see the
-    * object doc); the query runs on a copy of its conf taken at start.
+    * `spark` keeps the fork-free `file:` classes and the driver-side
+    * listing threshold afterwards (see the object doc); the query runs
+    * on a copy of its conf taken at start.
     */
   def pipeline(spark: SparkSession, spoolDir: String,
       checkpointDir: String, submitDir: String, stateDir: String,
       order: SubmitSink.Order = SubmitSink.StateFirst): StreamingQuery = {
     NioLocalFs.install(spark)
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
+      Int.MaxValue.toLong)
     JsonSources.webhookToCot(
         JsonSources.decodeWebhook(
           spark.readStream.text(spoolDir), "value"))

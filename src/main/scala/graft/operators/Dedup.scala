@@ -45,6 +45,14 @@ object Dedup {
       .agg(min(col(idCol)).as(idCol))
       .drop("text_md5")
 
+  /** Distinct word n-grams of `text`, for every shingle-based path. */
+  private[graft] def shingleSet(text: Column, n: Int): Column =
+    array_distinct(wordShingles(text, n))
+
+  /** Exact Jaccard of two distinct shingle sets, as a double. */
+  private[graft] def jaccard(a: Column, b: Column): Column =
+    size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
+
   /** Distinct word-n-gram shingle set per doc, persisted. All
     * shingle-based dedup paths (Jaccard, MinHash-LSH) start from this
     * plan; Spark's CacheManager matches the identical sub-plan across
@@ -61,7 +69,7 @@ object Dedup {
     // — every downstream explode/join map side. No-op at scale.
     graft.CachedPlans.cache(
       graft.Tables.fanOut(docs, col(idCol)).select(col(idCol).as("id"),
-        array_distinct(wordShingles(col(textCol), n)).as("shs")))
+        shingleSet(col(textCol), n).as("shs")))
 
   /** Exact n-gram Jaccard near-dup pairs, prefix-filtered.
     *
@@ -223,7 +231,7 @@ object Dedup {
       idCol: String, textCol: String, n: Int): DataFrame = {
     def hashedSets(df: DataFrame) = df
       .select(col(idCol).as("id"),
-        transform(array_distinct(wordShingles(col(textCol), n)),
+        transform(shingleSet(col(textCol), n),
           s => xxhash64(s)).as("hs"))
       .filter(size(col("hs")) > 0)
     val benchSh = hashedSets(bench)
@@ -242,33 +250,39 @@ object Dedup {
           .as("contaminated_frac"))
   }
 
-  /** LSH band-key rows for a corpus: `(id, band, band_key)` — bands
-    * slices of the k-slot minhash signature. This IS the persistable
-    * dedup index: write it (bucketed by band_key) once per corpus
-    * snapshot and every future batch matches against it without
-    * re-sketching the corpus ([[minhashLshIncremental]]).
+  /** The signature-to-band generator of batch and stream: per row of
+    * `sets` with a non-empty `shs`, the `keep` columns plus one
+    * `(band, band_key)` row per slice of the k-slot MinHash signature.
     */
-  def lshBandKeys(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, k: Int, bands: Int): DataFrame = {
+  private[graft] def bandRows(sets: DataFrame, keep: Seq[String],
+      k: Int, bands: Int): DataFrame = {
     require(k % bands == 0, "k must be a multiple of bands")
     val r = k / bands
+    val kept = keep.map(col)
     // empty shingle sets are excluded (they'd all collide on the
     // MaxValue signature; the oracle, where such docs simply have no
     // shingle rows, excludes them too)
-    val sigs = shingleSets(docs, idCol, textCol, n)
-      .filter(size(col("shs")) > 0)
-      .select(col("id"), Sketches.minhashSignature(col("shs"), k).as("sig"))
-    // band key = the r-slot slice itself (not an engine-specific hash
-    // of it): collision ⇔ slice equality, which any engine — and the
-    // DuckDB oracle — reproduces exactly. Persist the (bands rows per
-    // doc) band table: both sides of the self-join would otherwise
-    // recompute shingling+signatures.
-    graft.CachedPlans.cache(
-      sigs.select(col("id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          j => slice(col("sig"), j * lit(r) + lit(1), lit(r))))
-          .as(Seq("band", "band_key"))))
+    sets.filter(size(col("shs")) > 0)
+      .select(kept :+ Sketches.minhashSignature(col("shs"), k).as("sig"): _*)
+      // band key = the r-slot slice itself (not an engine-specific
+      // hash of it): collision ⇔ slice equality, which any engine —
+      // and the DuckDB oracle — reproduces exactly
+      .select(kept :+ posexplode(transform(sequence(lit(0), lit(bands - 1)),
+        j => slice(col("sig"), j * lit(r) + lit(1), lit(r))))
+        .as(Seq("band", "band_key")): _*)
   }
+
+  /** LSH band-key rows for a corpus: `(id, band, band_key)`. This IS
+    * the persistable dedup index: write it (bucketed by band_key)
+    * once per corpus snapshot and every future batch matches against
+    * it without re-sketching the corpus ([[minhashLshIncremental]]).
+    * Persisted (bands rows per doc): both sides of the self-join
+    * would otherwise recompute shingling+signatures.
+    */
+  def lshBandKeys(docs: DataFrame, idCol: String, textCol: String,
+      n: Int, k: Int, bands: Int): DataFrame =
+    graft.CachedPlans.cache(
+      bandRows(shingleSets(docs, idCol, textCol, n), Seq("id"), k, bands))
 
   /** MinHash + LSH candidate pairs: band the k-slot signature into
     * `bands` buckets of k/bands rows each and join docs that share
@@ -298,8 +312,7 @@ object Dedup {
       .join(sets.as("sa"), col("id_a") === col("sa.id"))
       .join(sets.as("sb"), col("id_b") === col("sb.id"))
       .select(col("id_a"), col("id_b"),
-        (size(array_intersect(col("sa.shs"), col("sb.shs"))).cast("double") /
-          size(array_union(col("sa.shs"), col("sb.shs")))).as("jaccard"))
+        jaccard(col("sa.shs"), col("sb.shs")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -332,8 +345,7 @@ object Dedup {
       .join(newSets.as("sa"), col("new_id") === col("sa.id"))
       .join(corpusSets.as("sb"), col("corpus_id") === col("sb.id"))
       .select(col("new_id"), col("corpus_id"),
-        (size(array_intersect(col("sa.shs"), col("sb.shs"))).cast("double") /
-          size(array_union(col("sa.shs"), col("sb.shs")))).as("jaccard"))
+        jaccard(col("sa.shs"), col("sb.shs")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 

@@ -95,16 +95,13 @@ object Similarity {
     * representable, so bucket bits are reproducible across engines
     * up to the (identical) left-to-right double accumulation.
     */
-  def rademacherPlanes(dim: Int, nPlanes: Int): Array[Array[Double]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
+  def rademacherPlanes(dim: Int, nPlanes: Int): Array[Array[Double]] =
     Array.tabulate(nPlanes) { p =>
       Array.tabulate(dim) { i =>
-        md.reset()
-        val d = md.digest(s"${p}_${i}".getBytes("UTF-8"))
+        val d = graft.plans.BloomHash.digest(s"${p}_${i}".getBytes("UTF-8"))
         if (((d(0) >> 4) & 1) == 1) 1.0 else -1.0
       }
     }
-  }
 
   /** Bucket ids, one per table: the sign bits of `bitsPerTable`
     * hyperplane projections packed into an int. Native single-pass

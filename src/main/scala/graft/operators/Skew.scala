@@ -48,12 +48,6 @@ object Skew {
       .agg(sum(col("__psum")).as("sum_v"), sum(col("__pcnt")).as("cnt"))
   }
 
-  /** Deterministic salt from a row id — use when no value column is
-    * suitable for salting (must distribute the hot key's rows).
-    */
-  def saltFromId(id: Column, salts: Int): Column =
-    pmod(hash(id), lit(salts))
-
   /** Skew-replicated equi-join: the fact side gets a deterministic
     * salt in [0, salts), the dim side is replicated once per salt
     * value, and the join runs on (key, salt) — a hot fact key's rows

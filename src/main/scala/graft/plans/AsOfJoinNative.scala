@@ -148,8 +148,8 @@ object PushFilterThroughAsOfJoin
   * before any execution path could see it — so it is Unevaluable; if
   * a plan somehow retains one (e.g. `asof_on` used outside a join
   * condition), Spark fails loudly at planning rather than silently
-  * mis-joining. (The `ASOF JOIN` parser syntax lowers onto this same
-  * marker — see [[AsOfSyntax]].)
+  * mis-joining. (The `ASOF JOIN` parser syntax leaves
+  * [[AsOfCondMarker]] instead, which the same rule lowers.)
   */
 case class AsOfOnMarker(eq: Expression, leftTs: Expression,
     rightTs: Expression)
@@ -165,45 +165,105 @@ case class AsOfOnMarker(eq: Expression, leftTs: Expression,
       rightTs = newChildren(2))
 }
 
-/** Rewrites `Join(l, r, LeftOuter, asof_on(eq, lts, rts))` into
-  * [[AsOfJoinPlan]] — the pure-SQL doorway to the native operator.
-  * A pure node swap: the node's output is attribute-for-attribute
-  * the stock left-outer join's (`l.* ++ r.*`, right side nullable),
-  * so no reference above needs patching. Injected by
-  * `GraftExtensions` as a resolution rule, so every later analyzer
-  * and optimizer rule sees the final node.
+/** Rewrites `Join(l, r, LeftOuter, asof_on(eq, lts, rts))` and the
+  * `ASOF JOIN` sugar's `Join(l, r, LeftOuter, asof_cond(cond))`
+  * ([[AsOfSyntax]]) into [[AsOfJoinPlan]] — the pure-SQL doorway to
+  * the native operator. A pure node swap: the node's output is
+  * attribute-for-attribute the stock left-outer join's (`l.* ++ r.*`,
+  * right side nullable), so no reference above needs patching.
+  * Injected by `GraftExtensions` as a resolution rule, so every later
+  * analyzer and optimizer rule sees the final node.
   */
 object RewriteSqlAsOfJoin
-    extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.{EqualTo, IsNotNull}
+    extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]
+    with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
+  import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, EqualTo, GreaterThanOrEqual, IsNotNull, LessThanOrEqual}
   import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
   import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join}
 
+  private type Pair = (Attribute, Attribute)
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    // Inner is matched too: a direct `INNER JOIN ... ON asof_on(...)`
-    // gets the semantics it asks for instead of an unevaluable-marker
-    // planning crash. The as-of LEFT result plus an IsNotNull(right
-    // key) filter IS the inner as-of (unmatched rows carry an
-    // all-null right side, and null keys never match).
-    case j @ Join(l, r, jt, Some(m: AsOfOnMarker), _)
+    // Inner is matched too: `ASOF JOIN` and a direct `INNER JOIN ...
+    // ON asof_on(...)` get the as-of LEFT result plus an
+    // IsNotNull(right key) filter, which IS the inner as-of
+    // (unmatched rows carry an all-null right side, and null keys or
+    // timestamps never match).
+    case j @ Join(l, r, jt, Some(m @ (_: AsOfOnMarker | _: AsOfCondMarker)), _)
         if j.resolved && (jt == LeftOuter || jt == Inner) =>
-      def fromSides(a: Expression, b: Expression, what: String)
-          : (Attribute, Attribute) = (a, b) match {
-        case (x: Attribute, y: Attribute)
-            if l.outputSet.contains(x) && r.outputSet.contains(y) => (x, y)
-        case (x: Attribute, y: Attribute)
-            if l.outputSet.contains(y) && r.outputSet.contains(x) => (y, x)
-        case _ => throw new IllegalArgumentException(
-          s"asof_on: $what must be one plain column from each side, got ($a, $b)")
+      val ((lk, rk), (lts, rts)) = m match {
+        case on: AsOfOnMarker => asofOn(j, on)
+        case cond: AsOfCondMarker => asofCond(j, cond)
       }
-      val (lk, rk) = m.eq match {
-        case EqualTo(a, b) => fromSides(a, b, "the key equality")
-        case other => throw new IllegalArgumentException(
-          s"asof_on: first argument must be left.key = right.key, got $other")
-      }
-      val (lts, rts) = fromSides(m.leftTs, m.rightTs, "the timestamps")
       val asOf = AsOfJoinPlan(l, r, lk, rk, lts, rts)
       if (jt == Inner) Filter(IsNotNull(rk), asOf) else asOf
+  }
+
+  /** The side resolver: the (left, right) columns of a pair naming
+    * one plain column from each side of `j`, and whether the pair was
+    * written right-first.
+    */
+  private def sides(j: Join, a: Expression, b: Expression)
+      : Option[(Pair, Boolean)] = (a, b) match {
+    case (x: Attribute, y: Attribute)
+        if j.left.outputSet.contains(x) && j.right.outputSet.contains(y) =>
+      Some(((x, y), false))
+    case (x: Attribute, y: Attribute)
+        if j.left.outputSet.contains(y) && j.right.outputSet.contains(x) =>
+      Some(((y, x), true))
+    case _ => None
+  }
+
+  /** `asof_on(eq, lts, rts)`: the (key, ts) column pairs. */
+  private def asofOn(j: Join, m: AsOfOnMarker): (Pair, Pair) = {
+    def fromSides(a: Expression, b: Expression, what: String): Pair =
+      sides(j, a, b).map(_._1).getOrElse(
+        throw new IllegalArgumentException(
+          s"asof_on: $what must be one plain column from each side, got ($a, $b)"))
+    val keys = m.eq match {
+      case EqualTo(a, b) => fromSides(a, b, "the key equality")
+      case other => throw new IllegalArgumentException(
+        s"asof_on: first argument must be left.key = right.key, got $other")
+    }
+    (keys, fromSides(m.leftTs, m.rightTs, "the timestamps"))
+  }
+
+  /** `asof_cond(cond)`: the ON clause's key equality and its as-of
+    * inequality, direction-checked — the merge exec implements
+    * backward-looking `left.ts >= right.ts` only.
+    */
+  private def asofCond(j: Join, m: AsOfCondMarker): (Pair, Pair) = {
+    def err(msg: String): Nothing =
+      throw new IllegalArgumentException(s"ASOF JOIN: $msg")
+    val (ineqs, eqs) = splitConjunctivePredicates(m.cond).partition {
+      case _: GreaterThanOrEqual | _: LessThanOrEqual => true
+      case _ => false
+    }
+    if (ineqs.isEmpty) err(
+      "the ON clause needs one as-of inequality (left.ts >= right.ts); " +
+        "for a plain equi join drop the ASOF keyword")
+    if (ineqs.size > 1) err(s"exactly one as-of inequality, got $ineqs")
+    val ineq = ineqs.head.asInstanceOf[BinaryComparison]
+    val ts = (ineq, sides(j, ineq.left, ineq.right)) match {
+      case (_: GreaterThanOrEqual, Some((pair, false))) => pair
+      case (_: LessThanOrEqual, Some((pair, true))) => pair
+      case (_: GreaterThanOrEqual, Some(_)) => err(
+        "forward-looking as-of (right.ts >= left.ts) is not supported; " +
+          "the merge matches the last right row at or before left.ts")
+      case (_: LessThanOrEqual, Some(_)) => err(
+        "forward-looking as-of (left.ts <= right.ts) is not supported")
+      case _ => err("the as-of inequality must compare one plain " +
+        s"timestamp column from each side, got $ineq")
+    }
+    val keys = eqs match {
+      case Seq() => err("the ON clause needs a key equality " +
+        "(left.key = right.key) next to the as-of inequality")
+      case Seq(EqualTo(a, b)) if sides(j, a, b).isDefined =>
+        sides(j, a, b).get._1
+      case other => err("exactly one single-column key equality is " +
+        s"supported (pack composite keys into a struct), got $other")
+    }
+    (keys, ts)
   }
 }
 

@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, Expression, GreaterThanOrEqual, IsNotNull, LessThanOrEqual, Unevaluable}
-import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.expressions.{Expression, Unevaluable}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.{BooleanType, DataType}
 
 /** First-class `ASOF JOIN` SQL syntax (the last
@@ -19,15 +17,16 @@ import org.apache.spark.sql.types.{BooleanType, DataType}
   * a quote/comment/paren-aware lexer that (1) drops the `ASOF`
   * keyword and (2) wraps the join's ON condition in the marker
   * function `asof_cond(...)`; Spark's own ANTLR grammar then parses
-  * the result as a stock join. [[RewriteAsOfSyntax]] fires at
+  * the result as a stock join. [[RewriteSqlAsOfJoin]] fires at
   * resolution, splits the marked condition into its key equality and
   * its as-of inequality — direction-checked: only backward-looking
   * `left.ts >= right.ts` (or the mirrored `right.ts <= left.ts`)
-  * matches the merge exec's semantics — and lowers onto the existing
-  * [[AsOfOnMarker]] → [[AsOfJoinPlan]] pipeline. `ASOF JOIN` (inner)
-  * adds `IsNotNull(right.ts)` above the left-outer merge: a null
-  * right ts never matches, so the null-extended rows are exactly the
-  * unmatched ones.
+  * matches the merge exec's semantics — and lowers it straight to
+  * [[AsOfJoinPlan]], the same rule and side resolver as `asof_on`.
+  * `ASOF JOIN` (inner) adds `IsNotNull(right key)` above the
+  * left-outer merge: unmatched rows null the whole right side, and
+  * null keys or timestamps never match, so the null-extended rows are
+  * exactly the unmatched ones.
   *
   * Like DuckDB, a relation actually NAMED `asof` in join position is
   * ambiguous; the lexer leaves `ASOF` alone when it directly follows
@@ -196,63 +195,6 @@ case class AsOfCondMarker(cond: Expression)
   override def nullable: Boolean = false
   override protected def withNewChildrenInternal(
       c: IndexedSeq[Expression]): AsOfCondMarker = copy(cond = c.head)
-}
-
-/** Lowers `Join(l, r, Inner|LeftOuter, asof_cond(cond))` onto the
-  * [[AsOfOnMarker]] form that [[RewriteSqlAsOfJoin]] (same resolution
-  * batch, runs to fixed point) turns into the native
-  * [[AsOfJoinPlan]]. Direction and strictness are validated here —
-  * the merge exec implements backward-looking `>=` only.
-  */
-object RewriteAsOfSyntax extends Rule[LogicalPlan]
-    with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
-
-  private def err(msg: String): Nothing =
-    throw new IllegalArgumentException(s"ASOF JOIN: $msg")
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case j @ Join(l, r, jt, Some(m: AsOfCondMarker), hint)
-        if j.resolved && (jt == Inner || jt == LeftOuter) =>
-      def isLeft(a: Attribute) = l.outputSet.contains(a)
-      def isRight(a: Attribute) = r.outputSet.contains(a)
-      val conjuncts = splitConjunctivePredicates(m.cond)
-      val (ineqs, eqs) = conjuncts.partition {
-        case _: GreaterThanOrEqual | _: LessThanOrEqual => true
-        case _ => false
-      }
-      if (ineqs.isEmpty) err(
-        "the ON clause needs one as-of inequality (left.ts >= right.ts); " +
-          "for a plain equi join drop the ASOF keyword")
-      if (ineqs.size > 1) err(s"exactly one as-of inequality, got $ineqs")
-      val (lts, rts) = ineqs.head match {
-        case GreaterThanOrEqual(a: Attribute, b: Attribute)
-            if isLeft(a) && isRight(b) => (a, b)
-        case LessThanOrEqual(a: Attribute, b: Attribute)
-            if isRight(a) && isLeft(b) => (b, a)
-        case GreaterThanOrEqual(a: Attribute, b: Attribute)
-            if isRight(a) && isLeft(b) => err(
-          "forward-looking as-of (right.ts >= left.ts) is not supported; " +
-            "the merge matches the last right row at or before left.ts")
-        case LessThanOrEqual(a: Attribute, b: Attribute)
-            if isLeft(a) && isRight(b) => err(
-          "forward-looking as-of (left.ts <= right.ts) is not supported")
-        case other => err("the as-of inequality must compare one plain " +
-          s"timestamp column from each side, got $other")
-      }
-      val eq = eqs match {
-        case Seq(e @ EqualTo(a: Attribute, b: Attribute))
-            if (isLeft(a) && isRight(b)) || (isLeft(b) && isRight(a)) => e
-        case Seq() => err("the ON clause needs a key equality " +
-          "(left.key = right.key) next to the as-of inequality")
-        case other => err("exactly one single-column key equality is " +
-          s"supported (pack composite keys into a struct), got $other")
-      }
-      val lowered =
-        Join(l, r, LeftOuter, Some(AsOfOnMarker(eq, lts, rts)), hint)
-      // inner asof = drop the null-extended (unmatched) rows; a null
-      // right ts never matches, so IsNotNull(rts) is exact
-      if (jt == Inner) Filter(IsNotNull(rts), lowered) else lowered
-  }
 }
 
 /** Delegating parser: the sugar passes ([[AsOfSyntax]],

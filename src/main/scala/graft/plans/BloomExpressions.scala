@@ -29,24 +29,31 @@ import org.apache.spark.unsafe.types.UTF8String
   * oracle replays the exact bit set — the false-positive SET itself
   * is deterministic and cross-engine-checkable, same recipe as the
   * MinHash/SimHash sketches ([[Sketches.md5Hash60]]).
+  *
+  * The one owner of md5 in the program: the sketches, `StreamArith`
+  * and the LSH planes digest here and read prefixes with [[hi60]].
   */
 object BloomHash {
 
+  // per-thread: one digest per record or shingle on the hot path
   private val md5Local = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  @inline private[plans] def digest(s: UTF8String): Array[Byte] = {
-    val md = md5Local.get()
-    md.reset()
-    md.digest(s.getBytes)
-  }
+  /** Raw md5 of `bytes` (`digest()` resets the instance). */
+  @inline private[graft] def digest(bytes: Array[Byte]): Array[Byte] =
+    md5Local.get().digest(bytes)
+
+  /** Raw md5 of the string's UTF-8 bytes. */
+  @inline private[graft] def digest(s: UTF8String): Array[Byte] =
+    digest(s.getBytes)
 
   /** Hex nibbles 0..14 of the digest as a 60-bit long — identical to
-    * `('0x' || substring(md5(s), 1, 15))::BIGINT` (DuckDB).
+    * `('0x' || substring(md5(s), 1, 15))::BIGINT` (DuckDB) and
+    * `conv(substring(md5(s), 1, 15), 16, 10)` (Spark).
     */
-  @inline private[plans] def hi60(d: Array[Byte]): Long = {
+  @inline private[graft] def hi60(d: Array[Byte]): Long = {
     var v = 0L
     var i = 0
     while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
@@ -54,7 +61,7 @@ object BloomHash {
   }
 
   /** Hex nibbles 16..30 — `substring(md5(s), 17, 15)` read base-16. */
-  @inline private[plans] def lo60(d: Array[Byte]): Long = {
+  @inline private[graft] def lo60(d: Array[Byte]): Long = {
     var v = 0L
     var i = 8
     while (i < 15) { v = (v << 8) | (d(i) & 0xffL); i += 1 }

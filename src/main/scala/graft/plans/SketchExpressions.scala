@@ -23,6 +23,10 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   * This is preference order (b) from the build brief: a scalar
   * `Expression` where built-ins can't express the computation
   * efficiently — no custom LogicalPlan/Strategy needed.
+  *
+  * The md5 prefix the portable sketches hash with is owned by
+  * [[BloomHash]]; the shingle → signature → band pipeline built on
+  * these expressions is owned by `graft.operators.Dedup`.
   */
 object Sketches {
 
@@ -56,8 +60,7 @@ object Sketches {
     * sketches built on it can be re-derived bit-for-bit by the DuckDB
     * oracle. md5 costs ~3× murmur per shingle but is paid once per
     * shingle, off the per-slot hot loop. Digest + nibble extraction
-    * delegate to [[BloomHash]] — ONE definition of the portability
-    * recipe, not two that can drift.
+    * delegate to [[BloomHash]], the one md5 owner.
     */
   @inline private[plans] def md5Hash60(s: UTF8String): Long =
     BloomHash.hi60(BloomHash.digest(s))

@@ -27,10 +27,10 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   *
   * Accepted payloads land as immutable `part-` files (write hidden
   * tmp + atomic rename, so a concurrent directory listing never sees
-  * a half-written file) in `spoolDir`, which the
-  * [[TrackPointSource]] micro-batch stream — or a plain
-  * `readStream.text` + [[JsonSources.decodeWebhook]] pipeline —
-  * drains with its file-count watermark. The receiver is the
+  * a half-written file) in `spoolDir`, which `graft.Serve` drains
+  * with `readStream.text` + [[JsonSources.decodeWebhook]]: Spark's
+  * file source remembers the paths it has read, so each new file is
+  * read once, whatever its name sorts after. The receiver is the
   * transport shim between a push protocol and Spark's pull-based
   * micro-batching; it holds no state beyond the spool counter, so at
   * scale N receivers spool to N prefixes behind one stream.
@@ -51,8 +51,8 @@ final class WebhookReceiver(spoolDir: java.io.File,
   private val mapper = new ObjectMapper
   // resume AFTER the highest already-spooled index: a restarted
   // receiver starting at 0 would atomically rename ONTO committed
-  // part- files — the file-count watermark then sees an unchanged
-  // listing, the new body is never ingested, and the old one is gone
+  // part- files — the file source has already seen that path, so the
+  // new body is never ingested, and the old one is gone
   private val nFiles = new java.util.concurrent.atomic.AtomicInteger({
     val existing = Option(spoolDir.listFiles()).getOrElse(Array.empty)
       .map(_.getName)
@@ -130,10 +130,10 @@ final class WebhookReceiver(spoolDir: java.io.File,
 
   private def spool(body: String): Unit = {
     val i = nFiles.getAndIncrement()
-    // 9 digits: the listing must stay lexicographically monotone
-    // (the offset watermark slices a name-sorted listing by index —
-    // a narrower pad would insert file 100000 BEFORE 99999 and shift
-    // every committed range)
+    // the index only has to be unique across restarts (nFiles resumes
+    // after the highest one spooled): the file source tracks the
+    // paths it has seen, not their order, so the 9-digit pad keeps
+    // listings tidy but carries no guarantee
     val tmp = new java.io.File(spoolDir, f".$prefix$i%09d.tmp")
     // flatten BOTH newline flavors: Hadoop's line reader splits on
     // lone CR too, so a CRLF pretty-printed body would otherwise

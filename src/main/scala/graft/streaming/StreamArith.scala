@@ -8,7 +8,9 @@ package graft.streaming
   * md5-prefix hashes the batch SQL derives with
   * `conv(substring(md5(x), 1, n), 16, 10)`. One definition each,
   * called directly: a fix applied to one copy but not another would
-  * silently break parity for the unpatched operators.
+  * silently break parity for the unpatched operators. The md5 helpers
+  * delegate to [[graft.plans.BloomHash]], the one md5 owner the batch
+  * sketches use too.
   */
 private[graft] object StreamArith {
 
@@ -31,28 +33,14 @@ private[graft] object StreamArith {
     * grid (uplift SE). */
   def round6(v: Double): Double = dec6(v).toDouble
 
-  // per-thread digest (hot path: one call per record) — the
-  // SketchExpressions idiom, never a per-record getInstance
-  private val md5Local =
-    new ThreadLocal[java.security.MessageDigest] {
-      override def initialValue(): java.security.MessageDigest =
-        java.security.MessageDigest.getInstance("MD5")
-    }
-
-  /** Raw md5 of the UTF-8 bytes (digest() resets the instance). */
+  /** Raw md5 of the UTF-8 bytes, through the program's one digest
+    * ([[graft.plans.BloomHash.digest]]). */
   def md5Bytes(s: String): Array[Byte] =
-    md5Local.get().digest(s.getBytes("UTF-8"))
+    graft.plans.BloomHash.digest(s.getBytes("UTF-8"))
 
   /** 60-bit md5-prefix hash — bit-identical to the batch SQL's
-    * `conv(substring(md5(s), 1, 15), 16, 10)`: the first 15 hex
-    * nibbles are bytes 0–6 plus the high nibble of byte 7, built
-    * numerically (no hex-string allocation on the hot path).
+    * `conv(substring(md5(s), 1, 15), 16, 10)`
+    * ([[graft.plans.BloomHash.hi60]]).
     */
-  def hash60(s: String): Long = {
-    val d = md5Bytes(s)
-    var acc = 0L
-    var i = 0
-    while (i < 7) { acc = (acc << 8) | (d(i) & 0xffL); i += 1 }
-    (acc << 4) | ((d(7) & 0xf0L) >>> 4)
-  }
+  def hash60(s: String): Long = graft.plans.BloomHash.hi60(md5Bytes(s))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.plans.Sketches
+import graft.operators.Dedup
 
 /** One document arriving on the stream. */
 case class DocEvent(doc_id: Long, ts: java.sql.Timestamp, text: String)
@@ -12,8 +12,8 @@ case class DocEvent(doc_id: Long, ts: java.sql.Timestamp, text: String)
   * detection as documents arrive, instead of as a corpus-wide batch
   * pass.
   *
-  * Shape: the signature/banding stage is the SAME portable
-  * md5-derived expression pipeline as batch (stateless, codegen'd,
+  * Shape: the shingle set, signature and banding are batch's own
+  * ([[Dedup.shingleSet]], [[Dedup.bandRows]]: stateless, codegen'd,
   * constant k-slot work per doc); candidate generation is a
   * stream–stream self-join on (band, band_key) where both sides
   * carry watermarks and the join condition bounds event time in both
@@ -31,6 +31,15 @@ case class DocEvent(doc_id: Long, ts: java.sql.Timestamp, text: String)
   */
 object StreamDedup {
 
+  /** `(doc_id, ts, shs, band, band_key)` for each arriving doc with a
+    * non-empty shingle set — batch's shingling and banding, row by row.
+    */
+  private def banded(docs: Dataset[DocEvent], n: Int, k: Int,
+      bands: Int): DataFrame =
+    Dedup.bandRows(
+      docs.toDF().withColumn("shs", Dedup.shingleSet(col("text"), n)),
+      Seq("doc_id", "ts", "shs"), k, bands)
+
   /** Near-dup candidate pairs (id_a < id_b, exact jaccard ≥
     * `threshold`) between documents arriving within `horizon` of
     * each other, watermarked by `watermark`.
@@ -38,22 +47,14 @@ object StreamDedup {
   def lshCandidates(docs: Dataset[DocEvent], watermark: String,
       horizon: String, n: Int = 3, k: Int = 128, bands: Int = 32,
       threshold: Double = 0.5): DataFrame = {
-    require(k % bands == 0, "k must be a multiple of bands")
-    val r = k / bands
-    def banded(ds: Dataset[DocEvent], tag: String): DataFrame =
-      ds.toDF()
-        .withColumn("shs",
-          array_distinct(Sketches.wordShingles(col("text"), n)))
-        .filter(size(col("shs")) > 0) // same exclusion as batch
-        .withColumn("sig", Sketches.minhashSignature(col("shs"), k))
-        .select(col("doc_id").as(s"${tag}_id"), col("ts").as(s"${tag}_ts"),
-          col("shs").as(s"${tag}_shs"),
-          posexplode(transform(sequence(lit(0), lit(bands - 1)),
-            j => slice(col("sig"), j * lit(r) + lit(1), lit(r))))
-            .as(Seq(s"${tag}_band", s"${tag}_key")))
-        .withWatermark(s"${tag}_ts", watermark)
-    val a = banded(docs, "a")
-    val b = banded(docs, "b")
+    val rows = banded(docs, n, k, bands)
+    def side(tag: String): DataFrame = rows
+      .select(col("doc_id").as(s"${tag}_id"), col("ts").as(s"${tag}_ts"),
+        col("shs").as(s"${tag}_shs"), col("band").as(s"${tag}_band"),
+        col("band_key").as(s"${tag}_key"))
+      .withWatermark(s"${tag}_ts", watermark)
+    val a = side("a")
+    val b = side("b")
     a.join(b,
         col("a_band") === col("b_band") && col("a_key") === col("b_key") &&
           col("a_id") < col("b_id") &&
@@ -61,8 +62,7 @@ object StreamDedup {
           col("b_ts") <= col("a_ts") + expr(s"interval $horizon"))
       .select(col("a_id").as("id_a"), col("b_id").as("id_b"),
         col("a_band").as("band"),
-        (size(array_intersect(col("a_shs"), col("b_shs"))).cast("double") /
-          size(array_union(col("a_shs"), col("b_shs")))).as("jaccard"))
+        Dedup.jaccard(col("a_shs"), col("b_shs")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -82,32 +82,18 @@ object StreamDedup {
   def lshCandidatesVsIndex(docs: Dataset[DocEvent], corpus: DataFrame,
       idCol: String, textCol: String, n: Int = 3, k: Int = 128,
       bands: Int = 32, threshold: Double = 0.5): DataFrame = {
-    require(k % bands == 0, "k must be a multiple of bands")
-    val r = k / bands
-    val idx = graft.operators.Dedup
-      .lshBandKeys(corpus, idCol, textCol, n, k, bands)
+    val idx = Dedup.lshBandKeys(corpus, idCol, textCol, n, k, bands)
       .select(col("id").as("corpus_id"), col("band").as("c_band"),
         col("band_key").as("c_key"))
-    val corpusSets = graft.operators.Dedup
-      .shingleSets(corpus, idCol, textCol, n)
+    val corpusSets = Dedup.shingleSets(corpus, idCol, textCol, n)
       .select(col("id").as("corpus_id"), col("shs").as("c_shs"))
-    val streamBands = docs.toDF()
-      .withColumn("shs",
-        array_distinct(Sketches.wordShingles(col("text"), n)))
-      .filter(size(col("shs")) > 0)
-      .withColumn("sig", Sketches.minhashSignature(col("shs"), k))
-      .select(col("doc_id").as("new_id"), col("shs"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          j => slice(col("sig"), j * lit(r) + lit(1), lit(r))))
-          .as(Seq("band", "band_key")))
-    streamBands
+    banded(docs, n, k, bands).withColumnRenamed("doc_id", "new_id")
       .join(idx, col("band") === col("c_band") &&
         col("band_key") === col("c_key") &&
         col("new_id") =!= col("corpus_id"))
       .join(corpusSets, "corpus_id")
       .select(col("new_id"), col("corpus_id"), col("band"),
-        (size(array_intersect(col("shs"), col("c_shs"))).cast("double") /
-          size(array_union(col("shs"), col("c_shs")))).as("jaccard"))
+        Dedup.jaccard(col("shs"), col("c_shs")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 }

@@ -56,8 +56,8 @@ object StreamFunnel {
     * `variantOf` (md5 hex prefix, 8 nibbles = first 4 digest bytes,
     * parity of the 32-bit value = lowest bit of byte 3): same hash,
     * same assignment, so stream and batch bucket every user alike.
-    * Digest via StreamArith's per-thread MessageDigest — this runs
-    * on the hot path of every stage advance.
+    * Digest via StreamArith's per-thread md5 — this runs on the hot
+    * path of every stage advance.
     */
   private[graft] def variantOf(uid: Long): String =
     if ((StreamArith.md5Bytes(uid.toString)(3) & 1) == 0) "control"

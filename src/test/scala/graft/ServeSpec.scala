@@ -159,6 +159,31 @@ class ServeSpec extends SparkSpec {
     }
   }
 
+  test("Serve pipeline lists a spool batch of more than 32 files without a Spark job") {
+    // 40 files in one batch is past Spark's default parallel-listing
+    // threshold (32), where the file source would list the batch with
+    // a job of one task per file
+    val s = spark.newSession()
+    val root = java.nio.file.Files.createTempDirectory("serveList").toFile
+    def dir(n: String) = new java.io.File(root, n).getAbsolutePath
+    val spool = new java.io.File(dir("spool")); spool.mkdirs()
+    (1 to 40).foreach { i =>
+      java.nio.file.Files.write(new java.io.File(spool, f"part-$i%09d").toPath,
+        (item(i, 1704844800000L + i) + "\n").getBytes("UTF-8"))
+    }
+    var q: org.apache.spark.sql.streaming.StreamingQuery = null
+    try {
+      // listening from before the start: the first batch may run at once
+      val listing = jobDescriptionsDuring {
+        q = Serve.pipeline(s, spool.getAbsolutePath,
+          dir("ckpt"), dir("submit"), dir("state"))
+        q.processAllAvailable()
+      }.filter(_.startsWith("Listing leaf files and directories"))
+      assert(listing.isEmpty, s"spool listed by a Spark job: $listing")
+      assert(s.read.parquet(dir("submit")).count() == 40)
+    } finally if (q != null) q.stop()
+  }
+
   test("Serve pipeline resolves file: to the fork-free classes on its session only") {
     val uri = java.net.URI.create("file:///")
     def classes(s: org.apache.spark.sql.SparkSession) = {

@@ -57,4 +57,22 @@ class SourceLintSpec extends AnyFunSuite {
     assert(found == Map("graft/NioLocalFs.scala" -> 2),
       s"file: filesystem keys outside NioLocalFs.install: $found")
   }
+
+  // md5 has one owner (BloomHash): the sketches, the stream twins'
+  // prefix hashes and the LSH planes digest through it, so the
+  // engine-portable recipe cannot drift between copies.
+  test("MessageDigest appears only in BloomExpressions.scala") {
+    val found = sites("""MessageDigest""".r)
+    assert(found.keySet == Set("graft/plans/BloomExpressions.scala"),
+      s"md5 digests outside BloomHash: $found")
+  }
+
+  // The shingle → signature → band pipeline has one owner (Dedup):
+  // batch, index and stream band through it, so a doc bands alike on
+  // every path.
+  test("Sketches.minhashSignature( is called only in Dedup.scala") {
+    val found = sites("""Sketches\.minhashSignature\(""".r)
+    assert(found == Map("graft/operators/Dedup.scala" -> 1),
+      s"MinHash signatures outside Dedup: $found")
+  }
 }

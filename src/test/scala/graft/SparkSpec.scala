@@ -75,20 +75,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * before listening so earlier work can't leak in, and after so no
     * job of `f` is missed.
     */
-  def jobsDuring(f: => Unit): Int = {
+  def jobsDuring(f: => Unit): Int = jobDescriptionsDuring(f).size
+
+  /** The `spark.job.description` of each Spark job started by `f`
+    * ("" where none is set), drained as in [[jobsDuring]].
+    */
+  def jobDescriptionsDuring(f: => Unit): Seq[String] = {
     val sc = spark.sparkContext
-    val jobs = new AtomicInteger
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+        jobs.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
     }
     ListenerBridge.drain(sc)
     sc.addSparkListener(l)
     try {
       f
       ListenerBridge.drain(sc)
-      jobs.get
+      jobs.toArray(Array.empty[String]).toSeq
     } finally sc.removeSparkListener(l)
   }
 
