@@ -11,8 +11,9 @@
 #   spool/checkpoint/state dirs -> assert liveness after restart and
 #   the at-most-once contract: no msg_key ever appears twice in the
 #   submit parquet, even when the restarted stream replays spool
-#   files whose batch never committed (the StateFirst processed-log
-#   anti-join is what guards the replay — SinkOrderingSpec proves it
+#   files whose batch never committed (the StateFirst guard of
+#   processed keys, which the relaunched query reads from the state
+#   log, is what guards the replay — SinkOrderingSpec proves it
 #   in-process; this proves it across a process death on the shipped
 #   classpath). Fails (exit 1) if the jar's entry class, classpath
 #   contract, the webhook->transform->sink path, or the crash

@@ -34,16 +34,19 @@ import graft.streaming.SubmitSink
   *
   * Scale shape: the single JVM here is local-mode packaging, not a
   * design limit — N receivers spool N prefixes into the same
-  * directory behind one query, and no stage handles rows on the
-  * driver (no collect). Each micro-batch is narrowed to ONE partition
-  * before its dedup ([[dedupBatch]]): the batches this path sees are
-  * small (about 18 rows at a steady 20 points/s, about 226 under a
-  * four-client flood; `perfbench/LAYERS.md`), far below what one task
-  * handles, and a single partition lets the dedup and the sink's
-  * broadcast anti-join run without a shuffle: 4 Spark jobs a batch,
-  * each a driver round trip that costs more than the rows do. A rate
-  * at which one task per batch becomes the bottleneck would need
-  * wider batches again.
+  * directory behind one query. Each micro-batch is narrowed to ONE
+  * partition before its dedup ([[dedupBatch]]): the batches this path
+  * sees are small (about 18 rows at a steady 20 points/s, about 226
+  * under a four-client flood; `perfbench/LAYERS.md`), far below what
+  * one task handles, and a single partition lets the dedup run
+  * without a shuffle. The StateFirst sink then collects the deduped
+  * batch and guards it on the driver against the processed keys the
+  * query holds there ([[SubmitSink.Guard]]): 3 Spark jobs a batch,
+  * each a driver round trip that costs more than the rows do. So a
+  * batch's rows pass through the driver, bounded by the same batch
+  * size the one-partition dedup already assumes; a rate at which one
+  * task per batch becomes the bottleneck would need wider batches,
+  * and a sink that stays on the executors, again.
   *
   * Filesystem: [[pipeline]] resolves `file:` to [[NioLocalFs]]'s
   * fork-free classes on its session. Hadoop's own local filesystem,
@@ -73,9 +76,10 @@ object Serve {
     * Message identity for the sink's replay guard is
     * `id @ event-time`: a crash-replayed or duplicate-POSTed point
     * dedupes (within a batch via dropDuplicates, across batches via
-    * the StateFirst processed-log anti-join), while a NEWER point
-    * for the same entity is a new key and flows through — the
-    * reference's keyed upsert granularity (`task.ts:148`).
+    * the StateFirst guard of processed keys, one per query, read from
+    * the state log on its first batch), while a NEWER point for the
+    * same entity is a new key and flows through — the reference's
+    * keyed upsert granularity (`task.ts:148`).
     *
     * `spark` keeps the fork-free `file:` classes and the driver-side
     * listing threshold afterwards (see the object doc); the query runs
@@ -84,6 +88,7 @@ object Serve {
   def pipeline(spark: SparkSession, spoolDir: String,
       checkpointDir: String, submitDir: String, stateDir: String,
       order: SubmitSink.Order = SubmitSink.StateFirst): StreamingQuery = {
+    val guard = new SubmitSink.Guard(stateDir)
     NioLocalFs.install(spark)
     spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
       Int.MaxValue.toLong)
@@ -96,7 +101,7 @@ object Serve {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         SubmitSink.processBatch(dedupBatch(batch),
-          "msg_key", order, submitDir, stateDir)
+          "msg_key", order, submitDir, stateDir, guard = Some(guard))
         ()
       }
       .start()
@@ -105,8 +110,8 @@ object Serve {
   /** One micro-batch as the sink receives it: a narrow `coalesce(1)`
     * (no shuffle), then the in-batch dedup by message identity. A
     * single partition already satisfies the dedup's clustering, so
-    * neither it nor a broadcast anti-join downstream plans an
-    * Exchange (see the object doc for the batch sizes this suits).
+    * it plans no Exchange (see the object doc for the batch sizes
+    * this suits).
     */
   private[graft] def dedupBatch(batch: DataFrame): DataFrame =
     batch.coalesce(1).dropDuplicates("msg_key")

@@ -52,15 +52,16 @@ final class WebhookReceiver(spoolDir: java.io.File,
   // resume AFTER the highest already-spooled index: a restarted
   // receiver starting at 0 would atomically rename ONTO committed
   // part- files — the file source has already seen that path, so the
-  // new body is never ingested, and the old one is gone
-  private val nFiles = new java.util.concurrent.atomic.AtomicInteger({
+  // new body is never ingested, and the old one is gone. A Long: an
+  // Int index wraps negative past part-2147483647, and a name past
+  // Long range is no index at all
+  private val nFiles = new java.util.concurrent.atomic.AtomicLong({
     val existing = Option(spoolDir.listFiles()).getOrElse(Array.empty)
       .map(_.getName)
       .filter(n => n.startsWith(prefix) &&
-        n.drop(prefix.length).forall(_.isDigit) &&
-        n.length > prefix.length)
-      .map(_.drop(prefix.length).toInt)
-    if (existing.isEmpty) 0 else existing.max + 1
+        n.drop(prefix.length).forall(_.isDigit))
+      .flatMap(_.drop(prefix.length).toLongOption)
+    if (existing.isEmpty) 0L else existing.max + 1
   })
   private val server = HttpServer.create(
     if (bindAll)

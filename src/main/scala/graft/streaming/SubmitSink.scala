@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types._
 
 /** The reference pipeline writes its two sinks — the feature submit
   * (K1) and the entity-state persist (K2) — in OPPOSITE orders on
@@ -20,31 +23,45 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *
   * Spark-first translation for a `foreachBatch` sink: the submit is
   * an append-mode parquet write, the state a keyed processed-log
-  * append, and on [[StateFirst]] the submit is state-GUARDED (an
-  * anti-join against the processed log — the guard is what makes the
-  * state-first ordering mean something on replay, exactly like the
-  * webhook's upsert-before-submit). A failure between the two writes
-  * is injectable via `failpoint` so the semantics are testable
-  * (SinkOrderingSpec kills both orders there and pins re-send vs
-  * loss). Everything is executor-side distributed I/O — no driver
-  * collect; the anti-join broadcasts or shuffles by Catalyst's
-  * choice over the processed-log size.
+  * append, and on [[StateFirst]] the submit is state-GUARDED: a batch
+  * row whose key the log already holds is dropped (the guard is what
+  * makes the state-first ordering mean something on replay, exactly
+  * like the webhook's upsert-before-submit). A failure between the
+  * two writes is injectable via `failpoint` so the semantics are
+  * testable (SinkOrderingSpec kills both orders there and pins
+  * re-send vs loss).
   *
-  * Job shape of a [[StateFirst]] batch: while the processed log is
-  * under the broadcast threshold, a batch runs 4 Spark jobs — the
-  * state-keys broadcast, the `localCheckpoint`, the state write and
-  * the submit write. Each job is a driver round trip that, at the
-  * webhook's ~20-row batches, costs more than the work, so two
-  * others are left out on purpose:
-  *  - no schema inference: the log is read with the batch's own key
-  *    field as its schema (the log holds nothing else), so no footer
-  *    job runs before the plan is built;
-  *  - no `distinct` on the log: a left-anti join keeps each batch row
-  *    at most once however often its key repeats in the log (a
-  *    [[SubmitFirst]] replay writes a key twice), so a distinct only
-  *    added a shuffle stage.
-  * A log past the threshold makes Catalyst shuffle both sides
-  * instead; the guard stays correct, only the job count grows.
+  * The guard is a [[Guard]]: the log's keys held on the driver, as the
+  * reference loads its keyed state once per invocation and upserts it
+  * in memory (`task.ts:145-151`). Its lifecycle:
+  *  - it is read from the committed log on its first [[StateFirst]]
+  *    batch, one Spark job, and none when the log has no committed
+  *    file yet;
+  *  - it gains a batch's fresh keys only after that batch's state
+  *    write has returned, so it never holds a key the log lacks;
+  *  - it lives as long as its holder: `Serve.pipeline` makes one per
+  *    streaming query, and a restarted query reads the log again.
+  * One guard per state log: a second writer to the same log while a
+  * query runs would go unseen.
+  *
+  * Job shape of a [[StateFirst]] batch on a loaded guard: 3 Spark
+  * jobs. The batch is `collect()`ed (`Serve.dedupBatch` has already
+  * narrowed it to one partition and deduped it), filtered against
+  * the guard on the driver, and both writes read one single-partition
+  * local relation, so each write still produces one file. Nothing
+  * reads the state log after the load, so its cost per batch is
+  * O(batch), not O(batches so far), and no lineage cut is needed: a
+  * write's `recacheByPath` on the log finds no plan that reads it
+  * (the hazard DESIGN.md's "recacheByPath loss" records). The rows
+  * pass through the driver, which suits the small batches this path
+  * sees (see `Serve`).
+  *
+  * Memory: the guard grows exactly as the log does, one entry per
+  * distinct key. Measured with Spark's `SizeEstimator` on a guard
+  * loaded from 100,000 webhook `msg_key`s (`inreach-<id>@<ISO time>`,
+  * 35 characters on average), it holds about 114 bytes a key: 11 MB
+  * per 100,000 processed points. The log has no retention yet, so
+  * neither has the guard.
   */
 object SubmitSink {
 
@@ -57,16 +74,50 @@ object SubmitSink {
     * at-most-once — crash between loses the send, never duplicates. */
   case object StateFirst extends Order
 
-  /** Keys already persisted to the state log, or None when the log
-    * doesn't exist yet. The existence check goes through the
-    * session's Hadoop conf, so it resolves the same FileSystem as
+  /** The keys of the state log at `stateDir`, held on the driver (see
+    * the object doc for its lifecycle). Not thread-safe: a streaming
+    * query runs its batches one at a time.
+    */
+  final class Guard(val stateDir: String) {
+    private var keys: mutable.HashSet[Any] = null
+
+    /** The processed keys, read from the log on the first call. */
+    private[streaming] def seen(spark: SparkSession,
+        keyField: StructField): collection.Set[Any] = {
+      if (keys == null) keys = processedKeys(spark, stateDir, keyField)
+      keys
+    }
+
+    /** Record keys whose state write has returned. */
+    private[streaming] def add(written: Iterator[Any]): Unit =
+      keys ++= written
+
+    /** Keys held; 0 before the first load. */
+    def size: Int = if (keys == null) 0 else keys.size
+  }
+
+  /** Key types whose JVM value equality is Spark's value equality:
+    * integral numbers, and strings under the default (UTF8_BINARY)
+    * collation. A binary or struct key would compare by reference on
+    * the driver, miss the guard, and turn at-most-once into duplicate
+    * sends.
+    */
+  private def guardable(t: DataType): Boolean = t match {
+    case s: StringType => s.collationId == StringType.collationId
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** Keys already persisted to the state log, empty when the log
+    * holds no committed file yet. The existence check goes through
+    * the session's Hadoop conf, so it resolves the same FileSystem as
     * the log read and the two writes. A driver-local
     * `java.nio.file.Files.exists` would be false for every
-    * non-local stateDir (hdfs://, s3a://) and silently disable the
-    * StateFirst anti-join guard, turning at-most-once into
-    * duplicate sends. A real read error propagates for the same
-    * reason: "could not read the log" must fail the batch, not
-    * masquerade as "nothing processed yet".
+    * non-local stateDir (hdfs://, s3a://) and silently empty the
+    * StateFirst guard, turning at-most-once into duplicate sends. A
+    * real read error propagates for the same reason: "could not read
+    * the log" must fail the batch, not masquerade as "nothing
+    * processed yet".
     *
     * "Exists" means COMMITTED DATA FILES, not the directory: a crash
     * during the very first state write leaves the dir holding only
@@ -75,9 +126,14 @@ object SubmitSink {
     * "unable to infer schema" — which would crash-loop the stream
     * forever on replay. An uncommitted dir IS "nothing processed
     * yet"; only files outside the `_`/`.` marker namespace count.
+    *
+    * The log is read with the batch's own key field as its schema
+    * (the log holds nothing else), so no footer job runs before the
+    * read. A key the log repeats (a [[SubmitFirst]] replay writes a
+    * key twice) is held once; a null key never matches, as in a join.
     */
-  private def processedKeys(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, keyField: StructField): Option[DataFrame] = {
+  private def processedKeys(spark: SparkSession, stateDir: String,
+      keyField: StructField): mutable.HashSet[Any] = {
     val path = new org.apache.hadoop.fs.Path(stateDir)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     val committed = fs.exists(path) &&
@@ -85,43 +141,47 @@ object SubmitSink {
         val n = st.getPath.getName
         st.isFile && !n.startsWith("_") && !n.startsWith(".")
       }
+    val keys = mutable.HashSet.empty[Any]
     if (committed)
-      Some(spark.read.schema(StructType(Seq(keyField))).parquet(stateDir))
-    else None
+      spark.read.schema(StructType(Seq(keyField))).parquet(stateDir)
+        .collect().foreach(r => if (!r.isNullAt(0)) keys += r.get(0))
+    keys
   }
 
   /** Process one micro-batch with the chosen write ordering.
     * `failpoint` runs BETWEEN the two writes (default no-op).
+    * [[StateFirst]] guards with `guard`, or, without one, with a
+    * guard it reads from the log for this batch alone.
     */
   def processBatch(batch: DataFrame, keyCol: String, order: Order,
       submitDir: String, stateDir: String,
-      failpoint: () => Unit = () => ()): Unit = order match {
+      failpoint: () => Unit = () => (),
+      guard: Option[Guard] = None): Unit = order match {
     case SubmitFirst =>
       batch.write.mode(SaveMode.Append).parquet(submitDir)
       failpoint()
       batch.select(col(keyCol)).write.mode(SaveMode.Append)
         .parquet(stateDir)
     case StateFirst =>
-      // EAGER lineage cut, not persist(): the state write below runs
-      // recacheByPath on stateDir, which recomputes any cached plan
-      // that READS stateDir — a persist()'d anti-join re-evaluates
-      // against the keys it just wrote and comes back EMPTY, so the
-      // submit write silently loses every clean batch after the
-      // first (caught by ServeSpec end-to-end; SinkOrderingSpec now
-      // pins the clean-second-batch leg). localCheckpoint
-      // materializes the anti-joined batch BEFORE the state write
-      // and replaces the plan with the materialized partitions, so
-      // nothing downstream can re-read stateDir. Executor loss
-      // between the writes fails the batch → streaming retry →
-      // replay is guarded off by the state log: still at-most-once.
-      val fresh = processedKeys(batch.sparkSession, stateDir,
-          batch.schema(keyCol))
-        .fold(batch)(seen =>
-          batch.join(seen, Seq(keyCol), "left_anti"))
-        .localCheckpoint()
-      fresh.select(col(keyCol)).write.mode(SaveMode.Append)
+      val g = guard.getOrElse(new Guard(stateDir))
+      require(g.stateDir == stateDir,
+        s"guard holds the keys of ${g.stateDir}, not of $stateDir")
+      val field = batch.schema(keyCol)
+      require(guardable(field.dataType),
+        s"StateFirst key '$keyCol' must be a string or integral column " +
+          s"to be compared on the driver, got ${field.dataType.sql}")
+      val seen = g.seen(batch.sparkSession, field)
+      val k = batch.schema.fieldIndex(keyCol)
+      // in-batch repeats of a fresh key all pass, as a left-anti join
+      // against the log keeps them
+      val fresh = batch.collect()
+        .filter(r => r.isNullAt(k) || !seen(r.get(k)))
+      val rows = batch.sparkSession
+        .createDataFrame(fresh.toSeq.asJava, batch.schema).coalesce(1)
+      rows.select(col(keyCol)).write.mode(SaveMode.Append)
         .parquet(stateDir)
+      g.add(fresh.iterator.filterNot(_.isNullAt(k)).map(_.get(k)))
       failpoint()
-      fresh.write.mode(SaveMode.Append).parquet(submitDir)
+      rows.write.mode(SaveMode.Append).parquet(submitDir)
   }
 }

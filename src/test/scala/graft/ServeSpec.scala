@@ -97,6 +97,22 @@ class ServeSpec extends SparkSpec {
     } finally recv.close()
   }
 
+  test("receiver: the spool counter resumes past part-2147483647 without wrapping") {
+    val spool = java.nio.file.Files.createTempDirectory("spool").toFile
+    java.nio.file.Files.write(new java.io.File(spool, "part-2147483647")
+      .toPath, (item(1, 1704844800000L) + "\n").getBytes("UTF-8"))
+    val recv = scala.util.Try(new WebhookReceiver(spool)) match {
+      case scala.util.Success(r) => r
+      case scala.util.Failure(e) =>
+        cancel(s"sandbox forbids loopback sockets: $e")
+    }
+    try {
+      assert(post(recv.port, item(2, 1704844860000L)).statusCode() == 200)
+      assert(spool.list().toSet == Set("part-2147483647", "part-2147483648"),
+        spool.list().toSeq)
+    } finally recv.close()
+  }
+
   test("receiver: a body over the 1 MiB cap answers 413 and spools nothing") {
     val (spool, recv) = receiver()
     try {

@@ -165,4 +165,91 @@ class SinkOrderingSpec extends SparkSpec {
       "batch must submit against an uncommitted state dir")
     assert(spark.read.parquet(stateDir).distinct().count() == 2)
   }
+
+  test("StateFirst: a restarted query reads a new guard from the log and drops the previous run's keys") {
+    // Serve.pipeline holds one guard per query; a restart is a new
+    // query, so its guard must come from the log the last run wrote
+    def tmp(p: String) = java.nio.file.Files
+      .createTempDirectory(s"graft-restart-$p").toString
+    val (srcDir, ckpt) = (tmp("src"), tmp("ckpt"))
+    val submitDir = tmp("submit") + "/out"
+    val stateDir = tmp("state") + "/st"
+    def feed(name: String, keys: Seq[Long]): Unit =
+      java.nio.file.Files.write(java.nio.file.Paths.get(srcDir, name),
+        keys.map(k => s"""{"entityId":$k}""").mkString("\n")
+          .getBytes("UTF-8"))
+    def drain(): SubmitSink.Guard = {
+      val guard = new SubmitSink.Guard(stateDir)
+      val q = spark.readStream.schema("entityId LONG").json(srcDir)
+        .writeStream
+        .foreachBatch { (df: DataFrame, _: Long) =>
+          SubmitSink.processBatch(df, "entityId", SubmitSink.StateFirst,
+            submitDir, stateDir, guard = Some(guard))
+        }
+        .option("checkpointLocation", ckpt).start()
+      try q.processAllAvailable() finally q.stop()
+      guard
+    }
+    feed("a.json", Seq(1L, 2L))
+    assert(drain().size == 2)
+    // a fresh checkpoint would replay a.json too; this one only sees
+    // b.json, whose 2 was processed by the previous run
+    feed("b.json", Seq(2L, 3L))
+    assert(drain().size == 3)
+    val sent = spark.read.parquet(submitDir).as[Long].collect().sorted.toSeq
+    assert(sent == Seq(1L, 2L, 3L), s"submitted: $sent")
+  }
+
+  test("StateFirst: on one guard a key re-sent in a later batch is dropped without a log read") {
+    def tmp(p: String) = java.nio.file.Files
+      .createTempDirectory(s"graft-guard-$p").toString
+    val stateDir = tmp("state") + "/st"
+    val submitDir = tmp("submit") + "/out"
+    val guard = new SubmitSink.Guard(stateDir)
+    def batch(ks: String*) = ks.map(k => (k, 1.0)).toDF("msg_key", "course")
+    SubmitSink.processBatch(batch("a", "b"), "msg_key",
+      SubmitSink.StateFirst, submitDir, stateDir, guard = Some(guard))
+    // take the log away: only the guard can still know "b"
+    val log = new java.io.File(stateDir)
+    assert(log.renameTo(new java.io.File(stateDir + ".moved")))
+    SubmitSink.processBatch(batch("b", "c"), "msg_key",
+      SubmitSink.StateFirst, submitDir, stateDir, guard = Some(guard))
+    val sent = spark.read.parquet(submitDir)
+      .select("msg_key").as[String].collect().sorted.toSeq
+    assert(sent == Seq("a", "b", "c"), s"submitted: $sent")
+    // the new log holds only what the second batch wrote
+    assert(spark.read.parquet(stateDir).as[String].collect().toSeq ==
+      Seq("c"))
+  }
+
+  test("StateFirst: a key twice in one batch and not in the log submits twice, with or without a guard") {
+    def tmp(p: String) = java.nio.file.Files
+      .createTempDirectory(s"graft-repeat-$p").toString
+    def batch(ks: String*) = ks.map(k => (k, 1.0)).toDF("msg_key", "course")
+    Seq(false, true).foreach { guarded =>
+      val stateDir = tmp("state") + "/st"
+      val submitDir = tmp("submit") + "/out"
+      val guard = Some(new SubmitSink.Guard(stateDir)).filter(_ => guarded)
+      Seq(batch("b"), batch("a", "a", "b")).foreach(
+        SubmitSink.processBatch(_, "msg_key", SubmitSink.StateFirst,
+          submitDir, stateDir, guard = guard))
+      val sent = spark.read.parquet(submitDir)
+        .select("msg_key").as[String].collect().sorted.toSeq
+      assert(sent == Seq("a", "a", "b"), s"guarded=$guarded: $sent")
+    }
+  }
+
+  test("StateFirst: a key the driver cannot compare by value is refused") {
+    def tmp(p: String) = java.nio.file.Files
+      .createTempDirectory(s"graft-keytype-$p").toString
+    val binary = Seq((Array[Byte](1, 2), 1.0)).toDF("k", "course")
+    val struct = Seq(((1, "x"), 1.0)).toDF("k", "course")
+    Seq(binary, struct).foreach { b =>
+      val e = intercept[IllegalArgumentException](
+        SubmitSink.processBatch(b, "k", SubmitSink.StateFirst,
+          tmp("submit") + "/out", tmp("state") + "/st"))
+      assert(e.getMessage.contains("must be a string or integral column"),
+        e.getMessage)
+    }
+  }
 }

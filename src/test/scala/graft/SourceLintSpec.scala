@@ -75,4 +75,18 @@ class SourceLintSpec extends AnyFunSuite {
     assert(found == Map("graft/operators/Dedup.scala" -> 1),
       s"MinHash signatures outside Dedup: $found")
   }
+
+  // The StateFirst sink keeps its processed keys on the driver: the
+  // state log is read in one place (the guard load), and nothing is
+  // cached or checkpointed, because no plan after the load reads it.
+  test("SubmitSink reads the state log once and neither persists nor checkpoints") {
+    val src = new String(Files.readAllBytes(
+      Paths.get("src/main/scala/graft/streaming/SubmitSink.scala")), "UTF-8")
+    val code = src.replaceAll("""(?s)/\*.*?\*/""", "")
+      .replaceAll("""//[^\n]*""", "")
+    assert("""localCheckpoint|persist|\.cache\(""".r.findAllIn(code).isEmpty,
+      "SubmitSink caches or cuts lineage")
+    assert("""\.read\.""".r.findAllIn(code).size == 1,
+      "SubmitSink reads the state log outside the guard load")
+  }
 }

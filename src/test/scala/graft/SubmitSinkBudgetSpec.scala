@@ -3,22 +3,23 @@ package graft
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.streaming.SubmitSink
 
 /** Job budget of the ingest path: one webhook micro-batch, shaped the
-  * way `Serve.pipeline` shapes it, through the StateFirst sink. Every
-  * Spark job is a driver round trip, and at ~20-row batches those
-  * round trips, not the rows, set how fresh a POSTed point is. Adding
-  * a job to this path fails here; lowering the budget is an ordinary
-  * change.
+  * way `Serve.pipeline` shapes it, through the StateFirst sink on a
+  * query's guard of processed keys. Every Spark job is a driver round
+  * trip, and at ~20-row batches those round trips, not the rows, set
+  * how fresh a POSTed point is. Adding a job to this path fails here;
+  * lowering the budget is an ordinary change.
   */
 class SubmitSinkBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
-  private val JobBudget = 4
+  /** Jobs of a StateFirst batch on an already-loaded guard. */
+  private val JobBudget = 3
 
   /** Spark jobs started by `f`, and the plans of the actions it ran
     * (by action name). The plan listener rides the same async bus
@@ -39,46 +40,95 @@ class SubmitSinkBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     } finally spark.listenerManager.unregister(ql)
   }
 
+  /** Root paths of the files an action's plan reads. */
+  private def reads(qe: QueryExecution): Seq[String] =
+    qe.analyzed.collect { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation =>
+        r.location.rootPaths.map(_.toUri.getPath) }
+      .flatten
+
   private def keys(df: org.apache.spark.sql.Dataset[_]): DataFrame =
     df.select(concat(lit("e"), col("id"), lit("@t")).as("msg_key"))
 
-  test("StateFirst micro-batch: at most 4 jobs, no shuffle with a broadcast state log") {
-    def tmp(p: String) = java.nio.file.Files
-      .createTempDirectory(s"graft-budget-$p").toString
+  private def tmp(p: String) = java.nio.file.Files
+    .createTempDirectory(s"graft-budget-$p").toString
+
+  /** A state log of `files` committed files holding keys e0..e49. */
+  private def stateLog(files: Int): String = {
     val stateDir = tmp("state") + "/st"
-    val submitDir = tmp("submit") + "/out"
-    // a log of several committed files (five earlier batches, two
-    // files each) holding keys e0..e49
-    (0 until 5).foreach { b =>
-      keys(spark.range(b * 10, b * 10 + 10, 1, 2))
-        .write.mode(SaveMode.Append).parquet(stateDir)
-    }
-    // a four-partition batch, every key twice: e30..e69, of which
-    // e30..e49 are already in the log
-    val raw = keys(spark.range(0, 80, 1, 4)
-        .select((col("id") % 40 + 30).as("id")))
+    keys(spark.range(0, 50, 1, files))
+      .write.mode(SaveMode.Append).parquet(stateDir)
+    assert(new java.io.File(stateDir).list()
+      .count(_.endsWith(".parquet")) == files)
+    stateDir
+  }
+
+  /** A four-partition batch with every key twice, shaped by
+    * `Serve.dedupBatch`: keys e`from` until e`until`.
+    */
+  private def batch(from: Int, until: Int): DataFrame = {
+    val n = until - from
+    val raw = keys(spark.range(0, 2L * n, 1, 4)
+        .select((col("id") % n + from).as("id")))
       .withColumn("payload", length(col("msg_key")))
     assert(raw.rdd.getNumPartitions == 4)
+    Serve.dedupBatch(raw)
+  }
 
-    val (jobs, plans) = observed {
-      SubmitSink.processBatch(Serve.dedupBatch(raw), "msg_key",
-        SubmitSink.StateFirst, submitDir, stateDir)
+  test("StateFirst micro-batch on a loaded guard: at most 3 jobs, no shuffle, no read of the state log") {
+    val stateDir = stateLog(5)
+    val submitDir = tmp("submit") + "/out"
+    val guard = new SubmitSink.Guard(stateDir)
+    def run(b: DataFrame) = observed {
+      SubmitSink.processBatch(b, "msg_key", SubmitSink.StateFirst,
+        submitDir, stateDir, guard = Some(guard))
     }
+    // the first batch loads the guard: one more job, one read of the log
+    val (loadJobs, loadPlans) = run(batch(40, 60))
+    assert(loadJobs <= JobBudget + 1, s"first batch ran $loadJobs jobs")
+    assert(loadPlans.map(p => reads(p._2).count(_ == stateDir)).sum == 1,
+      s"the load should read the log once: ${loadPlans.map(_._1)}")
+    assert(guard.size == 60)
+
+    // e30..e69, of which e30..e59 are already processed
+    val (jobs, plans) = run(batch(30, 70))
     info(s"$jobs jobs: ${plans.map(_._1).mkString(", ")}")
     assert(jobs <= JobBudget,
       s"StateFirst batch ran $jobs Spark jobs, budget $JobBudget")
-
-    val cut = plans.collect { case ("localCheckpoint", qe) => qe }
-    assert(cut.size == 1, s"actions: ${plans.map(_._1)}")
-    val plan = cut.head.executedPlan
-    assert(collect(plan) { case j: BroadcastHashJoinExec => j }.nonEmpty,
-      s"state log should broadcast at this size:\n$plan")
-    val shuffles = collect(plan) { case s: ShuffleExchangeLike => s }
-    assert(shuffles.isEmpty, s"checkpointed plan shuffles:\n$plan")
+    assert(plans.exists(_._1 == "collect"), s"actions: ${plans.map(_._1)}")
+    val logReads = plans.filter(p => reads(p._2).contains(stateDir))
+    assert(logReads.isEmpty,
+      s"actions after the load read the state log: ${logReads.map(_._1)}")
+    plans.foreach { case (name, qe) =>
+      val shuffles = collect(qe.executedPlan) { case s: ShuffleExchangeLike => s }
+      assert(shuffles.isEmpty, s"$name shuffles:\n${qe.executedPlan}")
+    }
 
     val submitted = spark.read.parquet(submitDir)
       .select("msg_key").collect().map(_.getString(0)).toSeq
     assert(submitted.sorted == (50 until 70).map(i => s"e$i@t").sorted,
       s"submitted: $submitted")
+    assert(guard.size == 70)
+  }
+
+  test("StateFirst jobs per batch do not grow with the state log: 5 files vs 50") {
+    def perBatch(files: Int): Int = {
+      val stateDir = stateLog(files)
+      val submitDir = tmp("submit") + "/out"
+      val guard = new SubmitSink.Guard(stateDir)
+      def run(from: Int) = jobsDuring {
+        SubmitSink.processBatch(batch(from, from + 20), "msg_key",
+          SubmitSink.StateFirst, submitDir, stateDir, guard = Some(guard))
+      }
+      run(40)
+      // later batches add a file each to the log; none re-reads it
+      val jobs = (60 until 120 by 20).map(run)
+      assert(jobs.distinct.size == 1, s"$files-file log: $jobs")
+      jobs.head
+    }
+    val (small, large) = (perBatch(5), perBatch(50))
+    assert(small == large,
+      s"jobs per batch: $small on a 5-file log, $large on a 50-file log")
+    assert(large <= JobBudget)
   }
 }
