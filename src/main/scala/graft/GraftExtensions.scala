@@ -20,7 +20,8 @@ import graft.plans.{CosineSimExpr, MinHashSigExpr, SimHash64Expr, ShinglesExpr}
   * too, and register nothing themselves.
   *
   * Functions (all native expressions, no UDFs):
-  *   - `cosine_sim(a, b)`      — fused double-precision cosine
+  *   - `cosine_sim(a, b)`      — fused double-precision cosine of two
+  *     numeric arrays, null on a null element or a length mismatch
   *   - `simhash64(arr)`        — portable 60-bit SimHash
   *   - `minhash_sig(arr, k)`   — portable MinHash signature
   *   - `word_shingles(s, n)`   — word n-gram shingles

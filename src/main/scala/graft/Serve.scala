@@ -39,14 +39,19 @@ import graft.streaming.SubmitSink
   * sees are small (about 18 rows at a steady 20 points/s, about 226
   * under a four-client flood; `perfbench/LAYERS.md`), far below what
   * one task handles, and a single partition lets the dedup run
-  * without a shuffle. The StateFirst sink then collects the deduped
-  * batch and guards it on the driver against the processed keys the
-  * query holds there ([[SubmitSink.Guard]]): 3 Spark jobs a batch,
-  * each a driver round trip that costs more than the rows do. So a
-  * batch's rows pass through the driver, bounded by the same batch
-  * size the one-partition dedup already assumes; a rate at which one
-  * task per batch becomes the bottleneck would need wider batches,
-  * and a sink that stays on the executors, again.
+  * without a shuffle. The sink then collects the deduped batch, the
+  * StateFirst order guards it on the driver against the processed
+  * keys the query holds there ([[SubmitSink.Guard]]), and both files
+  * are written on the driver through Spark's parquet writer
+  * ([[SubmitSink.writeParquet]]; no `_SUCCESS` marker): 1 Spark job a
+  * batch (it was 3, a collect and two one-file writes, each a driver
+  * round trip that cost more than the rows did), 2 on the batch that
+  * loads the guard. A crash in the middle of a write leaves only a
+  * dot-prefixed temporary file that no reader sees. So a batch's rows
+  * pass through the driver, bounded by the same batch size the
+  * one-partition dedup already assumes; a rate at which one task per
+  * batch becomes the bottleneck would need wider batches, and a sink
+  * that stays on the executors, again.
   *
   * Filesystem: [[pipeline]] resolves `file:` to [[NioLocalFs]]'s
   * fork-free classes on its session. Hadoop's own local filesystem,

@@ -204,64 +204,6 @@ object MinHashSigExpr {
   val P: Long = 2147483647L
 }
 
-/** Cosine similarity of two array<float> columns in double precision,
-  * with full whole-stage codegen (`doGenCode` emits the fused loop) —
-  * the hot-path scalar for kNN/ANN scoring. Null if either side is
-  * null; arrays are assumed equal length (embedding columns).
-  */
-case class CosineSimExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = a.getFloat(i).toDouble
-      val y = b.getFloat(i).toDouble
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    dot / math.sqrt(na * nb)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = (double) $a.getFloat($i);
-         |  double $y = (double) $b.getFloat($i);
-         |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |}
-         |${ev.value} = $dot / java.lang.Math.sqrt($na * $nb);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression): CosineSimExpr = copy(left = l, right = r)
-}
-
-object CosineSimExpr {
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-  def cosine_native(a: Column, b: Column): Column =
-    column(CosineSimExpr(expression(a), expression(b)))
-}
-
 /** All sign-random-projection LSH bucket ids of an array<float>
   * vector in one pass: `tables` buckets, each packing `bitsPerTable`
   * hyperplane sign bits. Replaces the HOF formulation (one

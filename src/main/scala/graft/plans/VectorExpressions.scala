@@ -25,7 +25,7 @@ import org.apache.spark.sql.types._
   * either side (or a length mismatch, whose zip_with padding nulls
   * the product) nulls the whole result.
   */
-abstract class BinaryVecFoldExpr extends BinaryExpression {
+abstract class NumericVecPairExpr extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
 
@@ -33,7 +33,8 @@ abstract class BinaryVecFoldExpr extends BinaryExpression {
   // mismatch, null element), so nullability must not derive from the
   // children. Declaring false there also broke codegen: nullSafeCodeGen's
   // non-nullable branch never declares ev.isNull, and the `${ev.isNull} =
-  // true` writes below then referenced an undeclared name — Janino failed
+  // true` writes the subclasses generate then referenced an undeclared
+  // name — Janino failed
   // ("isNull_N is not an rvalue") and the whole stage fell back to the
   // interpreted path this expression exists to remove.
   override def nullable: Boolean = true
@@ -64,15 +65,35 @@ abstract class BinaryVecFoldExpr extends BinaryExpression {
     case other => throw new IllegalStateException(s"unexpected $other")
   }
 
+  @transient protected lazy val getL = get(elemType(left))
+  @transient protected lazy val getR = get(elemType(right))
+
+  private def getCode(dt: DataType, arr: String, i: String): String =
+    dt match {
+      case FloatType => s"(double) $arr.getFloat($i)"
+      case DoubleType => s"$arr.getDouble($i)"
+      case IntegerType => s"(double) $arr.getInt($i)"
+      case LongType => s"(double) $arr.getLong($i)"
+      case other => throw new IllegalStateException(s"unexpected $other")
+    }
+
+  /** Java source reading element `i` of the left (right) array as a
+    * double. */
+  protected def getCodeL(arr: String, i: String): String =
+    getCode(elemType(left), arr, i)
+  protected def getCodeR(arr: String, i: String): String =
+    getCode(elemType(right), arr, i)
+}
+
+/** A single-accumulator fold: Σ term(aᵢ, bᵢ), left→right from 0.0. */
+abstract class BinaryVecFoldExpr extends NumericVecPairExpr {
+
   /** Per-pair term: (x, y) => contribution added to the fold. */
   protected def term(x: Double, y: Double): Double
 
   /** Java source of the per-pair term for codegen, over double
     * variables `x` and `y`. */
   protected def termCode(x: String, y: String): String
-
-  @transient private lazy val getL = get(elemType(left))
-  @transient private lazy val getR = get(elemType(right))
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
@@ -88,15 +109,6 @@ abstract class BinaryVecFoldExpr extends BinaryExpression {
     }
     acc
   }
-
-  private def getCode(dt: DataType, arr: String, i: String): String =
-    dt match {
-      case FloatType => s"(double) $arr.getFloat($i)"
-      case DoubleType => s"$arr.getDouble($i)"
-      case IntegerType => s"(double) $arr.getInt($i)"
-      case LongType => s"(double) $arr.getLong($i)"
-      case other => throw new IllegalStateException(s"unexpected $other")
-    }
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
@@ -116,8 +128,8 @@ abstract class BinaryVecFoldExpr extends BinaryExpression {
          |    if ($a.isNullAt($i) || $b.isNullAt($i)) {
          |      ${ev.isNull} = true; break;
          |    }
-         |    double $x = ${getCode(elemType(left), a, i)};
-         |    double $y = ${getCode(elemType(right), b, i)};
+         |    double $x = ${getCodeL(a, i)};
+         |    double $y = ${getCodeR(b, i)};
          |    $acc += ${termCode(x, y)};
          |  }
          |  if (!${ev.isNull}) ${ev.value} = $acc;
@@ -149,6 +161,76 @@ case class L2SqExpr(left: Expression, right: Expression)
     s"($x - $y) * ($x - $y)"
   override protected def withNewChildrenInternal(l: Expression,
       r: Expression): L2SqExpr = copy(left = l, right = r)
+}
+
+/** Cosine similarity of two numeric arrays in double precision,
+  * dot / sqrt(na·nb), with the three sums fused in one generated loop
+  * — the hot-path scalar for kNN/ANN scoring and `cosine_sim`. Each
+  * sum folds left→right from 0.0, so the result is bit-identical to
+  * `VectorFunctions.cosine` (three [[DotExpr]] folds), edges
+  * included: null if either side is null, has a null element, or the
+  * lengths differ.
+  */
+case class CosineSimExpr(left: Expression, right: Expression)
+    extends NumericVecPairExpr {
+
+  override def nullSafeEval(l: Any, r: Any): Any = {
+    val a = l.asInstanceOf[ArrayData]
+    val b = r.asInstanceOf[ArrayData]
+    val n = a.numElements()
+    if (n != b.numElements()) return null
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return null
+      val x = getL(a, i)
+      val y = getR(b, i)
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    dot / math.sqrt(na * nb)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val i = ctx.freshName("i")
+      val n = ctx.freshName("n")
+      val dot = ctx.freshName("dot")
+      val na = ctx.freshName("na")
+      val nb = ctx.freshName("nb")
+      val x = ctx.freshName("x")
+      val y = ctx.freshName("y")
+      s"""
+         |int $n = $a.numElements();
+         |if ($n != $b.numElements()) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  double $dot = 0.0, $na = 0.0, $nb = 0.0;
+         |  for (int $i = 0; $i < $n; $i++) {
+         |    if ($a.isNullAt($i) || $b.isNullAt($i)) {
+         |      ${ev.isNull} = true; break;
+         |    }
+         |    double $x = ${getCodeL(a, i)};
+         |    double $y = ${getCodeR(b, i)};
+         |    $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
+         |  }
+         |  if (!${ev.isNull}) {
+         |    ${ev.value} = $dot / java.lang.Math.sqrt($na * $nb);
+         |  }
+         |}
+       """.stripMargin
+    })
+  }
+
+  override protected def withNewChildrenInternal(l: Expression,
+      r: Expression): CosineSimExpr = copy(left = l, right = r)
+}
+
+object CosineSimExpr {
+  import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+  def cosine_native(a: Column, b: Column): Column =
+    column(CosineSimExpr(expression(a), expression(b)))
 }
 
 object VectorFoldExprs {

@@ -1,10 +1,16 @@
 package graft.streaming
 
-import scala.collection.mutable
-import scala.jdk.CollectionConverters._
+import java.io.IOException
+import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.col
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 
 /** The reference pipeline writes its two sinks — the feature submit
@@ -44,17 +50,25 @@ import org.apache.spark.sql.types._
   * One guard per state log: a second writer to the same log while a
   * query runs would go unseen.
   *
-  * Job shape of a [[StateFirst]] batch on a loaded guard: 3 Spark
-  * jobs. The batch is `collect()`ed (`Serve.dedupBatch` has already
-  * narrowed it to one partition and deduped it), filtered against
-  * the guard on the driver, and both writes read one single-partition
-  * local relation, so each write still produces one file. Nothing
+  * Job shape: 1 Spark job a batch in either order (it was 3), and 2
+  * on the [[StateFirst]] batch that loads its guard. The batch is
+  * `collect()`ed once (`Serve.dedupBatch` has already narrowed it to
+  * one partition and deduped it), [[StateFirst]] filters it against
+  * the guard on the driver, and both files are written on the driver
+  * by [[writeParquet]], through Spark's own parquet writer: one file
+  * per write, with the schema and row metadata a `DataFrameWriter`
+  * append writes, and no `_SUCCESS` marker (nothing reads one in
+  * these directories). A crash in the middle of a write leaves a
+  * dot-prefixed `.part-….parquet.tmp` file, which the guard load and
+  * every parquet reader skip, so the write counts as not made; a
+  * crash between the two writes is the ordering case above. Nothing
   * reads the state log after the load, so its cost per batch is
-  * O(batch), not O(batches so far), and no lineage cut is needed: a
-  * write's `recacheByPath` on the log finds no plan that reads it
-  * (the hazard DESIGN.md's "recacheByPath loss" records). The rows
-  * pass through the driver, which suits the small batches this path
-  * sees (see `Serve`).
+  * O(batch), not O(batches so far). No Spark write runs, so no
+  * `recacheByPath` runs either (the hazard DESIGN.md's "recacheByPath
+  * loss" records): a DataFrame cached over either directory does not
+  * see the new files until it is re-read. The rows pass through the
+  * driver, which suits the small batches this path sees (see
+  * `Serve`).
   *
   * Memory: the guard grows exactly as the log does, one entry per
   * distinct key. Measured with Spark's `SizeEstimator` on a guard
@@ -121,11 +135,12 @@ object SubmitSink {
     *
     * "Exists" means COMMITTED DATA FILES, not the directory: a crash
     * during the very first state write leaves the dir holding only
-    * `_temporary` scaffolding (FileOutputCommitter creates the dir
-    * at job setup), and `spark.read.parquet` on that throws
-    * "unable to infer schema" — which would crash-loop the stream
-    * forever on replay. An uncommitted dir IS "nothing processed
-    * yet"; only files outside the `_`/`.` marker namespace count.
+    * [[writeParquet]]'s dot-prefixed temporary file (or, from a Spark
+    * write, `_temporary` scaffolding), and `spark.read.parquet` on
+    * that throws "unable to infer schema" — which would crash-loop
+    * the stream forever on replay. An uncommitted dir IS "nothing
+    * processed yet"; only files outside the `_`/`.` marker namespace
+    * count.
     *
     * The log is read with the batch's own key field as its schema
     * (the log holds nothing else), so no footer job runs before the
@@ -134,7 +149,7 @@ object SubmitSink {
     */
   private def processedKeys(spark: SparkSession, stateDir: String,
       keyField: StructField): mutable.HashSet[Any] = {
-    val path = new org.apache.hadoop.fs.Path(stateDir)
+    val path = new Path(stateDir)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     val committed = fs.exists(path) &&
       fs.listStatus(path).exists { st =>
@@ -148,40 +163,77 @@ object SubmitSink {
     keys
   }
 
+  /** Write `rows` to one new parquet file in `dir` on the driver,
+    * through the writer Spark's write tasks run
+    * (`ParquetFileFormat.prepareWrite` → `OutputWriterFactory`), so
+    * the file's parquet schema and Spark row metadata are those a
+    * `DataFrameWriter` append of the same schema writes. The file is
+    * written under a dot-prefixed temporary name, which every parquet
+    * reader (and [[processedKeys]]) skips, and then renamed to a
+    * `part-` name; a failed rename throws, as a failed Spark write
+    * does. No `_SUCCESS` marker is written. The FileSystem comes from
+    * the session's Hadoop conf, as in [[processedKeys]].
+    */
+  private[graft] def writeParquet(spark: SparkSession, dir: String,
+      schema: StructType, rows: Iterable[Row]): Unit = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory =
+      new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID())
+    val name = s"part-00000-${UUID.randomUUID()}-c000" +
+      factory.getFileExtension(ctx)
+    val (tmp, out) = (new Path(dir, s".$name.tmp"), new Path(dir, name))
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+    val writer = factory.newInstance(tmp.toString, schema, ctx)
+    try rows.foreach(r =>
+      writer.write(toInternal(r).asInstanceOf[InternalRow]))
+    finally writer.close()
+    if (!out.getFileSystem(job.getConfiguration).rename(tmp, out))
+      throw new IOException(s"could not rename $tmp to $out")
+  }
+
   /** Process one micro-batch with the chosen write ordering.
     * `failpoint` runs BETWEEN the two writes (default no-op).
     * [[StateFirst]] guards with `guard`, or, without one, with a
-    * guard it reads from the log for this batch alone.
+    * guard it reads from the log for this batch alone. Either order
+    * collects the batch once and writes both files on the driver
+    * ([[writeParquet]]).
     */
   def processBatch(batch: DataFrame, keyCol: String, order: Order,
       submitDir: String, stateDir: String,
       failpoint: () => Unit = () => (),
-      guard: Option[Guard] = None): Unit = order match {
-    case SubmitFirst =>
-      batch.write.mode(SaveMode.Append).parquet(submitDir)
-      failpoint()
-      batch.select(col(keyCol)).write.mode(SaveMode.Append)
-        .parquet(stateDir)
-    case StateFirst =>
-      val g = guard.getOrElse(new Guard(stateDir))
-      require(g.stateDir == stateDir,
-        s"guard holds the keys of ${g.stateDir}, not of $stateDir")
-      val field = batch.schema(keyCol)
-      require(guardable(field.dataType),
-        s"StateFirst key '$keyCol' must be a string or integral column " +
-          s"to be compared on the driver, got ${field.dataType.sql}")
-      val seen = g.seen(batch.sparkSession, field)
-      val k = batch.schema.fieldIndex(keyCol)
-      // in-batch repeats of a fresh key all pass, as a left-anti join
-      // against the log keeps them
-      val fresh = batch.collect()
-        .filter(r => r.isNullAt(k) || !seen(r.get(k)))
-      val rows = batch.sparkSession
-        .createDataFrame(fresh.toSeq.asJava, batch.schema).coalesce(1)
-      rows.select(col(keyCol)).write.mode(SaveMode.Append)
-        .parquet(stateDir)
-      g.add(fresh.iterator.filterNot(_.isNullAt(k)).map(_.get(k)))
-      failpoint()
-      rows.write.mode(SaveMode.Append).parquet(submitDir)
+      guard: Option[Guard] = None): Unit = {
+    val spark = batch.sparkSession
+    val field = batch.schema(keyCol)
+    val k = batch.schema.fieldIndex(keyCol)
+    def writeState(rows: Seq[Row]): Unit =
+      writeParquet(spark, stateDir, StructType(Seq(field)),
+        rows.map(r => Row(r.get(k))))
+    def writeSubmit(rows: Seq[Row]): Unit =
+      writeParquet(spark, submitDir, batch.schema, rows)
+    order match {
+      case SubmitFirst =>
+        val rows = batch.collect().toSeq
+        writeSubmit(rows)
+        failpoint()
+        writeState(rows)
+      case StateFirst =>
+        val g = guard.getOrElse(new Guard(stateDir))
+        require(g.stateDir == stateDir,
+          s"guard holds the keys of ${g.stateDir}, not of $stateDir")
+        require(guardable(field.dataType),
+          s"StateFirst key '$keyCol' must be a string or integral column " +
+            s"to be compared on the driver, got ${field.dataType.sql}")
+        val seen = g.seen(spark, field)
+        // in-batch repeats of a fresh key all pass, as a left-anti join
+        // against the log keeps them
+        val fresh = batch.collect().toSeq
+          .filter(r => r.isNullAt(k) || !seen(r.get(k)))
+        writeState(fresh)
+        g.add(fresh.iterator.filterNot(_.isNullAt(k)).map(_.get(k)))
+        failpoint()
+        writeSubmit(fresh)
+    }
   }
 }

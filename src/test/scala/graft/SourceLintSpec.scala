@@ -76,17 +76,26 @@ class SourceLintSpec extends AnyFunSuite {
       s"MinHash signatures outside Dedup: $found")
   }
 
+  /** SubmitSink.scala without its comments. */
+  private def sinkCode: String = new String(Files.readAllBytes(
+      Paths.get("src/main/scala/graft/streaming/SubmitSink.scala")), "UTF-8")
+    .replaceAll("""(?s)/\*.*?\*/""", "").replaceAll("""//[^\n]*""", "")
+
   // The StateFirst sink keeps its processed keys on the driver: the
   // state log is read in one place (the guard load), and nothing is
   // cached or checkpointed, because no plan after the load reads it.
   test("SubmitSink reads the state log once and neither persists nor checkpoints") {
-    val src = new String(Files.readAllBytes(
-      Paths.get("src/main/scala/graft/streaming/SubmitSink.scala")), "UTF-8")
-    val code = src.replaceAll("""(?s)/\*.*?\*/""", "")
-      .replaceAll("""//[^\n]*""", "")
-    assert("""localCheckpoint|persist|\.cache\(""".r.findAllIn(code).isEmpty,
+    assert("""localCheckpoint|persist|\.cache\(""".r.findAllIn(sinkCode).isEmpty,
       "SubmitSink caches or cuts lineage")
-    assert("""\.read\.""".r.findAllIn(code).size == 1,
+    assert("""\.read\.""".r.findAllIn(sinkCode).size == 1,
       "SubmitSink reads the state log outside the guard load")
+  }
+
+  // The sink writes its two files on the driver (SubmitSink.writeParquet),
+  // so a batch costs one Spark job; a DataFrameWriter call would bring
+  // back one job per write.
+  test("SubmitSink makes no DataFrameWriter call") {
+    assert("""\.write\s*\.""".r.findAllIn(sinkCode).isEmpty,
+      "SubmitSink writes through a DataFrameWriter")
   }
 }

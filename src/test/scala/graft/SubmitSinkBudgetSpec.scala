@@ -10,16 +10,17 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import graft.streaming.SubmitSink
 
 /** Job budget of the ingest path: one webhook micro-batch, shaped the
-  * way `Serve.pipeline` shapes it, through the StateFirst sink on a
-  * query's guard of processed keys. Every Spark job is a driver round
-  * trip, and at ~20-row batches those round trips, not the rows, set
-  * how fresh a POSTed point is. Adding a job to this path fails here;
-  * lowering the budget is an ordinary change.
+  * way `Serve.pipeline` shapes it, through the sink in either order
+  * (StateFirst on a query's guard of processed keys). Every Spark job
+  * is a driver round trip, and at ~20-row batches those round trips,
+  * not the rows, set how fresh a POSTed point is. Adding a job to this
+  * path fails here; lowering the budget is an ordinary change.
   */
 class SubmitSinkBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
-  /** Jobs of a StateFirst batch on an already-loaded guard. */
-  private val JobBudget = 3
+  /** Jobs of a batch: the collect. A StateFirst batch that loads its
+    * guard may take one more. */
+  private val JobBudget = 1
 
   /** Spark jobs started by `f`, and the plans of the actions it ran
     * (by action name). The plan listener rides the same async bus
@@ -75,7 +76,7 @@ class SubmitSinkBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     Serve.dedupBatch(raw)
   }
 
-  test("StateFirst micro-batch on a loaded guard: at most 3 jobs, no shuffle, no read of the state log") {
+  test("StateFirst micro-batch on a loaded guard: at most 1 job, no shuffle, no read of the state log") {
     val stateDir = stateLog(5)
     val submitDir = tmp("submit") + "/out"
     val guard = new SubmitSink.Guard(stateDir)
@@ -130,5 +131,32 @@ class SubmitSinkBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(small == large,
       s"jobs per batch: $small on a 5-file log, $large on a 50-file log")
     assert(large <= JobBudget)
+  }
+
+  test("SubmitFirst micro-batch: at most 1 job, and the spool is read once") {
+    val spool = tmp("spool")
+    keys(spark.range(0, 20, 1, 4)).withColumn("payload",
+      length(col("msg_key"))).write.mode(SaveMode.Append).json(spool)
+    val b = Serve.dedupBatch(
+      spark.read.schema("msg_key STRING, payload INT").json(spool))
+    val submitDir = tmp("submit") + "/out"
+    val stateDir = tmp("state") + "/st"
+    val (jobs, plans) = observed {
+      SubmitSink.processBatch(b, "msg_key", SubmitSink.SubmitFirst,
+        submitDir, stateDir)
+    }
+    info(s"$jobs jobs: ${plans.map(_._1).mkString(", ")}")
+    assert(jobs <= JobBudget,
+      s"SubmitFirst batch ran $jobs Spark jobs, budget $JobBudget")
+    val spoolReads = plans.map(p => reads(p._2).count(_ == spool)).sum
+    assert(spoolReads == 1,
+      s"the batch should be read from the spool once: ${plans.map(_._1)}")
+
+    val expected = (0 until 20).map(i => s"e$i@t").sorted
+    Seq(submitDir, stateDir).foreach { dir =>
+      val got = spark.read.parquet(dir).select("msg_key").collect()
+        .map(_.getString(0)).toSeq
+      assert(got.sorted == expected, s"$dir: $got")
+    }
   }
 }
