@@ -27,31 +27,20 @@ import graft.streaming.SubmitSink
   *    queue — push transport adapted to Spark's pull micro-batching;
   *  - [[JsonSources.decodeWebhook]]/[[JsonSources.webhookToCot]] are
   *    V1 + T1–T7 (`task.ts:110,121-143`);
-  *  - [[SubmitSink.processBatch]] keeps the webhook path's
-  *    state-THEN-submit crash ordering (`task.ts:149,151`:
-  *    at-most-once per message identity) — or `--order submit-first`
-  *    for the refresh path's at-least-once ordering (`task.ts:235`).
+  *  - [[SubmitSink]] keeps the webhook path's state-THEN-submit
+  *    crash ordering (`task.ts:149,151`: at-most-once per message
+  *    identity) — or `--order submit-first` for the refresh path's
+  *    at-least-once ordering (`task.ts:235`).
   *
   * Scale shape: the single JVM here is local-mode packaging, not a
   * design limit — N receivers spool N prefixes into the same
-  * directory behind one query. Each micro-batch is narrowed to ONE
-  * partition before its dedup ([[dedupBatch]]): the batches this path
-  * sees are small (about 18 rows at a steady 20 points/s, about 226
-  * under a four-client flood; `perfbench/LAYERS.md`), far below what
-  * one task handles, and a single partition lets the dedup run
-  * without a shuffle. The sink then collects the deduped batch, the
-  * StateFirst order guards it on the driver against the processed
-  * keys the query holds there ([[SubmitSink.Guard]]), and both files
-  * are written on the driver through Spark's parquet writer
-  * ([[SubmitSink.writeParquet]]; no `_SUCCESS` marker): 1 Spark job a
-  * batch (it was 3, a collect and two one-file writes, each a driver
-  * round trip that cost more than the rows did), 2 on the batch that
-  * loads the guard. A crash in the middle of a write leaves only a
-  * dot-prefixed temporary file that no reader sees. So a batch's rows
-  * pass through the driver, bounded by the same batch size the
-  * one-partition dedup already assumes; a rate at which one task per
-  * batch becomes the bottleneck would need wider batches, and a sink
-  * that stays on the executors, again.
+  * directory behind one query. The query's one [[SubmitSink]] takes
+  * each micro-batch whole and handles its rows on the driver, 1 Spark
+  * job a batch: the batches this path sees are small (about 18 rows
+  * at a steady 20 points/s, about 226 under a four-client flood;
+  * `perfbench/LAYERS.md`). A rate at which one task per batch becomes
+  * the bottleneck would need wider batches, and a sink that stays on
+  * the executors, again.
   *
   * Filesystem: [[pipeline]] resolves `file:` to [[NioLocalFs]]'s
   * fork-free classes on its session. Hadoop's own local filesystem,
@@ -78,13 +67,13 @@ object Serve {
   /** The streaming wiring, factored out so tests can drive it
     * without the process-lifecycle main.
     *
-    * Message identity for the sink's replay guard is
-    * `id @ event-time`: a crash-replayed or duplicate-POSTed point
-    * dedupes (within a batch via dropDuplicates, across batches via
-    * the StateFirst guard of processed keys, one per query, read from
-    * the state log on its first batch), while a NEWER point for the
-    * same entity is a new key and flows through — the reference's
-    * keyed upsert granularity (`task.ts:148`).
+    * Message identity for the sink is `id @ event-time`: a
+    * crash-replayed or duplicate-POSTed point dedupes (within a batch
+    * and, on StateFirst, across batches against the processed keys of
+    * the query's one [[SubmitSink]], read from the state log on its
+    * first batch), while a NEWER point for the same entity is a new
+    * key and flows through — the reference's keyed upsert granularity
+    * (`task.ts:148`).
     *
     * `spark` keeps the fork-free `file:` classes and the driver-side
     * listing threshold afterwards (see the object doc); the query runs
@@ -93,7 +82,7 @@ object Serve {
   def pipeline(spark: SparkSession, spoolDir: String,
       checkpointDir: String, submitDir: String, stateDir: String,
       order: SubmitSink.Order = SubmitSink.StateFirst): StreamingQuery = {
-    val guard = new SubmitSink.Guard(stateDir)
+    val sink = new SubmitSink("msg_key", order, submitDir, stateDir)
     NioLocalFs.install(spark)
     spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
       Int.MaxValue.toLong)
@@ -104,40 +93,50 @@ object Serve {
         concat_ws("@", col("id"), col("properties").getField("time")))
       .writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        SubmitSink.processBatch(dedupBatch(batch),
-          "msg_key", order, submitDir, stateDir, guard = Some(guard))
-        ()
-      }
+      .foreachBatch { (batch: DataFrame, _: Long) => sink.write(batch) }
       .start()
   }
 
-  /** One micro-batch as the sink receives it: a narrow `coalesce(1)`
-    * (no shuffle), then the in-batch dedup by message identity. A
-    * single partition already satisfies the dedup's clustering, so
-    * it plans no Exchange (see the object doc for the batch sizes
-    * this suits).
-    */
-  private[graft] def dedupBatch(batch: DataFrame): DataFrame =
-    batch.coalesce(1).dropDuplicates("msg_key")
+  /** The command line, parsed. */
+  private[graft] final case class Args(spoolDir: String,
+      checkpointDir: String, submitDir: String, stateDir: String,
+      debug: Boolean, order: SubmitSink.Order)
 
-  def main(args: Array[String]): Unit = {
-    val pos = args.filterNot(_.startsWith("--"))
-    require(pos.length == 4,
-      "usage: graft.Serve <spoolDir> <checkpointDir> <submitDir> " +
-        "<stateDir> [--debug] [--order state-first|submit-first]")
-    val Array(spoolDir, checkpointDir, submitDir, stateDir) = pos
-    val debug = args.contains("--debug")
-    // an unrecognized value must fail fast, not silently fall back to
-    // StateFirst — the two orders have OPPOSITE crash semantics
-    val order = args.sliding(2).collectFirst {
-      case Array("--order", v) => v match {
+  private val Usage = "usage: graft.Serve <spoolDir> <checkpointDir> " +
+    "<submitDir> <stateDir> [--debug] [--order state-first|submit-first]"
+
+  /** Four directories and the two flags, in any order. An unknown
+    * flag, a missing `--order` value or an unrecognized one fails
+    * fast (IllegalArgumentException) and never falls back to
+    * StateFirst: the two orders have OPPOSITE crash semantics.
+    */
+  private[graft] def parseArgs(args: Seq[String]): Args = {
+    def fail(why: String) = throw new IllegalArgumentException(s"$why\n$Usage")
+    @scala.annotation.tailrec
+    def go(rest: List[String], dirs: Vector[String], debug: Boolean,
+        order: SubmitSink.Order): Args = rest match {
+      case "--debug" :: t => go(t, dirs, true, order)
+      case "--order" :: v :: t => go(t, dirs, debug, v match {
         case "submit-first" => SubmitSink.SubmitFirst
         case "state-first"  => SubmitSink.StateFirst
-        case other => sys.error(
-          s"--order must be state-first or submit-first, got '$other'")
+        case other =>
+          fail(s"--order must be state-first or submit-first, got '$other'")
+      })
+      case "--order" :: Nil => fail("--order needs a value")
+      case f :: _ if f.startsWith("--") => fail(s"unknown flag '$f'")
+      case d :: t => go(t, dirs :+ d, debug, order)
+      case Nil => dirs match {
+        case Vector(spool, ckpt, submit, state) =>
+          Args(spool, ckpt, submit, state, debug, order)
+        case _ => fail(s"want 4 directories, got ${dirs.length}")
       }
-    }.getOrElse(SubmitSink.StateFirst)
+    }
+    go(args.toList, Vector.empty, false, SubmitSink.StateFirst)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val Args(spoolDir, checkpointDir, submitDir, stateDir, debug, order) =
+      parseArgs(args.toSeq)
 
     val spool = new java.io.File(spoolDir)
     spool.mkdirs()

@@ -86,8 +86,9 @@ class DriverParquetWriterSpec extends SparkSpec {
     val stateDir = tmp("state") + "/st"
     val submitDir = tmp("submit") + "/out"
     def batch(ks: String*) = ks.map(k => (k, 1.0)).toDF("msg_key", "course")
-    SubmitSink.processBatch(batch("a", "b"), "msg_key",
-      SubmitSink.StateFirst, submitDir, stateDir)
+    def sink(submitDir: String, stateDir: String) =
+      new SubmitSink("msg_key", SubmitSink.StateFirst, submitDir, stateDir)
+    sink(submitDir, stateDir).write(batch("a", "b"))
     // what a kill between the writer's first bytes and its rename
     // leaves: a dot-prefixed, footer-less part of a parquet file
     val done = new java.io.File(stateDir).listFiles()
@@ -98,10 +99,8 @@ class DriverParquetWriterSpec extends SparkSpec {
 
     assert(spark.read.parquet(stateDir).as[String].collect().sorted.toSeq ==
       Seq("a", "b"))
-    // a new guard loads the log past the torn file
-    SubmitSink.processBatch(batch("b", "c"), "msg_key",
-      SubmitSink.StateFirst, submitDir, stateDir,
-      guard = Some(new SubmitSink.Guard(stateDir)))
+    // a new sink loads the log past the torn file
+    sink(submitDir, stateDir).write(batch("b", "c"))
     assert(spark.read.parquet(submitDir).select("msg_key").as[String]
       .collect().sorted.toSeq == Seq("a", "b", "c"))
 
@@ -111,8 +110,7 @@ class DriverParquetWriterSpec extends SparkSpec {
     Files.createDirectories(Paths.get(fresh))
     Files.copy(torn, Paths.get(fresh, torn.getFileName.toString))
     val freshSubmit = tmp("freshsubmit") + "/out"
-    SubmitSink.processBatch(batch("a"), "msg_key",
-      SubmitSink.StateFirst, freshSubmit, fresh)
+    sink(freshSubmit, fresh).write(batch("a"))
     assert(spark.read.parquet(freshSubmit).count() == 1)
     assert(spark.read.parquet(fresh).as[String].collect().toSeq == Seq("a"))
   }

@@ -31,16 +31,19 @@ class SinkOrderingSpec extends SparkSpec {
     val submitDir = tmp("submit") + "/out"
     val stateDir = tmp("state") + "/st"
     val crash = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def start() = spark.readStream
-      .schema("entityId LONG, course DOUBLE")
-      .json(srcDir)
-      .writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        SubmitSink.processBatch(df, "entityId", order, submitDir,
-          stateDir, () => if (crash.getAndSet(false))
+    // one sink per query, as Serve.pipeline makes them
+    def start() = {
+      val sink = new SubmitSink("entityId", order, submitDir, stateDir)
+      spark.readStream
+        .schema("entityId LONG, course DOUBLE")
+        .json(srcDir)
+        .writeStream
+        .foreachBatch { (df: DataFrame, _: Long) =>
+          sink.write(df, () => if (crash.getAndSet(false))
             throw new RuntimeException("injected crash between writes"))
-      }
-      .option("checkpointLocation", ckpt).start()
+        }
+        .option("checkpointLocation", ckpt).start()
+    }
     def feed(name: String, keys: Seq[Long]): Unit =
       java.nio.file.Files.write(
         java.nio.file.Paths.get(srcDir, name),
@@ -127,17 +130,18 @@ class SinkOrderingSpec extends SparkSpec {
     def batch(ks: String*) =
       ks.map(k => (k, k.length.toDouble)).toDF("msg_key", "course")
     val replayed = tmp("replayed") + "/out"
-    Seq(batch("a", "b"), batch("a", "b"), batch("b", "c")).foreach(
-      SubmitSink.processBatch(_, "msg_key", SubmitSink.SubmitFirst,
-        replayed, stateDir))
+    val replay =
+      new SubmitSink("msg_key", SubmitSink.SubmitFirst, replayed, stateDir)
+    Seq(batch("a", "b"), batch("a", "b"), batch("b", "c"))
+      .foreach(replay.write(_))
     val log = spark.read.parquet(stateDir)
     assert(log.inputFiles.length > 1 &&
       log.count() > log.distinct().count(),
       s"log should repeat keys across files: ${log.collect().toSeq}")
 
     val submitDir = tmp("submit") + "/out"
-    SubmitSink.processBatch(batch("a", "b", "c", "d", "e"), "msg_key",
-      SubmitSink.StateFirst, submitDir, stateDir)
+    new SubmitSink("msg_key", SubmitSink.StateFirst, submitDir, stateDir)
+      .write(batch("a", "b", "c", "d", "e"))
     val sent = spark.read.parquet(submitDir)
       .select("msg_key").as[String].collect().sorted.toSeq
     assert(sent == Seq("d", "e"), s"submitted: $sent")
@@ -159,16 +163,17 @@ class SinkOrderingSpec extends SparkSpec {
     assert(new java.io.File(stateDir, "_temporary/0").mkdirs())
     val batch = Seq((1L, 10.0), (2L, 20.0))
       .toDF("entityId", "course")
-    SubmitSink.processBatch(batch, "entityId",
-      SubmitSink.StateFirst, submitDir, stateDir)
+    new SubmitSink("entityId", SubmitSink.StateFirst, submitDir, stateDir)
+      .write(batch)
     assert(spark.read.parquet(submitDir).count() == 2,
       "batch must submit against an uncommitted state dir")
     assert(spark.read.parquet(stateDir).distinct().count() == 2)
   }
 
   test("StateFirst: a restarted query reads a new guard from the log and drops the previous run's keys") {
-    // Serve.pipeline holds one guard per query; a restart is a new
-    // query, so its guard must come from the log the last run wrote
+    // Serve.pipeline makes one sink per query; a restart is a new
+    // query, so its sink's processed keys must come from the log the
+    // last run wrote
     def tmp(p: String) = java.nio.file.Files
       .createTempDirectory(s"graft-restart-$p").toString
     val (srcDir, ckpt) = (tmp("src"), tmp("ckpt"))
@@ -178,24 +183,22 @@ class SinkOrderingSpec extends SparkSpec {
       java.nio.file.Files.write(java.nio.file.Paths.get(srcDir, name),
         keys.map(k => s"""{"entityId":$k}""").mkString("\n")
           .getBytes("UTF-8"))
-    def drain(): SubmitSink.Guard = {
-      val guard = new SubmitSink.Guard(stateDir)
+    def drain(): SubmitSink = {
+      val sink =
+        new SubmitSink("entityId", SubmitSink.StateFirst, submitDir, stateDir)
       val q = spark.readStream.schema("entityId LONG").json(srcDir)
         .writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          SubmitSink.processBatch(df, "entityId", SubmitSink.StateFirst,
-            submitDir, stateDir, guard = Some(guard))
-        }
+        .foreachBatch { (df: DataFrame, _: Long) => sink.write(df) }
         .option("checkpointLocation", ckpt).start()
       try q.processAllAvailable() finally q.stop()
-      guard
+      sink
     }
     feed("a.json", Seq(1L, 2L))
-    assert(drain().size == 2)
+    assert(drain().keysHeld == 2)
     // a fresh checkpoint would replay a.json too; this one only sees
     // b.json, whose 2 was processed by the previous run
     feed("b.json", Seq(2L, 3L))
-    assert(drain().size == 3)
+    assert(drain().keysHeld == 3)
     val sent = spark.read.parquet(submitDir).as[Long].collect().sorted.toSeq
     assert(sent == Seq(1L, 2L, 3L), s"submitted: $sent")
   }
@@ -205,15 +208,14 @@ class SinkOrderingSpec extends SparkSpec {
       .createTempDirectory(s"graft-guard-$p").toString
     val stateDir = tmp("state") + "/st"
     val submitDir = tmp("submit") + "/out"
-    val guard = new SubmitSink.Guard(stateDir)
+    val sink =
+      new SubmitSink("msg_key", SubmitSink.StateFirst, submitDir, stateDir)
     def batch(ks: String*) = ks.map(k => (k, 1.0)).toDF("msg_key", "course")
-    SubmitSink.processBatch(batch("a", "b"), "msg_key",
-      SubmitSink.StateFirst, submitDir, stateDir, guard = Some(guard))
-    // take the log away: only the guard can still know "b"
+    sink.write(batch("a", "b"))
+    // take the log away: only the sink's processed keys still know "b"
     val log = new java.io.File(stateDir)
     assert(log.renameTo(new java.io.File(stateDir + ".moved")))
-    SubmitSink.processBatch(batch("b", "c"), "msg_key",
-      SubmitSink.StateFirst, submitDir, stateDir, guard = Some(guard))
+    sink.write(batch("b", "c"))
     val sent = spark.read.parquet(submitDir)
       .select("msg_key").as[String].collect().sorted.toSeq
     assert(sent == Seq("a", "b", "c"), s"submitted: $sent")
@@ -222,34 +224,35 @@ class SinkOrderingSpec extends SparkSpec {
       Seq("c"))
   }
 
-  test("StateFirst: a key twice in one batch and not in the log submits twice, with or without a guard") {
+  test("StateFirst: a key twice in one batch and not in the log submits once, and is logged once") {
     def tmp(p: String) = java.nio.file.Files
       .createTempDirectory(s"graft-repeat-$p").toString
+    val stateDir = tmp("state") + "/st"
+    val submitDir = tmp("submit") + "/out"
+    val sink =
+      new SubmitSink("msg_key", SubmitSink.StateFirst, submitDir, stateDir)
     def batch(ks: String*) = ks.map(k => (k, 1.0)).toDF("msg_key", "course")
-    Seq(false, true).foreach { guarded =>
-      val stateDir = tmp("state") + "/st"
-      val submitDir = tmp("submit") + "/out"
-      val guard = Some(new SubmitSink.Guard(stateDir)).filter(_ => guarded)
-      Seq(batch("b"), batch("a", "a", "b")).foreach(
-        SubmitSink.processBatch(_, "msg_key", SubmitSink.StateFirst,
-          submitDir, stateDir, guard = guard))
-      val sent = spark.read.parquet(submitDir)
-        .select("msg_key").as[String].collect().sorted.toSeq
-      assert(sent == Seq("a", "a", "b"), s"guarded=$guarded: $sent")
-    }
+    Seq(batch("b"), batch("a", "a", "b")).foreach(sink.write(_))
+    def keys(dir: String) = spark.read.parquet(dir)
+      .select("msg_key").as[String].collect().sorted.toSeq
+    assert(keys(submitDir) == Seq("a", "b"), s"submitted: ${keys(submitDir)}")
+    assert(keys(stateDir) == Seq("a", "b"), s"logged: ${keys(stateDir)}")
   }
 
-  test("StateFirst: a key the driver cannot compare by value is refused") {
+  test("a key the driver cannot compare by value is refused in either order") {
     def tmp(p: String) = java.nio.file.Files
       .createTempDirectory(s"graft-keytype-$p").toString
     val binary = Seq((Array[Byte](1, 2), 1.0)).toDF("k", "course")
     val struct = Seq(((1, "x"), 1.0)).toDF("k", "course")
-    Seq(binary, struct).foreach { b =>
+    for (order <- Seq(SubmitSink.SubmitFirst, SubmitSink.StateFirst);
+         b <- Seq(binary, struct)) {
+      val (submitDir, stateDir) = (tmp("submit") + "/out", tmp("state") + "/st")
       val e = intercept[IllegalArgumentException](
-        SubmitSink.processBatch(b, "k", SubmitSink.StateFirst,
-          tmp("submit") + "/out", tmp("state") + "/st"))
+        new SubmitSink("k", order, submitDir, stateDir).write(b))
       assert(e.getMessage.contains("must be a string or integral column"),
-        e.getMessage)
+        s"$order: ${e.getMessage}")
+      assert(!new java.io.File(submitDir).exists &&
+        !new java.io.File(stateDir).exists, s"$order wrote before refusing")
     }
   }
 }

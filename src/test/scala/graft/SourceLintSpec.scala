@@ -82,13 +82,13 @@ class SourceLintSpec extends AnyFunSuite {
     .replaceAll("""(?s)/\*.*?\*/""", "").replaceAll("""//[^\n]*""", "")
 
   // The StateFirst sink keeps its processed keys on the driver: the
-  // state log is read in one place (the guard load), and nothing is
+  // state log is read in one place (the key load), and nothing is
   // cached or checkpointed, because no plan after the load reads it.
   test("SubmitSink reads the state log once and neither persists nor checkpoints") {
     assert("""localCheckpoint|persist|\.cache\(""".r.findAllIn(sinkCode).isEmpty,
       "SubmitSink caches or cuts lineage")
     assert("""\.read\.""".r.findAllIn(sinkCode).size == 1,
-      "SubmitSink reads the state log outside the guard load")
+      "SubmitSink reads the state log outside the key load")
   }
 
   // The sink writes its two files on the driver (SubmitSink.writeParquet),

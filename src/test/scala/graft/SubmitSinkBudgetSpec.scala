@@ -1,17 +1,18 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SortExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.streaming.SubmitSink
 
-/** Job budget of the ingest path: one webhook micro-batch, shaped the
-  * way `Serve.pipeline` shapes it, through the sink in either order
-  * (StateFirst on a query's guard of processed keys). Every Spark job
+/** Job budget of the ingest path: one webhook micro-batch, as
+  * `Serve.pipeline` hands it over, through the sink in either order
+  * (StateFirst on a sink's loaded processed keys). Every Spark job
   * is a driver round trip, and at ~20-row batches those round trips,
   * not the rows, set how fresh a POSTed point is. Adding a job to this
   * path fails here; lowering the budget is an ordinary change.
@@ -19,7 +20,7 @@ import graft.streaming.SubmitSink
 class SubmitSinkBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** Jobs of a batch: the collect. A StateFirst batch that loads its
-    * guard may take one more. */
+    * processed keys may take one more. */
   private val JobBudget = 1
 
   /** Spark jobs started by `f`, and the plans of the actions it ran
@@ -54,6 +55,20 @@ class SubmitSinkBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def tmp(p: String) = java.nio.file.Files
     .createTempDirectory(s"graft-budget-$p").toString
 
+  /** The batch is read as it arrives, one narrow partition: no action
+    * shuffles, sorts or aggregates it. */
+  private def assertNarrow(plans: Seq[(String, QueryExecution)]): Unit =
+    plans.foreach { case (name, qe) =>
+      val shuffles = collect(qe.executedPlan) { case s: ShuffleExchangeLike => s }
+      assert(shuffles.isEmpty, s"$name shuffles:\n${qe.executedPlan}")
+      val sortsOrAggs = collect(qe.executedPlan) {
+        case s: SortExec => s
+        case a: BaseAggregateExec => a
+      }
+      assert(sortsOrAggs.isEmpty,
+        s"$name sorts or aggregates:\n${qe.executedPlan}")
+    }
+
   /** A state log of `files` committed files holding keys e0..e49. */
   private def stateLog(files: Int): String = {
     val stateDir = tmp("state") + "/st"
@@ -64,8 +79,8 @@ class SubmitSinkBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     stateDir
   }
 
-  /** A four-partition batch with every key twice, shaped by
-    * `Serve.dedupBatch`: keys e`from` until e`until`.
+  /** A four-partition batch with every key twice: keys e`from` until
+    * e`until`.
     */
   private def batch(from: Int, until: Int): DataFrame = {
     val n = until - from
@@ -73,23 +88,21 @@ class SubmitSinkBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         .select((col("id") % n + from).as("id")))
       .withColumn("payload", length(col("msg_key")))
     assert(raw.rdd.getNumPartitions == 4)
-    Serve.dedupBatch(raw)
+    raw
   }
 
   test("StateFirst micro-batch on a loaded guard: at most 1 job, no shuffle, no read of the state log") {
     val stateDir = stateLog(5)
     val submitDir = tmp("submit") + "/out"
-    val guard = new SubmitSink.Guard(stateDir)
-    def run(b: DataFrame) = observed {
-      SubmitSink.processBatch(b, "msg_key", SubmitSink.StateFirst,
-        submitDir, stateDir, guard = Some(guard))
-    }
-    // the first batch loads the guard: one more job, one read of the log
+    val sink =
+      new SubmitSink("msg_key", SubmitSink.StateFirst, submitDir, stateDir)
+    def run(b: DataFrame) = observed(sink.write(b))
+    // the first batch loads the keys: one more job, one read of the log
     val (loadJobs, loadPlans) = run(batch(40, 60))
     assert(loadJobs <= JobBudget + 1, s"first batch ran $loadJobs jobs")
     assert(loadPlans.map(p => reads(p._2).count(_ == stateDir)).sum == 1,
       s"the load should read the log once: ${loadPlans.map(_._1)}")
-    assert(guard.size == 60)
+    assert(sink.keysHeld == 60)
 
     // e30..e69, of which e30..e59 are already processed
     val (jobs, plans) = run(batch(30, 70))
@@ -100,27 +113,22 @@ class SubmitSinkBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val logReads = plans.filter(p => reads(p._2).contains(stateDir))
     assert(logReads.isEmpty,
       s"actions after the load read the state log: ${logReads.map(_._1)}")
-    plans.foreach { case (name, qe) =>
-      val shuffles = collect(qe.executedPlan) { case s: ShuffleExchangeLike => s }
-      assert(shuffles.isEmpty, s"$name shuffles:\n${qe.executedPlan}")
-    }
+    assertNarrow(plans)
 
     val submitted = spark.read.parquet(submitDir)
       .select("msg_key").collect().map(_.getString(0)).toSeq
     assert(submitted.sorted == (50 until 70).map(i => s"e$i@t").sorted,
       s"submitted: $submitted")
-    assert(guard.size == 70)
+    assert(sink.keysHeld == 70)
   }
 
   test("StateFirst jobs per batch do not grow with the state log: 5 files vs 50") {
     def perBatch(files: Int): Int = {
       val stateDir = stateLog(files)
       val submitDir = tmp("submit") + "/out"
-      val guard = new SubmitSink.Guard(stateDir)
-      def run(from: Int) = jobsDuring {
-        SubmitSink.processBatch(batch(from, from + 20), "msg_key",
-          SubmitSink.StateFirst, submitDir, stateDir, guard = Some(guard))
-      }
+      val sink =
+        new SubmitSink("msg_key", SubmitSink.StateFirst, submitDir, stateDir)
+      def run(from: Int) = jobsDuring(sink.write(batch(from, from + 20)))
       run(40)
       // later batches add a file each to the log; none re-reads it
       val jobs = (60 until 120 by 20).map(run)
@@ -134,16 +142,16 @@ class SubmitSinkBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("SubmitFirst micro-batch: at most 1 job, and the spool is read once") {
+    // the four-partition batch, every key twice, as spool files
     val spool = tmp("spool")
-    keys(spark.range(0, 20, 1, 4)).withColumn("payload",
-      length(col("msg_key"))).write.mode(SaveMode.Append).json(spool)
-    val b = Serve.dedupBatch(
-      spark.read.schema("msg_key STRING, payload INT").json(spool))
+    batch(0, 20).write.mode(SaveMode.Append).json(spool)
+    val b = spark.read.schema("msg_key STRING, payload INT").json(spool)
+    assert(b.count() == 40)
     val submitDir = tmp("submit") + "/out"
     val stateDir = tmp("state") + "/st"
     val (jobs, plans) = observed {
-      SubmitSink.processBatch(b, "msg_key", SubmitSink.SubmitFirst,
-        submitDir, stateDir)
+      new SubmitSink("msg_key", SubmitSink.SubmitFirst, submitDir, stateDir)
+        .write(b)
     }
     info(s"$jobs jobs: ${plans.map(_._1).mkString(", ")}")
     assert(jobs <= JobBudget,
@@ -151,7 +159,9 @@ class SubmitSinkBudgetSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val spoolReads = plans.map(p => reads(p._2).count(_ == spool)).sum
     assert(spoolReads == 1,
       s"the batch should be read from the spool once: ${plans.map(_._1)}")
+    assertNarrow(plans)
 
+    // each key submitted once and logged once
     val expected = (0 until 20).map(i => s"e$i@t").sorted
     Seq(submitDir, stateDir).foreach { dir =>
       val got = spark.read.parquet(dir).select("msg_key").collect()
