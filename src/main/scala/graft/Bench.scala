@@ -184,6 +184,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json")
+    // Local-iteration filter (mirrors Verify's 3rd arg); unset, every
+    // query is timed.
+    val queries = SparkEntry.queries
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(SparkEntry.selectNames(_, queries.keySet))
+    val names = only.getOrElse(queries.keys.toSeq)
     val spark = LocalSession(LocalSession.cpus(32))
     // JIT/classloading warmup on the smallest SF so the first timed
     // queries don't absorb JVM startup (3-4 s skew otherwise).
@@ -202,12 +208,6 @@ object Bench {
     val runs = sys.env.get("SPARK_GRAFT_RUNS")
       .flatMap(v => scala.util.Try(v.toInt).toOption)
       .filter(r => r >= 1 && r <= 9).getOrElse(3)
-    // Local-iteration filter (mirrors Verify's 3rd arg): the driver
-    // never sets it, so driver rounds always time the full set.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val timed = only.fold(SparkEntry.queries)(names =>
-      SparkEntry.queries.filter(q => names(q._1)))
     // Per-query grouping (not interleaved corpus passes): each
     // query's 3 runs go back-to-back — run 2/3 still measure the
     // warm steady state (its own caches populated) — and the
@@ -245,7 +245,7 @@ object Bench {
         val t0 = System.nanoTime()
         val c0 = processCpuSec()
         try {
-          timed(name)(spark, sfDir).count()
+          queries(name)(spark, sfDir).count()
           Some(((System.nanoTime() - t0) / 1e9,
             if (cpuOk) processCpuSec() - c0 else -1.0))
         } catch { case scala.util.control.NonFatal(e) =>
@@ -258,7 +258,7 @@ object Bench {
       if (times.isEmpty) Left(lastErr) else Right(times.minBy(_._1))
     }
     val (results, failed, retriedOk) =
-      timeCorpus(timed.keys.toSeq, attempt)
+      timeCorpus(names, attempt)
     val cpuCorpus = if (cpuOk) processCpuSec() - cpuStart else -1.0
     val wallCorpus = (System.nanoTime() - wallStart) / 1e9
     val calPost = calibrationProbe(spark)

@@ -21,7 +21,8 @@ import graft.plans.{CosineSimExpr, MinHashSigExpr, SimHash64Expr, ShinglesExpr}
   *
   * Functions (all native expressions, no UDFs):
   *   - `cosine_sim(a, b)`      — fused double-precision cosine of two
-  *     numeric arrays, null on a null element or a length mismatch
+  *     numeric arrays; null when either side or an element is null,
+  *     the lengths differ, or either norm is zero
   *   - `simhash64(arr)`        — portable 60-bit SimHash
   *   - `minhash_sig(arr, k)`   — portable MinHash signature
   *   - `word_shingles(s, n)`   — word n-gram shingles

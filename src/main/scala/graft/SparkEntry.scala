@@ -30,6 +30,21 @@ object SparkEntry {
       AnalyticsQueries.defs ++ StatsQueries.defs ++
       SequenceQueries.defs ++ OpsQueries.defs ++ GraphQueries.defs
 
+  /** The query names a comma-separated filter selects (Verify's
+    * third argument, Bench's SPARK_GRAFT_ONLY, PlanDump's name list):
+    * in the given order, each once, blanks ignored. Fails on a name
+    * `known` lacks, listing every unknown name, and on a filter that
+    * names nothing — a typo must not run part of the corpus and
+    * report it as the whole.
+    */
+  def selectNames(csv: String, known: collection.Set[String]): Seq[String] = {
+    val names = csv.split(',').map(_.trim).filter(_.nonEmpty).distinct.toSeq
+    val unknown = names.filterNot(known)
+    require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
+    require(names.nonEmpty, s"no query names in filter '$csv'")
+    names
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */

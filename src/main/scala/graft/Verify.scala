@@ -5,16 +5,11 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
-    // optional 3rd arg: comma-separated name filter (local iteration;
-    // the driver always runs the full set). Since r12 the filter's
-    // ORDER is honored: SparkEntry.queries is a hash map, and a
-    // batched scale leg that wants its solo re-measures first (before
-    // the JVM has run anything heavier than the pre-touch) was
-    // getting hash order instead. Deduped order-preservingly (ADVICE
-    // r12): a name pasted twice would run the query twice into the
-    // same output directory mid-leg.
-    val only: Option[Seq[String]] =
-      rest.headOption.map(_.split(',').toSeq.distinct)
+    // optional 3rd arg: comma-separated name filter for local
+    // iteration, run in the given order; without it every query runs
+    val queries = SparkEntry.queries
+    val names = rest.headOption.fold(queries.keys.toSeq)(
+      SparkEntry.selectNames(_, queries.keySet))
     val spark = LocalSession(LocalSession.cpus(4))
     new java.io.File(outDir).mkdirs()
     // Written BEFORE the query loop (r12): it depends only on
@@ -25,9 +20,8 @@ object Verify {
       .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    only.fold(SparkEntry.queries.toSeq)(names =>
-        names.flatMap(n => SparkEntry.queries.get(n).map(n -> _)))
-      .foreach { case (name, fn) =>
+    names.foreach { name =>
+      val fn = queries(name)
       // NonFatal only (an OOM must abort, not cascade per-query
       // failures); the stderr line is single-line and null-safe so a
       // multi-line AnalysisException plan dump can't corrupt the

@@ -4,11 +4,9 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis building blocks for the training-data pipeline
-  * operators (BASELINE.json north star: dedup, text analysis).
-  *
-  * Everything here is built-in Spark SQL functions (higher-order
-  * functions over arrays) — no UDFs, so the whole family stays
-  * inside whole-stage codegen and runs at scan speed on a cluster.
+  * operators (BASELINE.json north star: dedup, text analysis): built-in
+  * Spark SQL functions and native expressions, no UDFs. The MinHash /
+  * SimHash sketches live in `graft.plans.Sketches`.
   */
 object TextFunctions {
 
@@ -33,30 +31,6 @@ object TextFunctions {
         i => concat_ws(" ", slice(t, i + lit(1), lit(n)))))
       .otherwise(array().cast("array<string>"))
   }
-
-  /** MinHash signature of a shingle set: k independent hash slots,
-    * slot i = min over shingles of xxhash64(i, shingle).
-    * Deterministic (xxhash64 is seed-stable) — safe for resume and
-    * for cross-partition agreement on a cluster.
-    */
-  def minhashSignature(shingles: Column, k: Int): Column =
-    transform(sequence(lit(1), lit(k)),
-      i => array_min(transform(shingles, sh => xxhash64(i, sh))))
-
-  /** 64-bit SimHash over a token array: per bit position, sum ±1
-    * across tokens by that bit of xxhash64(token); bit set iff the
-    * sum is positive. Expressed as SQL higher-order functions (the
-    * SQL parser allows a non-literal shift amount, unlike the Scala
-    * `shiftright` helper).
-    */
-  def simhash64(tokensSql: String): Column = expr(s"""
-    aggregate(
-      transform(sequence(0, 63), b ->
-        IF(aggregate($tokensSql, 0L, (acc, tok) ->
-             acc + IF((shiftright(xxhash64(tok), b) & 1L) = 1L, 1L, -1L))
-           > 0L,
-           shiftleft(1L, b), 0L)),
-      0L, (acc, x) -> acc + x)""")
 
   /** Hamming distance between two 64-bit SimHashes. */
   def hamming64(a: Column, b: Column): Column =

@@ -1,10 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+import org.apache.spark.sql.types.DataType
+import graft.plans.{CosineSimExpr, DotExpr, L2SqExpr, NearestCentroidExpr}
 
-/** Embedding-vector math over `array<float>` columns, expressed as
-  * codegen'd higher-order functions (no UDF). Floats are widened to
+/** Embedding-vector math over numeric array columns (float, double,
+  * int or long elements) — the one Column entry point for the native
+  * vector kernels in `graft.plans` (no UDF). Elements are widened to
   * double and accumulated sequentially left→right, so results are
   * bit-deterministic and engine-reproducible (the DuckDB oracles use
   * the literally identical formula — DuckDB's builtin
@@ -13,17 +18,10 @@ import org.apache.spark.sql.functions._
   */
 object VectorFunctions {
 
-  /** Σ aᵢ·bᵢ in double precision, sequential fold.
-    *
-    * r14: delegates to the native codegen'd [[graft.plans.DotExpr]]
-    * (guide §4.1) — the HOF `aggregate(zip_with(...))` form is a
-    * CodegenFallback that pays an interpreted lambda dispatch per
-    * element plus a zip_with array allocation per row; the native
-    * loop runs the IDENTICAL left→right double arithmetic (and the
-    * same null/length semantics), so every score is bit-unchanged.
-    */
+  /** Σ aᵢ·bᵢ in double precision, sequential fold; null on a null
+    * element or a length mismatch. */
   def dot(a: Column, b: Column): Column =
-    graft.plans.VectorFoldExprs.dot_native(a, b)
+    column(DotExpr(expression(a), expression(b)))
 
   /** Σ aᵢ² in double precision. */
   def normSq(a: Column): Column = dot(a, a)
@@ -31,14 +29,29 @@ object VectorFunctions {
   /** Euclidean norm. */
   def norm(a: Column): Column = sqrt(normSq(a))
 
-  /** Cosine similarity — parenthesized as dot / sqrt(na*nb); keep
-    * this exact shape in any oracle SQL for bit-identical results.
+  /** Cosine similarity, dot / sqrt(na*nb) — keep this exact shape in
+    * any oracle SQL for bit-identical results. Null when either side
+    * or an element is null, the lengths differ, or either norm is
+    * zero ([[graft.plans.CosineSimExpr]]).
     */
   def cosine(a: Column, b: Column): Column =
-    dot(a, b) / sqrt(normSq(a) * normSq(b))
+    column(CosineSimExpr(expression(a), expression(b)))
 
-  /** Squared L2 distance — native codegen'd fold, same delegation
-    * rationale and bit-exactness contract as [[dot]]. */
+  /** Squared L2 distance, same fold and null rule as [[dot]]. */
   def l2Sq(a: Column, b: Column): Column =
-    graft.plans.VectorFoldExprs.l2sq_native(a, b)
+    column(L2SqExpr(expression(a), expression(b)))
+
+  /** struct(d, cid) of the nearest centroid in `cents`
+    * (array<struct<cid:int, c:array<double>>>, cid-ascending) by
+    * squared L2, first minimum on ties
+    * ([[graft.plans.NearestCentroidExpr]]). */
+  def nearestCentroid(vec: Column, cents: Column): Column =
+    column(NearestCentroidExpr(expression(vec), expression(cents)))
+
+  /** The [[cosine]] kernel over arrays of the given types, for code
+    * that scores values outside a Column (IVF cell ranking). */
+  private[graft] def cosineKernel(left: DataType,
+      right: DataType): CosineSimExpr =
+    CosineSimExpr(BoundReference(0, left, nullable = true),
+      BoundReference(1, right, nullable = true))
 }

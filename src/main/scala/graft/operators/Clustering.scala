@@ -77,11 +77,7 @@ object Clustering {
     val centLit = array(sorted.map { case (cid, c) =>
       struct(lit(cid).as("cid"), typedLit(c.toSeq).as("c"))
     }: _*)
-    // native argmin kernel (r14): the aggregate() HOF form of this
-    // fold paid an interpreted lambda + acc-struct allocation per
-    // centroid per row; the expression runs the identical strict-<
-    // first-min fold (ExpressionsSpec pins bit-parity)
-    graft.plans.CentroidExprs.nearest_centroid(vec, centLit)
+    VectorFunctions.nearestCentroid(vec, centLit)
   }
 
   /** `(id, cid, dist, vec)` for every row against literal centroids

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
+import graft.functions.VectorFunctions
 import graft.plans.Sketches
 
 /** Document deduplication operators (BASELINE.json north star).
@@ -550,9 +551,9 @@ object Dedup {
   }
 
   /** Embedding near-dup pairs within a blocking key (e.g. a cluster
-    * label or LSH bucket): exact double-precision cosine on the
-    * blocked pair space. Blocking keeps the join linear-ish; the
-    * cosine itself is a codegen'd higher-order fold.
+    * label or LSH bucket): exact double-precision cosine
+    * ([[VectorFunctions.cosine]], null for a degenerate vector) on the
+    * blocked pair space. Blocking keeps the join linear-ish.
     */
   def embeddingPairsCosine(vecs: DataFrame, idCol: String, vecCol: String,
       blockCol: String): DataFrame = {
@@ -561,7 +562,6 @@ object Dedup {
     v.as("a").join(v.as("b"),
         col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        graft.plans.CosineSimExpr
-          .cosine_native(col("a.vec"), col("b.vec")).as("cos"))
+        VectorFunctions.cosine(col("a.vec"), col("b.vec")).as("cos"))
   }
 }

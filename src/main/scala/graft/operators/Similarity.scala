@@ -53,8 +53,7 @@ object Similarity {
         col(vecCol).as("q_vec"))))
       .filter(col("q_id") =!= col("id"))
       .select(col("q_id"), col("id"),
-        graft.plans.CosineSimExpr.cosine_native(col("q_vec"), col("vec"))
-          .as("cos"))
+        VectorFunctions.cosine(col("q_vec"), col("vec")).as("cos"))
 
   /** Exact top-k per query via window row_number (ties → smaller id). */
   def topKBruteForce(vecs: DataFrame, queries: DataFrame,
@@ -138,11 +137,9 @@ object Similarity {
       multiProbe: Int = 1): DataFrame = {
     require(multiProbe >= 0 && multiProbe <= 1,
       "only Hamming radius 0 or 1 probing is implemented")
-    // degenerate corpus vectors (null/empty) are excluded outright:
-    // they can never be a meaningful neighbor, and a zero-norm
-    // cosine evaluates NaN — which Spark's descending sort ranks
-    // ABOVE every real score, so one empty vector would win rank 1
-    // for any query it shares a bucket with
+    // null and empty corpus vectors are excluded outright: they have
+    // no buckets to collide in (and no cosine — a degenerate
+    // vector's score is null, which ranks last)
     val v = vecs.select(col(idCol).as("id"), col(vecCol).as("vec"))
       .where(col("vec").isNotNull && size(col("vec")) > 0)
     // measure the dimensionality (the annPq idiom) — a hardcoded
@@ -172,8 +169,7 @@ object Similarity {
       .join(broadcast(queries.select(col(idCol).as("q_id"),
         col(vecCol).as("q_vec"))), "q_id")
       .select(col("q_id"), col("id"),
-        graft.plans.CosineSimExpr.cosine_native(col("q_vec"), col("vec"))
-          .as("cos"))
+        VectorFunctions.cosine(col("q_vec"), col("vec")).as("cos"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("id"))
     scored.withColumn("rank", row_number().over(w))
@@ -250,8 +246,7 @@ object Similarity {
     val instances = assigned.join(broadcast(probes), "cell")
       .filter(col("id") =!= col("q_id"))
       .select(col("q_id"), col("id"),
-        graft.plans.CosineSimExpr.cosine_native(col("q_vec"), col("vec"))
-          .as("cos"))
+        VectorFunctions.cosine(col("q_vec"), col("vec")).as("cos"))
     // multi-assignment can surface a (q, id) pair through up to
     // nAssign cells; the duplicate scores are bit-identical, so a
     // max-agg dedup (map-side combinable) collapses them
@@ -315,14 +310,12 @@ object Similarity {
     enc.crossJoin(broadcast(qe))
       .filter(col("q_id") =!= col("id"))
       .select(col("q_id"), col("q_vec"), col("id"), col("vec"),
-        graft.plans.CosineSimExpr.cosine_native(col("q_dq"), col("dq"))
-          .as("approx"))
+        VectorFunctions.cosine(col("q_dq"), col("dq")).as("approx"))
       .withColumn("srank", row_number().over(
         w.orderBy(col("approx").desc, col("id"))))
       .filter(col("srank") <= shortlist)
       .select(col("q_id"), col("id"),
-        graft.plans.CosineSimExpr.cosine_native(col("q_vec"), col("vec"))
-          .as("cos"))
+        VectorFunctions.cosine(col("q_vec"), col("vec")).as("cos"))
       .withColumn("rank", row_number().over(
         w.orderBy(col("cos").desc, col("id"))))
       .filter(col("rank") <= k)
@@ -414,9 +407,7 @@ object Similarity {
           struct(lit(cid).as("cid"), typedLit(c).as("c"))
         }: _*))
       }: _*)
-      // native argmin kernel (r14): same strict-< first-min fold as
-      // the aggregate() HOF, one tight loop per row
-      graft.plans.CentroidExprs.nearest_centroid(col("sub"),
+      VectorFunctions.nearestCentroid(col("sub"),
         element_at(mapLit, col("sub_idx"))).getField("cid")
     }
     for (_ <- 1 to 2) {
@@ -498,8 +489,9 @@ object Similarity {
   }
 }
 
-/** One scored (query, candidate) pair. */
-case class ScoredNeighbor(q_id: Long, id: Long, score: Double)
+/** One scored (query, candidate) pair; `score` is None where the
+  * cosine is null (a degenerate vector). */
+case class ScoredNeighbor(q_id: Long, id: Long, score: Option[Double])
 
 /** Bounded top-k accumulator: the buffer never exceeds k entries, so
   * map-side partial aggregation caps the shuffle at k rows per key
@@ -515,26 +507,31 @@ case class ScoredNeighbor(q_id: Long, id: Long, score: Double)
   * formulation (O(k log k) comparisons + a fresh Seq per input row).
   */
 class TopKAggregator(k: Int)
-    extends Aggregator[ScoredNeighbor, Seq[(Double, Long)],
-      Seq[(Double, Long)]] {
+    extends Aggregator[ScoredNeighbor, Seq[(Option[Double], Long)],
+      Seq[(Option[Double], Long)]] {
 
-  // score DESC with Spark's NaN-as-largest sort semantics (java
-  // Double.compare is a total order with NaN greatest), id ASC on
-  // ties — a negate-the-score ordering would instead rank NaN LAST
-  // and diverge from the row_number window this aggregator must
-  // replicate (a zero vector's cosine is 0/0 = NaN).
-  private val ord: Ordering[(Double, Long)] =
-    new Ordering[(Double, Long)] {
-      def compare(a: (Double, Long), b: (Double, Long)): Int = {
-        val c = java.lang.Double.compare(b._1, a._1)
+  private type Hit = (Option[Double], Long)
+
+  // the row_number window's `cos desc, id` order, which this
+  // aggregator must replicate: NaN ranks first (java Double.compare
+  // is a total order with NaN greatest), a null score after every
+  // number, ties by id ASC
+  private val ord: Ordering[Hit] =
+    new Ordering[Hit] {
+      def compare(a: Hit, b: Hit): Int = {
+        val c = (a._1, b._1) match {
+          case (Some(x), Some(y)) => java.lang.Double.compare(y, x)
+          case (Some(_), None) => -1
+          case (None, Some(_)) => 1
+          case _ => 0
+        }
         if (c != 0) c else java.lang.Long.compare(a._2, b._2)
       }
     }
 
-  override def zero: Seq[(Double, Long)] = Seq.empty
+  override def zero: Seq[Hit] = Seq.empty
 
-  override def reduce(buf: Seq[(Double, Long)],
-      row: ScoredNeighbor): Seq[(Double, Long)] = {
+  override def reduce(buf: Seq[Hit], row: ScoredNeighbor): Seq[Hit] = {
     val e = (row.score, row.id)
     val n = buf.size
     if (n >= k && ord.lteq(buf(n - 1), e)) buf // worse than current k-th
@@ -546,7 +543,7 @@ class TopKAggregator(k: Int)
         val mid = (lo + hi) >>> 1
         if (ord.lt(buf(mid), e)) lo = mid + 1 else hi = mid
       }
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]
+      val out = scala.collection.mutable.ArrayBuffer.empty[Hit]
       out.sizeHint(math.min(n + 1, k))
       out ++= buf.view.slice(0, lo)
       out += e
@@ -555,10 +552,9 @@ class TopKAggregator(k: Int)
     }
   }
 
-  override def merge(a: Seq[(Double, Long)],
-      b: Seq[(Double, Long)]): Seq[(Double, Long)] = {
+  override def merge(a: Seq[Hit], b: Seq[Hit]): Seq[Hit] = {
     // linear merge of two sorted runs, truncated at k
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]
+    val out = scala.collection.mutable.ArrayBuffer.empty[Hit]
     out.sizeHint(math.min(a.size + b.size, k))
     var i = 0
     var j = 0
@@ -572,10 +568,8 @@ class TopKAggregator(k: Int)
     out.toSeq
   }
 
-  override def finish(buf: Seq[(Double, Long)]): Seq[(Double, Long)] = buf
+  override def finish(buf: Seq[Hit]): Seq[Hit] = buf
 
-  override def bufferEncoder: Encoder[Seq[(Double, Long)]] =
-    ExpressionEncoder[Seq[(Double, Long)]]()
-  override def outputEncoder: Encoder[Seq[(Double, Long)]] =
-    ExpressionEncoder[Seq[(Double, Long)]]()
+  override def bufferEncoder: Encoder[Seq[Hit]] = ExpressionEncoder[Seq[Hit]]()
+  override def outputEncoder: Encoder[Seq[Hit]] = ExpressionEncoder[Seq[Hit]]()
 }

@@ -1,39 +1,32 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native nearest-centroid argmin (r14, guide §4.1 / prompt item 4):
-  * the literal-centroid assignment fold was an interpreted
-  * `aggregate()` HOF — per centroid per row it paid a lambda dispatch,
-  * a fresh acc struct allocation, and boxed doubles, which made the
-  * Lloyd assigns and the PQ encode the corpus's residual
-  * interpreted-CPU hot spot. This expression runs the identical
-  * argmin as one tight loop per row.
+/** Nearest-centroid argmin: struct(d, cid) of the centroid at the
+  * smallest squared L2 distance from a vector, as one loop per row
+  * (the Lloyd assigns and the PQ encode). Column entry point:
+  * [[graft.functions.VectorFunctions.nearestCentroid]].
   *
-  * Semantics replicate the HOF fold EXACTLY (ExpressionsSpec pins
-  * bit-parity):
+  * Semantics (ExpressionsSpec pins bit-parity with an `aggregate()`
+  * fold over [[L2SqExpr]]):
   *   - `cents` is array<struct<cid:int, c:array<double>>> in
   *     cid-ascending order; a NULL `cents` (e.g. element_at on a
-  *     missing map key) nulls the result, as aggregate(NULL, ..)
-  *     does;
+  *     missing map key) nulls the result;
   *   - the fold starts at (Double.MaxValue, -1) and keeps the FIRST
   *     strict minimum — the (dist, cid) tie-break;
   *   - the per-centroid distance is [[L2SqExpr]]'s left→right double
-  *     fold; a NULL distance (null vec, null element, length
-  *     mismatch — the zip_with padding) fails the `<` and keeps the
-  *     accumulator, exactly like `when(d < acc.d)` under a null d;
+  *     fold, inlined so no distance is boxed; a NULL distance (null
+  *     vec, null element, length mismatch) skips that centroid;
   *   - the result is struct(d: double, cid: int), never null for
   *     non-null `cents` (empty centroid arrays yield the init
-  *     struct, matching aggregate over an empty array).
+  *     struct).
   *
   * CodegenFallback: the call is once per ROW (the loop inside is
-  * plain JVM code), so the per-element interpretation the HOF paid
-  * is gone; the surrounding stage still whole-stage-codegens.
+  * plain JVM code); the surrounding stage still whole-stage-codegens.
   */
 case class NearestCentroidExpr(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
@@ -46,12 +39,6 @@ case class NearestCentroidExpr(left: Expression, right: Expression)
 
   override def nullable: Boolean = right.nullable
 
-  private def vecElemOk(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType | DoubleType | IntegerType | LongType, _) =>
-      true
-    case _ => false
-  }
-
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     val centsOk = right.dataType match {
@@ -60,7 +47,7 @@ case class NearestCentroidExpr(left: Expression, right: Expression)
         StructField(_, ArrayType(DoubleType, _), _, _))), _) => true
       case _ => false
     }
-    if (vecElemOk(left.dataType) && centsOk)
+    if (NumericVecPairExpr.isNumericArray(left.dataType) && centsOk)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
@@ -69,14 +56,7 @@ case class NearestCentroidExpr(left: Expression, right: Expression)
           s"${right.dataType.sql}")
   }
 
-  @transient private lazy val getV: (ArrayData, Int) => Double =
-    left.dataType.asInstanceOf[ArrayType].elementType match {
-      case FloatType => (a, i) => a.getFloat(i).toDouble
-      case DoubleType => (a, i) => a.getDouble(i)
-      case IntegerType => (a, i) => a.getInt(i).toDouble
-      case LongType => (a, i) => a.getLong(i).toDouble
-      case other => throw new IllegalStateException(s"unexpected $other")
-    }
+  @transient private lazy val getV = NumericVecPairExpr.reader(left.dataType)
 
   override def eval(input: InternalRow): Any = {
     val centsV = right.eval(input)
@@ -92,8 +72,7 @@ case class NearestCentroidExpr(left: Expression, right: Expression)
       var j = 0
       while (j < k) {
         // a null struct entry cannot occur in the literal tables the
-        // callers build; guard anyway to mirror the HOF (a null ct
-        // nulls the lambda's d, which keeps the accumulator)
+        // callers build; guard anyway (it keeps the accumulator)
         if (!cents.isNullAt(j)) {
           val ct = cents.getStruct(j, 2)
           val c = ct.getArray(1)
@@ -125,13 +104,4 @@ case class NearestCentroidExpr(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(l: Expression,
       r: Expression): NearestCentroidExpr = copy(left = l, right = r)
-}
-
-object CentroidExprs {
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-
-  /** struct(d, cid) of the nearest centroid — the native twin of the
-    * `aggregate(cents, (MaxValue, -1), strict-< fold)` HOF. */
-  def nearest_centroid(vec: Column, cents: Column): Column =
-    column(NearestCentroidExpr(expression(vec), expression(cents)))
 }

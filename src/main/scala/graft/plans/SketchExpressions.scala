@@ -1,56 +1,22 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
-/** Native Catalyst expressions for the dedup sketches.
-  *
-  * The pure higher-order-function formulations (TextFunctions) are
-  * correct but interpreted — Spark's lambda functions don't
-  * participate in codegen, and the sketches hash every shingle k (or
-  * 64) times. At sf0.1 that made the two sketch queries ~400 s each.
-  * These expressions hash each shingle ONCE and run the k-slot /
-  * 64-bit loops as tight JVM loops: the same queries drop to
-  * sub-second (see BENCH_r*.json).
-  *
-  * This is preference order (b) from the build brief: a scalar
-  * `Expression` where built-ins can't express the computation
-  * efficiently — no custom LogicalPlan/Strategy needed.
+/** Native Catalyst expressions for the dedup sketches: each shingle
+  * is hashed ONCE and the k-slot / 60-bit loops run as tight JVM
+  * loops — the one MinHash / SimHash family in the program.
   *
   * The md5 prefix the portable sketches hash with is owned by
   * [[BloomHash]]; the shingle → signature → band pipeline built on
   * these expressions is owned by `graft.operators.Dedup`.
   */
 object Sketches {
-
-  /** xxhash64-style avalanche of one long (xxh64 finalizer). */
-  @inline private[plans] def mix(z0: Long): Long = {
-    var z = z0
-    z ^= z >>> 33
-    z *= 0xff51afd7ed558ccdL
-    z ^= z >>> 33
-    z *= 0xc4ceb9fe1a85ec53L
-    z ^= z >>> 33
-    z
-  }
-
-  /** Hash a UTF8String to a long (murmur3 x86 32 doubled + mix —
-    * stable across JVMs/executors, cheap, good avalanche).
-    */
-  @inline private[plans] def hashString(s: UTF8String): Long = {
-    val h1 = Murmur3_x86_32.hashUnsafeBytes(
-      s.getBaseObject, s.getBaseOffset, s.numBytes(), 42)
-    val h2 = Murmur3_x86_32.hashUnsafeBytes(
-      s.getBaseObject, s.getBaseOffset, s.numBytes(), 0x9747b28c)
-    mix((h1.toLong << 32) | (h2.toLong & 0xffffffffL))
-  }
 
   /** Engine-portable 60-bit string hash: the first 15 hex characters
     * of md5, read base-16 — i.e. exactly what ANSI SQL computes as
@@ -204,12 +170,12 @@ object MinHashSigExpr {
   val P: Long = 2147483647L
 }
 
-/** All sign-random-projection LSH bucket ids of an array<float>
-  * vector in one pass: `tables` buckets, each packing `bitsPerTable`
-  * hyperplane sign bits. Replaces the HOF formulation (one
-  * interpreted zip_with+aggregate per plane — 32 lambda evals per
-  * row) with a single tight loop over the plane matrix; same bits,
-  * same semantics (left-to-right double accumulation, `>= 0` bit).
+/** All sign-random-projection LSH bucket ids of a numeric vector in
+  * one pass: `tables` buckets, each packing `bitsPerTable` hyperplane
+  * sign bits (left-to-right double accumulation, `>= 0` bit).
+  * Elements are read through [[NumericVecPairExpr.reader]], so float
+  * and double vectors bucket alike; a plane and a vector of different
+  * lengths project over their common prefix.
   */
 case class LshBucketsExpr(child: Expression,
     planes: Seq[IndexedSeq[Double]], tables: Int, bitsPerTable: Int)
@@ -218,8 +184,13 @@ case class LshBucketsExpr(child: Expression,
   override def dataType: DataType =
     ArrayType(IntegerType, containsNull = false)
 
+  override def checkInputDataTypes(): TypeCheckResult =
+    NumericVecPairExpr.check("lsh_buckets", child)
+
   @transient private lazy val planeArr: Array[Array[Double]] =
     planes.map(_.toArray).toArray
+
+  @transient private lazy val get = NumericVecPairExpr.reader(child.dataType)
 
   override def nullSafeEval(input: Any): Any = {
     val vec = input.asInstanceOf[ArrayData]
@@ -235,7 +206,7 @@ case class LshBucketsExpr(child: Expression,
         var dot = 0.0
         var i = 0
         while (i < m) {
-          dot += plane(i) * vec.getFloat(i)
+          dot += plane(i) * get(vec, i)
           i += 1
         }
         if (dot >= 0) bucket |= (1 << j)
@@ -259,16 +230,19 @@ object LshBucketsExpr {
       planes.map(_.toIndexedSeq).toSeq, tables, bitsPerTable))
 }
 
-/** IVF coarse quantizer: all centroid indices of an array<float>
-  * vector, ranked by exact double-precision cosine (descending; ties
-  * by ascending index). Element 1 is the vector's cell assignment;
-  * the first nprobe elements are the query's probe list. The centroid
-  * matrix rides along as a literal (it is small by construction —
-  * O(√N) rows collected once at plan time), so assignment is
-  * map-side: no shuffle, no join, one fused loop per row. The cosine
-  * is computed with the same formula/associativity as
-  * [[CosineSimExpr]], so an engine that replays the formula (the
-  * DuckDB oracle) ranks identically.
+/** IVF coarse quantizer: all centroid indices of a numeric vector,
+  * ranked by [[CosineSimExpr]] (descending; ties by ascending index).
+  * Element 1 is the vector's cell assignment; the first nprobe
+  * elements are the query's probe list. The centroid matrix rides
+  * along as a literal (it is small by construction — O(√N) rows
+  * collected once at plan time), so assignment is map-side: no
+  * shuffle, no join, one cosine per centroid per row. The DuckDB
+  * oracle replays the same cosine, so it ranks identically.
+  *
+  * A centroid whose cosine is null (a zero centroid) ranks after
+  * every scored one, then by index. A vector that scores against no
+  * centroid (null or zero-norm vector, a null element, a dimension
+  * the centroids do not have) gets null: it joins no cell.
   */
 case class NearestCellsExpr(child: Expression,
     cents: Seq[IndexedSeq[Double]])
@@ -277,11 +251,15 @@ case class NearestCellsExpr(child: Expression,
   override def dataType: DataType =
     ArrayType(IntegerType, containsNull = false)
 
-  @transient private lazy val carr: Array[Array[Double]] =
-    cents.map(_.toArray).toArray
+  override def nullable: Boolean = true
 
-  override def nullSafeEval(input: Any): Any =
-    NearestCellsExpr.rankCells(carr, input)
+  override def checkInputDataTypes(): TypeCheckResult =
+    NumericVecPairExpr.check("nearest_cells", child)
+
+  @transient private lazy val ranker =
+    NearestCellsExpr.ranker(child.dataType, cents.map(_.toArray))
+
+  override def nullSafeEval(input: Any): Any = ranker(input)
 
   override protected def withNewChildInternal(c: Expression): NearestCellsExpr =
     copy(child = c)
@@ -304,8 +282,15 @@ case class NearestCellsBcastExpr(child: Expression,
   override def dataType: DataType =
     ArrayType(IntegerType, containsNull = false)
 
-  override def nullSafeEval(input: Any): Any =
-    NearestCellsExpr.rankCells(bcast.value, input)
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    NumericVecPairExpr.check("nearest_cells", child)
+
+  @transient private lazy val ranker =
+    NearestCellsExpr.ranker(child.dataType, bcast.value.toSeq)
+
+  override def nullSafeEval(input: Any): Any = ranker(input)
 
   override protected def withNewChildInternal(
       c: Expression): NearestCellsBcastExpr = copy(child = c)
@@ -314,36 +299,37 @@ case class NearestCellsBcastExpr(child: Expression,
 object NearestCellsExpr {
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
-  /** The ONE cosine-rank body both variants evaluate (literal and
+  /** The ONE cell-ranking body both variants evaluate (literal and
     * broadcast centroids differ only in where the matrix comes
-    * from); the oracle-parity contract — same formula, same
-    * associativity, ties by ascending index — lives here once, so a
-    * future numeric fix cannot desynchronize the two.
+    * from): each centroid is scored by the cosine kernel, with the
+    * centroid as its left and the vector (of type `vecType`) as its
+    * right input.
     */
-  private[plans] def rankCells(carr: Array[Array[Double]],
-      input: Any): GenericArrayData = {
-    val vec = input.asInstanceOf[ArrayData]
-    val n = vec.numElements()
+  private[plans] def ranker(vecType: DataType,
+      cents: Seq[Array[Double]]): Any => ArrayData = {
+    val cos = graft.functions.VectorFunctions.cosineKernel(
+      ArrayType(DoubleType, containsNull = false), vecType)
+    val carr: Array[ArrayData] =
+      cents.map(c => UnsafeArrayData.fromPrimitiveArray(c): ArrayData).toArray
     val m = carr.length
-    val cos = new Array[Double](m)
-    var c = 0
-    while (c < m) {
-      val cent = carr(c)
-      val d = math.min(n, cent.length)
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < d) {
-        val x = cent(i)
-        val y = vec.getFloat(i).toDouble
-        dot += x * y; na += x * x; nb += y * y
-        i += 1
+    vec => {
+      val score = new Array[Double](m)
+      val scored = new Array[Boolean](m)
+      var any = false
+      var c = 0
+      while (c < m) {
+        cos.nullSafeEval(carr(c), vec) match {
+          case s: Double => score(c) = s; scored(c) = true; any = true
+          case _ =>
+        }
+        c += 1
       }
-      cos(c) = dot / math.sqrt(na * nb)
-      c += 1
+      if (!any) null
+      else new GenericArrayData(Array.range(0, m)
+        .sortBy(i => (!scored(i), -score(i), i)).map(i => i: Any))
     }
-    val idx = Array.range(0, m).sortBy(i => (-cos(i), i))
-    new GenericArrayData(idx.map(i => i: Any))
   }
+
   def nearest_cells(vec: Column, cents: Array[Array[Double]]): Column =
     column(NearestCellsExpr(expression(vec),
       cents.map(_.toIndexedSeq).toSeq))

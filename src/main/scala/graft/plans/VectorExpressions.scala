@@ -1,75 +1,42 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native, whole-stage-codegen'd vector folds (r14, guide §4.1 /
-  * optimization-prompt item 4 — "eliminate non-codegen Expressions in
-  * the hot path"). The HOF formulations in
-  * [[graft.functions.VectorFunctions]] (`aggregate` over `zip_with`)
-  * are CodegenFallback expressions: every element pays an interpreted
-  * lambda dispatch through a NamedLambdaVariable, and `zip_with`
-  * allocates an intermediate array per row — measured as the dominant
-  * cost of semDedup's Σ|cluster|² join predicate and the Lloyd assign
-  * steps. These expressions run the identical arithmetic as a tight
-  * generated loop.
+/** Native, whole-stage-codegen'd vector kernels over two numeric
+  * arrays. Column entry point: [[graft.functions.VectorFunctions]].
   *
   * Exactness contract (the repo's oracle recipe): element values
   * widen to double exactly as `x.cast("double")` does, and each
-  * accumulator folds strictly left→right from 0.0 — the same addition
-  * sequence as the HOF `aggregate`, so results are bit-identical.
-  * Null semantics replicate the HOF's poisoning: a null element on
-  * either side (or a length mismatch, whose zip_with padding nulls
-  * the product) nulls the whole result.
+  * accumulator folds strictly left→right from 0.0, so the DuckDB
+  * oracles that replay the same sums match bit for bit. A null
+  * element on either side, or a length mismatch, nulls the result.
   */
 abstract class NumericVecPairExpr extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
 
-  // The fold can return null even when both inputs are non-null (length
-  // mismatch, null element), so nullability must not derive from the
-  // children. Declaring false there also broke codegen: nullSafeCodeGen's
-  // non-nullable branch never declares ev.isNull, and the `${ev.isNull} =
-  // true` writes the subclasses generate then referenced an undeclared
-  // name — Janino failed
-  // ("isNull_N is not an rvalue") and the whole stage fell back to the
-  // interpreted path this expression exists to remove.
+  // The kernels can return null even when both inputs are non-null
+  // (length mismatch, null element), so nullability must not derive
+  // from the children. Declaring false there also broke codegen:
+  // nullSafeCodeGen's non-nullable branch never declares ev.isNull,
+  // and the `${ev.isNull} = true` writes the subclasses generate
+  // then referenced an undeclared name — Janino failed ("isNull_N is
+  // not an rvalue") and the whole stage fell back to the interpreted
+  // path.
   override def nullable: Boolean = true
 
-  protected def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
+  override def checkInputDataTypes(): TypeCheckResult =
+    NumericVecPairExpr.check(prettyName, left, right)
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(e: Expression): Boolean = e.dataType match {
-      case ArrayType(FloatType | DoubleType | IntegerType | LongType, _) =>
-        true
-      case _ => false
-    }
-    if (ok(left) && ok(right))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects arrays of numeric elements, got " +
-          s"${left.dataType.sql} / ${right.dataType.sql}")
-  }
-
-  private def get(dt: DataType): (ArrayData, Int) => Double = dt match {
-    case FloatType => (a, i) => a.getFloat(i).toDouble
-    case DoubleType => (a, i) => a.getDouble(i)
-    case IntegerType => (a, i) => a.getInt(i).toDouble
-    case LongType => (a, i) => a.getLong(i).toDouble
-    case other => throw new IllegalStateException(s"unexpected $other")
-  }
-
-  @transient protected lazy val getL = get(elemType(left))
-  @transient protected lazy val getR = get(elemType(right))
+  @transient protected lazy val getL = NumericVecPairExpr.reader(left.dataType)
+  @transient protected lazy val getR = NumericVecPairExpr.reader(right.dataType)
 
   private def getCode(dt: DataType, arr: String, i: String): String =
-    dt match {
+    dt.asInstanceOf[ArrayType].elementType match {
       case FloatType => s"(double) $arr.getFloat($i)"
       case DoubleType => s"$arr.getDouble($i)"
       case IntegerType => s"(double) $arr.getInt($i)"
@@ -80,9 +47,40 @@ abstract class NumericVecPairExpr extends BinaryExpression {
   /** Java source reading element `i` of the left (right) array as a
     * double. */
   protected def getCodeL(arr: String, i: String): String =
-    getCode(elemType(left), arr, i)
+    getCode(left.dataType, arr, i)
   protected def getCodeR(arr: String, i: String): String =
-    getCode(elemType(right), arr, i)
+    getCode(right.dataType, arr, i)
+}
+
+/** The one vector-input rule every vector kernel reads through. */
+object NumericVecPairExpr {
+
+  /** The arrays a vector kernel accepts: float, double, int or long
+    * elements. */
+  def isNumericArray(dt: DataType): Boolean = dt match {
+    case ArrayType(FloatType | DoubleType | IntegerType | LongType, _) =>
+      true
+    case _ => false
+  }
+
+  /** Analysis-time form of [[isNumericArray]] over `fn`'s vector
+    * arguments. */
+  def check(fn: String, vecs: Expression*): TypeCheckResult =
+    if (vecs.forall(v => isNumericArray(v.dataType)))
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$fn expects arrays of numeric elements, got " +
+        vecs.map(_.dataType.sql).mkString(" / "))
+
+  /** Element `i` of an array of type `dt`, widened to double. */
+  def reader(dt: DataType): (ArrayData, Int) => Double =
+    dt.asInstanceOf[ArrayType].elementType match {
+      case FloatType => (a, i) => a.getFloat(i).toDouble
+      case DoubleType => (a, i) => a.getDouble(i)
+      case IntegerType => (a, i) => a.getInt(i).toDouble
+      case LongType => (a, i) => a.getLong(i).toDouble
+      case other => throw new IllegalStateException(s"unexpected $other")
+    }
 }
 
 /** A single-accumulator fold: Σ term(aᵢ, bᵢ), left→right from 0.0. */
@@ -99,11 +97,11 @@ abstract class BinaryVecFoldExpr extends NumericVecPairExpr {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
     val n = a.numElements()
-    if (n != b.numElements()) return null // zip_with pad ⇒ null sum
+    if (n != b.numElements()) return null
     var acc = 0.0
     var i = 0
     while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null // HOF poisoning
+      if (a.isNullAt(i) || b.isNullAt(i)) return null
       acc += term(getL(a, i), getR(b, i))
       i += 1
     }
@@ -139,8 +137,7 @@ abstract class BinaryVecFoldExpr extends NumericVecPairExpr {
   }
 }
 
-/** Σ aᵢ·bᵢ, double precision, left→right — the native twin of
-  * `VectorFunctions.dot`'s HOF fold. */
+/** Σ aᵢ·bᵢ, double precision, left→right. */
 case class DotExpr(left: Expression, right: Expression)
     extends BinaryVecFoldExpr {
   override protected def term(x: Double, y: Double): Double = x * y
@@ -150,8 +147,7 @@ case class DotExpr(left: Expression, right: Expression)
       r: Expression): DotExpr = copy(left = l, right = r)
 }
 
-/** Σ (aᵢ−bᵢ)², double precision, left→right — the native twin of
-  * `VectorFunctions.l2Sq`'s HOF fold. */
+/** Σ (aᵢ−bᵢ)², double precision, left→right. */
 case class L2SqExpr(left: Expression, right: Expression)
     extends BinaryVecFoldExpr {
   override protected def term(x: Double, y: Double): Double = {
@@ -164,12 +160,17 @@ case class L2SqExpr(left: Expression, right: Expression)
 }
 
 /** Cosine similarity of two numeric arrays in double precision,
-  * dot / sqrt(na·nb), with the three sums fused in one generated loop
-  * — the hot-path scalar for kNN/ANN scoring and `cosine_sim`. Each
-  * sum folds left→right from 0.0, so the result is bit-identical to
-  * `VectorFunctions.cosine` (three [[DotExpr]] folds), edges
-  * included: null if either side is null, has a null element, or the
-  * lengths differ.
+  * dot / sqrt(na·nb), with the three sums fused in one loop — the one
+  * cosine kernel: kNN/ANN scoring, SemDeDup, IVF cell ranking
+  * ([[NearestCellsExpr]]) and `cosine_sim` all evaluate it. Each sum
+  * folds left→right from 0.0, so the result is bit-identical to the
+  * composed `dot(a, b) / sqrt(dot(a, a) * dot(b, b))` the DuckDB
+  * oracles replay.
+  *
+  * Null when either side is null, an element is null, the lengths
+  * differ, or the denominator is zero (either norm zero — an empty
+  * or all-zero vector). Null is what DuckDB's `x / 0` returns; it
+  * sorts last under `desc` and never passes a `>=` threshold.
   */
 case class CosineSimExpr(left: Expression, right: Expression)
     extends NumericVecPairExpr {
@@ -188,7 +189,8 @@ case class CosineSimExpr(left: Expression, right: Expression)
       dot += x * y; na += x * x; nb += y * y
       i += 1
     }
-    dot / math.sqrt(na * nb)
+    val den = math.sqrt(na * nb)
+    if (den == 0.0) null else dot / den
   }
 
   override protected def doGenCode(ctx: CodegenContext,
@@ -201,6 +203,7 @@ case class CosineSimExpr(left: Expression, right: Expression)
       val nb = ctx.freshName("nb")
       val x = ctx.freshName("x")
       val y = ctx.freshName("y")
+      val den = ctx.freshName("den")
       s"""
          |int $n = $a.numElements();
          |if ($n != $b.numElements()) {
@@ -216,7 +219,9 @@ case class CosineSimExpr(left: Expression, right: Expression)
          |    $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
          |  }
          |  if (!${ev.isNull}) {
-         |    ${ev.value} = $dot / java.lang.Math.sqrt($na * $nb);
+         |    double $den = java.lang.Math.sqrt($na * $nb);
+         |    if ($den == 0.0) ${ev.isNull} = true;
+         |    else ${ev.value} = $dot / $den;
          |  }
          |}
        """.stripMargin
@@ -225,18 +230,4 @@ case class CosineSimExpr(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(l: Expression,
       r: Expression): CosineSimExpr = copy(left = l, right = r)
-}
-
-object CosineSimExpr {
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-  def cosine_native(a: Column, b: Column): Column =
-    column(CosineSimExpr(expression(a), expression(b)))
-}
-
-object VectorFoldExprs {
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-  def dot_native(a: Column, b: Column): Column =
-    column(DotExpr(expression(a), expression(b)))
-  def l2sq_native(a: Column, b: Column): Column =
-    column(L2SqExpr(expression(a), expression(b)))
 }

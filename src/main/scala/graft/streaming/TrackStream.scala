@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One incoming track point (the reference's webhook/poll record after
   * decode — reference `task.ts:14-39`, SURVEY.md §1.1).
@@ -60,8 +60,7 @@ object TrackStream {
             // tie and drop it); on truly equal ts the FIRST arrival
             // wins — the stored point goes first so maxBy (which
             // keeps the first maximal element) can't let a same-ts
-            // point from a later micro-batch displace it. Same
-            // policy as v2 below.
+            // point from a later micro-batch displace it.
             val candidates = state.getOption.iterator ++ rows
             val best = candidates.maxBy(p => StreamArith.micros(p.ts))
             state.update(best)
@@ -70,30 +69,6 @@ object TrackStream {
               best.course, evicted = false))
           }
       }
-  }
-
-  /** [[latestWithTtl]] on the arbitrary-state v2 API
-    * (`transformWithState`, Spark 4): same semantics, different
-    * machinery — named state variables on a RocksDB-backed store
-    * instead of one opaque state object, and explicit per-key timers
-    * instead of the single `setTimeoutTimestamp` slot. What v2 buys
-    * at scale: state larger than executor heap (RocksDB spills),
-    * independently evolvable named state variables, and first-class
-    * TTL on each variable. StreamingSpec pins this path
-    * behavior-identical to the v1 operator on the same feed.
-    *
-    * Requires `spark.sql.streaming.stateStore.providerClass` =
-    * RocksDBStateStoreProvider on the running query.
-    */
-  def latestWithTtlV2(points: Dataset[TrackPoint],
-      retentionMs: Long): Dataset[DeviceUpdate] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    points
-      .withWatermark("ts", s"$retentionMs milliseconds")
-      .groupByKey(_.entityId)
-      .transformWithState(new LatestTrackProcessor(retentionMs),
-        TimeMode.EventTime(), OutputMode.Update())
   }
 
   /** Streaming tumbling-window counts with a watermark (late rows
@@ -152,51 +127,3 @@ object TrackStream {
   * stream).
   */
 case class Alert(entityId: Long, a_ts: java.sql.Timestamp, kind: String)
-
-/** Arbitrary-state-v2 processor behind [[TrackStream.latestWithTtlV2]]:
-  * one named ValueState holding the newest point per device, one
-  * event-time timer per device for the retention tombstone. On every
-  * update the previous timer is deleted and re-registered at the new
-  * expiry, so exactly one eviction timer is live per key; the stale-
-  * timer guard in [[handleExpiredTimer]] covers the
-  * delete-unsupported edge (a timer that already fired this batch).
-  */
-class LatestTrackProcessor(retentionMs: Long)
-    extends StatefulProcessor[Long, TrackPoint, DeviceUpdate] {
-
-  @transient private var latest: ValueState[TrackPoint] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    latest = getHandle.getValueState[TrackPoint]("latest",
-      Encoders.product[TrackPoint], TTLConfig.NONE)
-
-  override def handleInputRows(id: Long, rows: Iterator[TrackPoint],
-      timers: TimerValues): Iterator[DeviceUpdate] = {
-    val prev = if (latest.exists()) Some(latest.get()) else None
-    // newest ts at full µs, first arrival on equal ts (prev goes
-    // first so maxBy keeps it on ties) — same policy as v1
-    val best = (prev.iterator ++ rows)
-      .maxBy(p => StreamArith.micros(p.ts))
-    prev.foreach(p => getHandle.deleteTimer(p.ts.getTime + retentionMs))
-    latest.update(best)
-    getHandle.registerTimer(best.ts.getTime + retentionMs)
-    Iterator.single(DeviceUpdate(id, best.ts, best.isEmergency,
-      best.course, evicted = false))
-  }
-
-  override def handleExpiredTimer(id: Long, timers: TimerValues,
-      expired: ExpiredTimerInfo): Iterator[DeviceUpdate] = {
-    val dead = if (latest.exists()) Some(latest.get()) else None
-    dead match {
-      // only the CURRENT expiry evicts; an already-fired timer from
-      // an older point has a smaller expiry and must not tombstone
-      // newer state
-      case Some(d) if d.ts.getTime + retentionMs <=
-          expired.getExpiryTimeInMs =>
-        latest.clear()
-        Iterator.single(DeviceUpdate(id, d.ts, d.isEmergency, d.course,
-          evicted = true))
-      case _ => Iterator.empty
-    }
-  }
-}

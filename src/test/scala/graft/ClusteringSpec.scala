@@ -80,6 +80,36 @@ class ClusteringSpec extends SparkSpec {
     assert(bad.count() == 0, "survivor must be the cluster min id")
   }
 
+  test("semDedupPrune: a zero vector scores null and prunes nothing") {
+    // id -1 is the earliest id, so it is the "b" side of every pair in
+    // its cluster; a NaN or exception there would prune or fail
+    val base = Tables(spark, sf(), "embeddings")
+      .select($"vec_id", $"embedding")
+    val corpus = base.unionByName(
+      Seq((-1L, Seq.fill(64)(0.0f))).toDF("vec_id", "embedding"))
+    val verdict = Clustering.semDedupPrune(corpus, "vec_id", "embedding")
+      .as[(Long, Int, Boolean)].collect()
+      .map { case (id, cid, kept) => id -> (cid, kept) }.toMap
+    assert(verdict.size == 501 && verdict(-1L)._2, verdict.get(-1L))
+    // recompute every verdict from the clusters, leaving the zero
+    // vector out: same left-to-right double sums as the kernel
+    val vecs = base.as[(Long, Seq[Float])].collect()
+      .map { case (id, v) => id -> v.map(_.toDouble) }.toMap
+    def cos(a: Seq[Double], b: Seq[Double]): Double = {
+      var d = 0.0; var na = 0.0; var nb = 0.0
+      a.indices.foreach { i =>
+        d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i)
+      }
+      d / math.sqrt(na * nb)
+    }
+    val byCid = vecs.keys.groupBy(id => verdict(id)._1)
+    vecs.keys.foreach { a =>
+      val dropped = byCid(verdict(a)._1).exists(b =>
+        b < a && cos(vecs(a), vecs(b)) >= 0.35)
+      assert(verdict(a)._2 == !dropped, s"id $a")
+    }
+  }
+
   test("stateless centroid routing == batch assignment, zero state ops") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.OutputMode

@@ -34,7 +34,7 @@ class DedupSpec extends SparkSpec {
 
   test("minhash signature approximates Jaccard") {
     val sigs = docs.select($"doc_id",
-      TextFunctions.minhashSignature(
+      graft.plans.Sketches.minhashSignature(
         array_distinct(TextFunctions.wordShingles($"text", 3)), 128)
         .as("sig"))
     // signature agreement rate ≈ jaccard for one known planted pair

@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions, VectorFunctions}
-import graft.plans.{CosineSimExpr, Sketches}
+import graft.plans.Sketches
 
-/** Native Catalyst expressions vs their HOF reference formulations. */
+/** Native Catalyst expressions vs reference formulations written out
+  * in the spec (higher-order-function folds, composed dot products). */
 class ExpressionsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -12,13 +13,14 @@ class ExpressionsSpec extends SparkSpec {
   private lazy val docs = Tables(spark, sf(), "documents")
 
   test("native cosine is bit-identical to the HOF reference (and the oracle)") {
+    // the oracle's shape: three separate folds, dot / sqrt(na * nb)
+    val (a, b) = (col("a.embedding"), col("b.embedding"))
+    val reference = VectorFunctions.dot(a, b) /
+      sqrt(VectorFunctions.dot(a, a) * VectorFunctions.dot(b, b))
     val pairs = emb.as("a").join(emb.as("b"),
         col("a.vec_id") + 1 === col("b.vec_id"))
-      .select(
-        CosineSimExpr.cosine_native(col("a.embedding"), col("b.embedding"))
-          .as("native"),
-        VectorFunctions.cosine(col("a.embedding"), col("b.embedding"))
-          .as("hof"))
+      .select(VectorFunctions.cosine(a, b).as("native"),
+        reference.as("hof"))
       .as[(Double, Double)].collect()
     assert(pairs.nonEmpty)
     pairs.foreach { case (n, h) =>
@@ -31,7 +33,7 @@ class ExpressionsSpec extends SparkSpec {
     val p = withoutAqe {
       emb.as("a").join(emb.as("b"),
           col("a.vec_id") + 1 === col("b.vec_id"))
-        .select(CosineSimExpr.cosine_native(col("a.embedding"),
+        .select(VectorFunctions.cosine(col("a.embedding"),
           col("b.embedding")).as("c"))
         .queryExecution
         .explainString(org.apache.spark.sql.execution.CodegenMode)
@@ -234,7 +236,7 @@ class ExpressionsSpec extends SparkSpec {
     val both = emb.limit(100).select($"vec_id", $"embedding")
       .unionByName(edge)
       .select(
-        graft.plans.CentroidExprs.nearest_centroid($"embedding", centLit)
+        VectorFunctions.nearestCentroid($"embedding", centLit)
           .as("n"),
         hofBest($"embedding", centLit).as("h"))
       .as[((Double, Int), (Double, Int))].collect()
@@ -247,7 +249,7 @@ class ExpressionsSpec extends SparkSpec {
     // null centroid table (the PQ element_at-on-missing-key shape)
     // nulls the result like aggregate(NULL, ...)
     val nullCents = emb.limit(3).select(
-      graft.plans.CentroidExprs.nearest_centroid($"embedding",
+      VectorFunctions.nearestCentroid($"embedding",
         element_at(map(lit(99), centLit), lit(1))).as("n"))
     assert(nullCents.filter($"n".isNotNull).count() == 0)
   }

@@ -38,6 +38,10 @@ class SimilaritySpec extends SparkSpec {
       Similarity.topKAggregated(emb, qs, "vec_id", "embedding", 5))
     assert(brute.nonEmpty)
     assert(agged == brute)
+    // degenerate vectors score null, which both rank last
+    assert(asTriples(Similarity.topKAggregated(embPlus, qsPlus, "vec_id",
+      "embedding", 5)) == asTriples(Similarity.topKBruteForce(embPlus,
+      qsPlus, "vec_id", "embedding", 5)))
   }
 
   test("LSH ANN: exact precision on returned pairs, recall >= 0.9") {
@@ -234,19 +238,75 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("TopKAggregator ranks NaN like the window's desc sort (largest)") {
-    // a zero vector's cosine is 0/0 = NaN; Spark's desc sort treats
-    // NaN as the LARGEST value, and the aggregated formulation must
-    // agree with the row_number window it claims to replicate
+    // Spark's desc sort treats NaN as the LARGEST value and a null
+    // (a degenerate vector's cosine) as smaller than every number;
+    // the aggregated formulation must agree with the row_number
+    // window it claims to replicate
     import graft.operators.{ScoredNeighbor, TopKAggregator}
-    val agg = new TopKAggregator(2)
+    val agg = new TopKAggregator(3)
     val buf = Seq(
-      ScoredNeighbor(1L, 10L, 0.5),
-      ScoredNeighbor(1L, 11L, Double.NaN),
-      ScoredNeighbor(1L, 12L, 0.9)
+      ScoredNeighbor(1L, 9L, None),
+      ScoredNeighbor(1L, 10L, Some(0.5)),
+      ScoredNeighbor(1L, 11L, Some(Double.NaN)),
+      ScoredNeighbor(1L, 12L, Some(0.9))
     ).foldLeft(agg.zero)(agg.reduce)
     val out = agg.finish(buf)
-    assert(out.map(_._2) == Seq(11L, 12L),
-      s"NaN must rank first (Spark desc semantics): $out")
+    assert(out.map(_._2) == Seq(11L, 12L, 10L),
+      s"NaN must rank first, null last (Spark desc semantics): $out")
+    assert(agg.finish(Seq(ScoredNeighbor(1L, 9L, None),
+      ScoredNeighbor(1L, 10L, Some(-1.0))).foldLeft(agg.zero)(agg.reduce))
+      .map(_._2) == Seq(10L, 9L))
+  }
+
+  /** The corpus plus a zero vector (id -1) and a 2-dim vector (id -2)
+    * among 64-dim ones; queries are the usual five plus both. */
+  private lazy val degenerate = Seq(
+    (-1L, Seq.fill(64)(0.0f)), (-2L, Seq(0.5f, 1.0f)))
+    .toDF("vec_id", "embedding")
+  private lazy val embPlus =
+    emb.select($"vec_id", $"embedding").unionByName(degenerate)
+  private lazy val qsPlus =
+    qs.select($"vec_id", $"embedding").unionByName(degenerate)
+
+  test("annIvf: a zero vector and a wrong-dimension vector join no cell") {
+    val cents = emb.orderBy($"vec_id").limit(4).select($"embedding")
+      .as[Seq[Float]].collect().map(_.map(_.toDouble).toArray)
+    val cells = embPlus.filter($"vec_id" <= 0)
+      .select($"vec_id", graft.plans.NearestCellsExpr
+        .nearest_cells($"embedding", cents).as("cells"))
+      .as[(Long, Option[Seq[Int]])].collect().toMap
+    assert(cells(-1L).isEmpty && cells(-2L).isEmpty, cells)
+    assert(cells(0L).map(_.sorted) == Some(Seq(0, 1, 2, 3)), cells)
+    // so neither is ever a candidate, and neither probes as a query
+    val rows = Similarity.annIvf(embPlus, qsPlus, "vec_id", "embedding", 5)
+      .select($"q_id", $"id").as[(Long, Long)].collect()
+    assert(rows.nonEmpty)
+    assert(!rows.exists { case (q, id) => q < 0 || id < 0 },
+      rows.filter { case (q, id) => q < 0 || id < 0 }.toSeq)
+  }
+
+  test("annPq: a zero vector scores null, so it never takes a top-k slot with a score") {
+    val rows = Similarity.annPq(embPlus.filter($"vec_id" =!= -2L),
+        qsPlus.filter($"vec_id" =!= -2L), "vec_id", "embedding", k = 5)
+      .select($"q_id", $"id", $"cos")
+      .as[(Long, Long, Option[Double])].collect()
+    assert(rows.count(_._1 >= 0) == 25, rows.toSeq)
+    val withZero = rows.filter { case (q, id, _) => q == -1L || id == -1L }
+    assert(withZero.forall(_._3.isEmpty), withZero.toSeq)
+    // the other queries' top-5 hold scored neighbors only
+    assert(rows.filter(_._1 >= 0).forall(_._3.isDefined), rows.toSeq)
+  }
+
+  test("lsh_buckets: array<double> buckets equal array<float> buckets") {
+    val planes = Similarity.rademacherPlanes(64, 24 * 8)
+    val both = emb.limit(50).select(
+        Similarity.bucketIds($"embedding", planes, 24, 8).as("f"),
+        Similarity.bucketIds(transform($"embedding", _.cast("double")),
+          planes, 24, 8).as("d"))
+      .as[(Seq[Int], Seq[Int])].collect()
+    assert(both.length == 50)
+    both.foreach { case (f, d) => assert(f == d) }
+    assert(both.map(_._1).distinct.length > 1)
   }
 
   test("annLsh derives the plane dimensionality from the corpus") {

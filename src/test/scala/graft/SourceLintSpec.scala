@@ -76,6 +76,23 @@ class SourceLintSpec extends AnyFunSuite {
       s"MinHash signatures outside Dedup: $found")
   }
 
+  // The cosine has one kernel (CosineSimExpr), built by the Column
+  // entry point (VectorFunctions) and the SQL function registration;
+  // an operator that builds its own cannot drift from the null rule.
+  test("CosineSimExpr( is constructed only in VectorFunctions and GraftExtensions") {
+    val found = sites("""(?<!class )\bCosineSimExpr\(""".r)
+    assert(found.keySet == Set("graft/functions/VectorFunctions.scala",
+      "graft/GraftExtensions.scala"),
+      s"cosine kernels built outside the entry points: $found")
+  }
+
+  // One MinHash / SimHash family: the md5-portable sketches.
+  test("minhashSignature and simhash64 are defined only in SketchExpressions.scala") {
+    val found = sites("""def (minhashSignature|simhash64)\b""".r)
+    assert(found == Map("graft/plans/SketchExpressions.scala" -> 2),
+      s"second sketch family: $found")
+  }
+
   /** SubmitSink.scala without its comments. */
   private def sinkCode: String = new String(Files.readAllBytes(
       Paths.get("src/main/scala/graft/streaming/SubmitSink.scala")), "UTF-8")

@@ -61,38 +61,19 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("equal-ts point in a later batch does NOT displace the stored one") {
-    // tie policy: newest ts wins, FIRST arrival wins on equal ts —
-    // in both state operators (the stored point is iterated first,
-    // so maxBy keeps it)
-    val feed = { (input: MemoryStream[TrackPoint], sync: () => Unit) =>
+    // tie policy: newest ts wins, FIRST arrival wins on equal ts (the
+    // stored point is iterated first, so maxBy keeps it)
+    val input = MemoryStream[TrackPoint]
+    val out = runUpdates(input,
+      TrackStream.latestWithTtl(input.toDS(), retentionMs = 60 * 60000),
+      "t_tie") { sync =>
       input.addData(TrackPoint(1, ts(0), false, 1.0))
       sync()
       input.addData(TrackPoint(1, ts(0), false, 2.0)) // same ts, later batch
       sync()
     }
-    val i1 = MemoryStream[TrackPoint]
-    val v1 = runUpdates(i1,
-      TrackStream.latestWithTtl(i1.toDS(), retentionMs = 60 * 60000),
-      "t_tie_v1") { sync => feed(i1, sync) }
-    assert(v1.forall(_.course == 1.0),
-      s"v1: same-ts later arrival displaced the stored point: $v1")
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val i2 = MemoryStream[TrackPoint]
-      val v2 = runUpdates(i2,
-        TrackStream.latestWithTtlV2(i2.toDS(), retentionMs = 60 * 60000),
-        "t_tie_v2") { sync => feed(i2, sync) }
-      assert(v2.forall(_.course == 1.0),
-        s"v2: same-ts later arrival displaced the stored point: $v2")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    assert(out.forall(_.course == 1.0),
+      s"same-ts later arrival displaced the stored point: $out")
   }
 
   test("latestWithTtl: retention TTL evicts idle devices (tombstone)") {
@@ -145,55 +126,31 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch)
   }
 
-  test("latestWithTtlV2 (transformWithState): lww + TTL tombstone == v1") {
-    // arbitrary-state v2 requires the RocksDB provider on the query
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val feed = { (input: MemoryStream[TrackPoint], sync: () => Unit) =>
-        input.addData(TrackPoint(1, ts(0), false, 10.0),
-          TrackPoint(2, ts(1), true, 20.0))
-        sync()
-        // newer point for 1, stale point for 2 (must not clobber)
-        input.addData(TrackPoint(1, ts(5), false, 11.0),
-          TrackPoint(2, ts(0), false, 99.0))
-        sync()
-        // advance event time far past everyone's 30-min TTL
-        input.addData(TrackPoint(3, ts(240), false, 30.0))
-        sync()
-        input.addData(TrackPoint(3, ts(250), false, 31.0))
-        sync()
-      }
-      val i2 = MemoryStream[TrackPoint]
-      val v2 = runUpdates(i2,
-        TrackStream.latestWithTtlV2(i2.toDS(), retentionMs = 30 * 60000),
-        "t_tws") { sync => feed(i2, sync) }
-      val latest = lastByKey(v2).map { case (k, u) => k -> u.course }
-      assert(latest == Map(1L -> 11.0, 2L -> 20.0, 3L -> 31.0),
-        s"v2 last-write-wins mismatch: $v2")
-      assert(v2.exists(u => u.entityId == 1 && u.evicted) &&
-        v2.exists(u => u.entityId == 2 && u.evicted),
-        s"v2 should tombstone idle devices 1 and 2: $v2")
-      assert(!v2.exists(u => u.entityId == 3 && u.evicted))
-      // identical observable sequence from the v1 operator on the
-      // same feed (modulo emission order within a batch)
-      val i1 = MemoryStream[TrackPoint]
-      val v1 = runUpdates(i1,
-        TrackStream.latestWithTtl(i1.toDS(), retentionMs = 30 * 60000),
-        "t_tws_v1") { sync => feed(i1, sync) }
-      def norm(us: Seq[DeviceUpdate]) =
-        us.map(u => (u.entityId, u.ts.getTime, u.course, u.evicted))
-          .sorted
-      assert(norm(v2) == norm(v1),
-        s"v1/v2 divergence:\nv1=${norm(v1)}\nv2=${norm(v2)}")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+  test("latestWithTtl: stale point never clobbers; idle devices tombstoned, active kept") {
+    val input = MemoryStream[TrackPoint]
+    val out = runUpdates(input,
+      TrackStream.latestWithTtl(input.toDS(), retentionMs = 30 * 60000),
+      "t_lww_ttl") { sync =>
+      input.addData(TrackPoint(1, ts(0), false, 10.0),
+        TrackPoint(2, ts(1), true, 20.0))
+      sync()
+      // newer point for 1, stale point for 2 (must not clobber)
+      input.addData(TrackPoint(1, ts(5), false, 11.0),
+        TrackPoint(2, ts(0), false, 99.0))
+      sync()
+      // advance event time far past everyone's 30-min TTL
+      input.addData(TrackPoint(3, ts(240), false, 30.0))
+      sync()
+      input.addData(TrackPoint(3, ts(250), false, 31.0))
+      sync()
     }
+    val latest = lastByKey(out).map { case (k, u) => k -> u.course }
+    assert(latest == Map(1L -> 11.0, 2L -> 20.0, 3L -> 31.0),
+      s"last-write-wins mismatch: $out")
+    assert(out.exists(u => u.entityId == 1 && u.evicted) &&
+      out.exists(u => u.entityId == 2 && u.evicted),
+      s"idle devices 1 and 2 should be tombstoned: $out")
+    assert(!out.exists(u => u.entityId == 3 && u.evicted))
   }
 
   test("dedupWithinWatermark drops redelivered points") {
