@@ -23,7 +23,7 @@ import graft.streaming.SubmitSink
   * Layout mirrors the reference deployment 1:1:
   *  - [[WebhookReceiver]] is the express route (`task.ts:103`):
   *    schema-gated POST, 200/400/405, DEBUG accept-anything;
-  *  - the spool + file-watermark text stream is the Lambda event
+  *  - the spool + `readStream.text` file stream is the Lambda event
   *    queue — push transport adapted to Spark's pull micro-batching;
   *  - [[JsonSources.decodeWebhook]]/[[JsonSources.webhookToCot]] are
   *    V1 + T1–T7 (`task.ts:110,121-143`);

@@ -481,32 +481,37 @@ object VectorQueries {
            ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT 32),
          acell AS (
            SELECT vec_id, cell FROM (
-             SELECT e.vec_id, c.cr AS cell,
-               row_number() OVER (PARTITION BY e.vec_id ORDER BY
+             SELECT vec_id, cell, row_number() OVER (
+                 PARTITION BY vec_id ORDER BY cos DESC, cell) AS rn
+             FROM (
+               SELECT e.vec_id, c.cr AS cell,
                  list_sum([e.embedding[i]::DOUBLE * c.embedding[i]::DOUBLE
                            for i in range(1, len(e.embedding) + 1)]) /
                  sqrt(
                    list_sum([e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE
                              for i in range(1, len(e.embedding) + 1)]) *
                    list_sum([c.embedding[i]::DOUBLE * c.embedding[i]::DOUBLE
-                             for i in range(1, len(c.embedding) + 1)]))
-                 DESC, c.cr) AS rn
-             FROM embeddings e CROSS JOIN cents c) t
+                             for i in range(1, len(c.embedding) + 1)])) AS cos
+               FROM embeddings e CROSS JOIN cents c) s
+             -- a zero norm gives 0/0 = NULL: no cell, as in annIvf
+             WHERE cos IS NOT NULL) t
            WHERE rn <= 3),
          probe AS (
            SELECT q_id, cell FROM (
-             SELECT q.vec_id AS q_id, c.cr AS cell,
-               row_number() OVER (PARTITION BY q.vec_id ORDER BY
+             SELECT q_id, cell, row_number() OVER (
+                 PARTITION BY q_id ORDER BY cos DESC, cell) AS rn
+             FROM (
+               SELECT q.vec_id AS q_id, c.cr AS cell,
                  list_sum([q.embedding[i]::DOUBLE * c.embedding[i]::DOUBLE
                            for i in range(1, len(q.embedding) + 1)]) /
                  sqrt(
                    list_sum([q.embedding[i]::DOUBLE * q.embedding[i]::DOUBLE
                              for i in range(1, len(q.embedding) + 1)]) *
                    list_sum([c.embedding[i]::DOUBLE * c.embedding[i]::DOUBLE
-                             for i in range(1, len(c.embedding) + 1)]))
-                 DESC, c.cr) AS rn
-             FROM embeddings q CROSS JOIN cents c
-             WHERE q.vec_id < 5) t
+                             for i in range(1, len(c.embedding) + 1)])) AS cos
+               FROM embeddings q CROSS JOIN cents c
+               WHERE q.vec_id < 5) s
+             WHERE cos IS NOT NULL) t
            WHERE rn <= 14),
          cand AS (
            SELECT DISTINCT p.q_id, a.vec_id AS id

@@ -72,22 +72,18 @@ object JsonSources {
 
   /** V1 — decode + validate a webhook JSON body column. Returns the
     * decoded struct plus an error channel: rows whose JSON fails to
-    * parse (or misses required fields) get `rec IS NULL`, the Spark
-    * analogue of the reference 400-ing invalid bodies
-    * (`task.ts:110`). DEBUG mode (`Type.Any()`) is `validate=false`.
+    * parse (or misses required fields) get `is_valid = false`, the
+    * Spark analogue of the reference 400-ing invalid bodies
+    * (`task.ts:110`). The reference's DEBUG mode (`Type.Any()`) is
+    * the receiver's: [[WebhookReceiver]] with `debug` spools any body.
     */
-  def decodeWebhook(raw: DataFrame, jsonCol: String,
-      validate: Boolean = true): DataFrame = {
+  def decodeWebhook(raw: DataFrame, jsonCol: String): DataFrame = {
     val rec = from_json(col(jsonCol), webhookSchema)
     // PERMISSIVE-mode from_json yields an all-null struct for
-    // malformed input, so validity is judged on required fields;
-    // validate=false is the reference's DEBUG Type.Any() — accept
-    // every body (task.ts:110).
-    val valid = if (validate)
-      rec.isNotNull && rec.getField("entityId").isNotNull &&
-        rec.getField("trackPoint").isNotNull &&
-        rec.getField("trackPoint").getField("time").isNotNull
-    else lit(true)
+    // malformed input, so validity is judged on required fields
+    val valid = rec.isNotNull && rec.getField("entityId").isNotNull &&
+      rec.getField("trackPoint").isNotNull &&
+      rec.getField("trackPoint").getField("time").isNotNull
     raw.withColumn("rec", rec).withColumn("is_valid", valid)
   }
 

@@ -29,6 +29,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Usage: `spark.read.format("graft.sources.TrackPointSource")
   * .option("path", dir).load()`.
+  *
+  * Batch only. To stream such a directory, use Spark's file source:
+  * `spark.readStream.schema(TrackPointSource.schema).json(dir)`. It
+  * remembers the paths it has read, so each file is read once
+  * whatever its name sorts after, and a `ts >= v` filter and the
+  * selected columns reach its reader as pushed filters and a pruned
+  * read schema.
   */
 class TrackPointSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -76,12 +83,10 @@ class TrackPointTable(path: String) extends Table with SupportsRead {
   override def name(): String = s"trackpoints($path)"
   override def schema(): StructType = TrackPointSource.schema
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
+    util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder =
-    new TrackPointScanBuilder(path,
-      Option(options.get("min_ts")).map(_.toLong))
+    new TrackPointScanBuilder(path)
 }
 
 /** One aggregate accepted by the source: kind ∈ max|min|count, with
@@ -91,18 +96,7 @@ class TrackPointTable(path: String) extends Table with SupportsRead {
   */
 private[sources] case class PushedAgg(kind: String, col: String)
 
-/** @param minTs the reference's `noEarlierThan` gate as a source
-  *   OPTION (`.option("min_ts", epochMs)`): synthesized into the
-  *   pushed-filter set at build() so the reader drops older rows in
-  *   BOTH batch and streaming. This is not redundant with
-  *   `pushFilters`: Spark's V2 filter pushdown rule rewrites only
-  *   batch `DataSourceV2Relation`s — a micro-batch stream's
-  *   ScanBuilder never sees `pushFilters`, so a config-driven gate
-  *   is the only way the predicate reaches a streaming reader
-  *   (matching the reference, where `noEarlierThan` is config, not
-  *   query syntax).
-  */
-class TrackPointScanBuilder(path: String, minTs: Option[Long] = None)
+class TrackPointScanBuilder(path: String)
     extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates {
@@ -168,14 +162,13 @@ class TrackPointScanBuilder(path: String, minTs: Option[Long] = None)
   }
 
   override def build(): Scan =
-    new TrackPointScan(path, aggSchema.getOrElse(required),
-      pushed ++ minTs.map(v => GreaterThanOrEqual("ts", v): Filter),
+    new TrackPointScan(path, aggSchema.getOrElse(required), pushed,
       aggGroups, aggs)
 }
 
 class TrackPointScan(path: String, required: StructType,
-    pushed: Array[Filter], aggGroups: Seq[String] = Nil,
-    aggs: Seq[PushedAgg] = Nil) extends Scan with Batch {
+    pushed: Array[Filter], aggGroups: Seq[String],
+    aggs: Seq[PushedAgg]) extends Scan with Batch {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -193,16 +186,11 @@ class TrackPointScan(path: String, required: StructType,
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new TrackPointReaderFactory(required, pushed, aggGroups, aggs)
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new TrackPointMicroBatchStream(path, required, pushed)
 }
 
 object TrackPointScan {
-  /** Immutable, lexicographically-monotonic file layout (part-00000
-    * style) — the contract that makes a file-count offset a valid
-    * high-watermark for the streaming form below.
+  /** The `part-` files of the directory, one partition each, in name
+    * order so a scan plans its partitions alike on every run.
     */
   private[sources] def listFiles(path: String): Array[java.io.File] =
     Option(new java.io.File(path).listFiles())
@@ -211,73 +199,11 @@ object TrackPointScan {
       .sortBy(_.getName)
 }
 
-/** The same source as an unbounded stream — the reference's actual
-  * runtime shape (S2 polls on a cadence, `task.ts:172-205`; S1
-  * accepts pushes): each trigger "polls" the directory and ingests
-  * exactly the files that arrived since the last committed offset.
-  * The offset is a file-count HIGH-WATERMARK over the sorted listing
-  * (the reference's `cachetime` gate, `task.ts:172`, is precisely
-  * this — "what have I already seen"), which with the immutable
-  * append-only layout gives exactly-once per file across restarts:
-  * Spark checkpoints the offset range per micro-batch and replays
-  * only uncommitted ranges.
-  *
-  * Source-side filtering in streaming comes from the `min_ts`
-  * OPTION, not `pushFilters`: Spark's V2 filter-pushdown rule
-  * rewrites batch relations only, so a micro-batch ScanBuilder never
-  * receives query predicates — the reference's `noEarlierThan` gate
-  * is config-driven for exactly this reason, and the option
-  * synthesizes the same `ts >= v` Filter into the shared reader
-  * path. (DataFrame-level filters still apply post-scan, so
-  * correctness never depends on the option.)
-  */
-class TrackPointMicroBatchStream(path: String, required: StructType,
-    pushed: Array[Filter])
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  override def initialOffset(): Offset = FileWatermarkOffset(0)
-  override def latestOffset(): Offset =
-    FileWatermarkOffset(TrackPointScan.listFiles(path).length)
-  override def deserializeOffset(json: String): Offset =
-    FileWatermarkOffset.fromJson(json)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-
-  override def planInputPartitions(start: Offset, end: Offset)
-      : Array[InputPartition] = {
-    val s = start.asInstanceOf[FileWatermarkOffset].files
-    val e = end.asInstanceOf[FileWatermarkOffset].files
-    TrackPointScan.listFiles(path).slice(s, e)
-      .map(f => TrackFilePartition(f.getAbsolutePath): InputPartition)
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new TrackPointReaderFactory(required, pushed)
-
-  override def toString: String =
-    s"trackpoints-stream($path) ReadSchema: ${required.catalogString}, " +
-      s"PushedFilters: [${pushed.mkString(", ")}]"
-}
-
-case class FileWatermarkOffset(files: Int)
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = s"""{"files":$files}"""
-}
-
-object FileWatermarkOffset {
-  private val Pat = """\{"files":(\d+)\}""".r
-  def fromJson(json: String): FileWatermarkOffset = json.trim match {
-    case Pat(n) => FileWatermarkOffset(n.toInt)
-    case other => throw new IllegalArgumentException(
-      s"not a FileWatermarkOffset: $other")
-  }
-}
-
 case class TrackFilePartition(file: String) extends InputPartition
 
 class TrackPointReaderFactory(required: StructType,
-    pushed: Array[Filter], aggGroups: Seq[String] = Nil,
-    aggs: Seq[PushedAgg] = Nil) extends PartitionReaderFactory {
+    pushed: Array[Filter], aggGroups: Seq[String],
+    aggs: Seq[PushedAgg]) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     if (aggs.isEmpty)
       new TrackPointReader(p.asInstanceOf[TrackFilePartition].file,

@@ -19,21 +19,23 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   *    Spark-side V1 validator agree by construction;
   *  - DEBUG → any body accepted (`body: Type.Any()`, `task.ts:110`)
   *    and logged to stderr (`task.ts:116-118`);
-  *  - non-POST → 405;
+  *  - non-POST → 405 with `Allow: POST` (RFC 9110 §15.5.6);
   *  - body over [[WebhookReceiver.MaxBodyBytes]] → 413, nothing
   *    spooled;
   *  - spool write fails (an `IOException`: disk full, dir gone) →
   *    503, so the sender knows the point was not taken and can retry.
   *
-  * Accepted payloads land as immutable `part-` files (write hidden
-  * tmp + atomic rename, so a concurrent directory listing never sees
-  * a half-written file) in `spoolDir`, which `graft.Serve` drains
-  * with `readStream.text` + [[JsonSources.decodeWebhook]]: Spark's
-  * file source remembers the paths it has read, so each new file is
-  * read once, whatever its name sorts after. The receiver is the
-  * transport shim between a push protocol and Spark's pull-based
-  * micro-batching; it holds no state beyond the spool counter, so at
-  * scale N receivers spool to N prefixes behind one stream.
+  * Accepted payloads land as immutable `<prefix><index>` files
+  * (`part-` by default; write hidden tmp + atomic rename, so a
+  * concurrent directory listing never sees a half-written file) in
+  * `spoolDir`, which `graft.Serve` drains with `readStream.text` +
+  * [[JsonSources.decodeWebhook]]: Spark's file source, the one
+  * streaming reader of a spool, remembers the paths it has read, so
+  * each new file is read once, whatever its name or prefix sorts
+  * after. The receiver is the transport shim between a push protocol
+  * and Spark's pull-based micro-batching; it holds no state beyond
+  * the spool counter, so at scale N receivers spool to N prefixes
+  * behind one stream.
   */
 final class WebhookReceiver(spoolDir: java.io.File,
     debug: Boolean = false,
@@ -73,6 +75,7 @@ final class WebhookReceiver(spoolDir: java.io.File,
   server.createContext("/", new HttpHandler {
     def handle(ex: HttpExchange): Unit = try {
       if (ex.getRequestMethod != "POST") {
+        ex.getResponseHeaders.add("Allow", "POST")
         respond(ex, 405, "Method Not Allowed")
       } else {
         val webhookid = ex.getRequestURI.getPath.stripPrefix("/")

@@ -93,6 +93,15 @@ class SourceLintSpec extends AnyFunSuite {
       s"second sketch family: $found")
   }
 
+  // Spark's file source is the one streaming reader of a directory:
+  // it tracks the paths it has read, so a file is read once whatever
+  // its name sorts after, and it supports spool cleanup. A DSv2
+  // micro-batch stream over the same files fails here.
+  test("no source implements a DSv2 micro-batch stream") {
+    val found = sites("""MicroBatchStream|MICRO_BATCH_READ""".r)
+    assert(found.isEmpty, s"DSv2 micro-batch streams: $found")
+  }
+
   /** SubmitSink.scala without its comments. */
   private def sinkCode: String = new String(Files.readAllBytes(
       Paths.get("src/main/scala/graft/streaming/SubmitSink.scala")), "UTF-8")

@@ -59,14 +59,11 @@ class SourcesSpec extends SparkSpec {
       "Unit Alpha")
   }
 
-  test("invalid body lands on the error channel (V1), DEBUG bypasses") {
+  test("invalid body lands on the error channel (V1)") {
     val bodies = Seq(webhookA1, "not json at all",
       """{"entityId": 5}""").toDF("body")
     val strict = JsonSources.decodeWebhook(bodies, "body")
     assert(strict.filter(col("is_valid")).count() == 1)
-    // DEBUG mode = Type.Any(): every body is accepted (task.ts:110)
-    val debug = JsonSources.decodeWebhook(bodies, "body", validate = false)
-    assert(debug.filter(col("is_valid")).count() == 3)
   }
 
   test("poll response decodes and explodes its features (S2/T8)") {

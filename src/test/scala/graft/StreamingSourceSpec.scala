@@ -1,43 +1,40 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.FileWatermarkOffset
+import graft.sources.TrackPointSource
 
-/** The DSv2 track-point source as an unbounded micro-batch stream
-  * (graft.sources.TrackPointMicroBatchStream): per-file offset
-  * ranges, exactly-once across triggers AND restarts (checkpointed
-  * high-watermark), and filter pushdown riding into the streaming
-  * reader.
+/** Streaming a directory of track points. Spark's file source is the
+  * one streaming reader: it remembers the paths it has read, so each
+  * file is read once across triggers and restarts whatever its name,
+  * and it takes pushed filters and a pruned read schema.
   */
 class StreamingSourceSpec extends SparkSpec {
 
+  // hidden tmp + atomic rename, as the receiver spools: a trigger
+  // that lists the directory mid-write must not see a partial file
   private def writeFile(dir: java.io.File, name: String,
-      rows: Seq[String]): Unit =
-    java.nio.file.Files.write(new java.io.File(dir, name).toPath,
-      rows.mkString("\n").getBytes("UTF-8"))
+      rows: Seq[String]): Unit = {
+    val tmp = new java.io.File(dir, s".$name.tmp").toPath
+    java.nio.file.Files.write(tmp, rows.mkString("\n").getBytes("UTF-8"))
+    java.nio.file.Files.move(tmp, new java.io.File(dir, name).toPath,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
 
   private def row(eid: Long, evid: Long, ts: Long): String =
     s"""{"entity_id": $eid, "event_id": $evid, "name": "u$eid", """ +
       s""""ts": $ts, "lon": 1.0, "lat": 2.0, "emergency": false}"""
 
-  test("offset json roundtrips and rejects junk") {
-    assert(FileWatermarkOffset(7).json() == """{"files":7}""")
-    assert(FileWatermarkOffset.fromJson("""{"files":7}""") ==
-      FileWatermarkOffset(7))
-    intercept[IllegalArgumentException](
-      FileWatermarkOffset.fromJson("""{"nope":1}"""))
-  }
-
-  test("micro-batch source: per-file batches, exactly-once, restart recovery") {
+  test("file source stream: each file read once across triggers, restarts and name order; ts filter and columns pushed") {
     val dir = java.nio.file.Files.createTempDirectory("tp_stream").toFile
     val ckpt = java.nio.file.Files.createTempDirectory("tp_ckpt").toFile
-    writeFile(dir, "part-00000", Seq(row(1, 10, 1000), row(2, 20, 2000)))
-    writeFile(dir, "part-00001", Seq(row(3, 30, 3000)))
+    writeFile(dir, "part-00000",
+      Seq(row(1, 10, 1000), row(2, 20, 2000), row(9, 90, 500)))
+    writeFile(dir, "part-00002", Seq(row(3, 30, 3000)))
 
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    def start() = spark.readStream
-      .format("graft.sources.TrackPointSource")
-      .option("path", dir.getAbsolutePath).load()
+    def start() = spark.readStream.schema(TrackPointSource.schema)
+      .json(dir.getAbsolutePath)
+      .filter(col("ts") >= 1000L)
       .select(col("entity_id"), col("event_id"))
       .writeStream
       .option("checkpointLocation", ckpt.getAbsolutePath)
@@ -48,118 +45,46 @@ class StreamingSourceSpec extends SparkSpec {
         ()
       }
       .start()
+    def seenNow = seen.synchronized(seen.sorted.toSeq)
 
     val q = start()
     try {
       q.processAllAvailable()
-      assert(seen.sorted.toSeq == Seq((1L, 10L), (2L, 20L), (3L, 30L)),
-        s"initial backlog wrong: $seen")
-      // a new file arrives: the next trigger ingests ONLY it
-      writeFile(dir, "part-00002", Seq(row(4, 40, 4000), row(5, 50, 5000)))
+      assert(seenNow == Seq((1L, 10L), (2L, 20L), (3L, 30L)),
+        s"initial backlog wrong: $seenNow")
+      // a file whose name sorts before one already read: read once,
+      // and the file it sorts before is not read again
+      writeFile(dir, "part-00001", Seq(row(4, 40, 4000)))
       q.processAllAvailable()
-      assert(seen.sorted.toSeq == Seq((1L, 10L), (2L, 20L), (3L, 30L),
-        (4L, 40L), (5L, 50L)), s"incremental batch wrong: $seen")
+      assert(seenNow == Seq((1L, 10L), (2L, 20L), (3L, 30L), (4L, 40L)),
+        s"out-of-order file wrong: $seenNow")
+      // a later trigger reads only the new file
+      writeFile(dir, "part-00003", Seq(row(5, 50, 5000)))
+      q.processAllAvailable()
+      assert(seenNow == Seq((1L, 10L), (2L, 20L), (3L, 30L), (4L, 40L),
+        (5L, 50L)), s"incremental batch wrong: $seenNow")
+      // the row gate and the column pruning reach the file scan
+      val plan = new java.io.ByteArrayOutputStream()
+      Console.withOut(plan)(q.explain())
+      val scan = plan.toString("UTF-8").linesIterator
+        .find(_.contains("FileScan json")).getOrElse("")
+      assert("PushedFilters: \\[[^\\]]*GreaterThanOrEqual\\(ts,1000\\)".r
+          .findFirstIn(scan).isDefined, s"ts filter not pushed: $plan")
+      assert(scan.contains(
+        "ReadSchema: struct<entity_id:bigint,event_id:bigint,ts:bigint>"),
+        s"read schema not pruned: $plan")
     } finally q.stop()
 
     // restart against the same checkpoint: only the file that arrived
-    // while down is processed — the committed high-watermark holds
-    writeFile(dir, "part-00003", Seq(row(6, 60, 6000)))
+    // while down is read
+    writeFile(dir, "part-00004", Seq(row(6, 60, 6000)))
     seen.clear()
     val q2 = start()
     try {
       q2.processAllAvailable()
-      assert(seen.sorted.toSeq == Seq((6L, 60L)),
-        s"restart must resume from the committed offset: $seen")
+      assert(seenNow == Seq((6L, 60L)),
+        s"restart must read only files new since the last commit: $seenNow")
     } finally q2.stop()
-  }
-
-  test("S1 live-socket leg: loopback feeder drives ingestion end-to-end") {
-    // The reference's S1 is a live push endpoint (`task.ts:97-164`):
-    // clients POST JSON over a real socket and the payload flows
-    // through the pipeline. This leg runs a loopback ServerSocket
-    // "webhook receiver" that spools each connection's payload as an
-    // immutable part- file (write-to-hidden-tmp + atomic rename, so
-    // the file-count watermark never sees a half-written file), with
-    // the DSv2 micro-batch stream draining the spool — ingestion
-    // over a live socket, not just offset arithmetic.
-    val server = scala.util.Try(new java.net.ServerSocket(
-      0, 16, java.net.InetAddress.getLoopbackAddress)) match {
-      case scala.util.Success(s) => s
-      case scala.util.Failure(e) =>
-        cancel(s"sandbox forbids loopback sockets: $e")
-    }
-    val dir = java.nio.file.Files.createTempDirectory("tp_sock").toFile
-    val ckpt = java.nio.file.Files.createTempDirectory("tp_sock_ck").toFile
-    val nFiles = new java.util.concurrent.atomic.AtomicInteger(0)
-    val acceptor = new Thread(() =>
-      try while (!server.isClosed) {
-        val c = server.accept()
-        try {
-          val payload = scala.io.Source
-            .fromInputStream(c.getInputStream, "UTF-8").mkString
-          if (payload.nonEmpty) {
-            val n = nFiles.getAndIncrement()
-            val tmp = new java.io.File(dir, f".part-$n%05d.tmp")
-            java.nio.file.Files.write(tmp.toPath,
-              payload.getBytes("UTF-8"))
-            java.nio.file.Files.move(tmp.toPath,
-              new java.io.File(dir, f"part-$n%05d").toPath,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          }
-        } finally c.close()
-      } catch { case _: java.net.SocketException => () }) // closed
-    acceptor.setDaemon(true)
-    acceptor.start()
-
-    def post(rows: Seq[String]): Unit = {
-      val c = new java.net.Socket(
-        java.net.InetAddress.getLoopbackAddress, server.getLocalPort)
-      try {
-        val w = new java.io.OutputStreamWriter(
-          c.getOutputStream, "UTF-8")
-        w.write(rows.mkString("\n")); w.flush()
-      } finally c.close()
-    }
-    def awaitSpooled(n: Int): Unit = {
-      val deadline = System.currentTimeMillis() + 10000
-      def count = Option(dir.listFiles()).getOrElse(Array.empty)
-        .count(f => f.isFile && f.getName.startsWith("part-"))
-      while (count < n && System.currentTimeMillis() < deadline)
-        Thread.sleep(20)
-      assert(count >= n, s"feeder never spooled file $n")
-    }
-
-    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = spark.readStream
-      .format("graft.sources.TrackPointSource")
-      .option("path", dir.getAbsolutePath).load()
-      .select(col("entity_id"), col("event_id"))
-      .writeStream
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        seen.synchronized {
-          seen ++= df.collect().map(r => (r.getLong(0), r.getLong(1)))
-        }
-        ()
-      }
-      .start()
-    try {
-      post(Seq(row(1, 10, 1000), row(2, 20, 2000)))
-      awaitSpooled(1)
-      q.processAllAvailable()
-      assert(seen.sorted.toSeq == Seq((1L, 10L), (2L, 20L)),
-        s"first live push wrong: $seen")
-      // second push while the query is live: only the new payload
-      post(Seq(row(3, 30, 3000)))
-      awaitSpooled(2)
-      q.processAllAvailable()
-      assert(seen.sorted.toSeq ==
-        Seq((1L, 10L), (2L, 20L), (3L, 30L)),
-        s"second live push wrong: $seen")
-    } finally {
-      q.stop()
-      server.close()
-    }
   }
 
   test("S1 HTTP leg: POST round-trip, 200/400/405, streaming drain") {
@@ -207,10 +132,11 @@ class StreamingSourceSpec extends SparkSpec {
       // trailing garbage after a valid object
       assert(post("""{"entityId": 1,""" +
         """ "trackPoint": {"time": 1}} extra""").statusCode() == 400)
-      // wrong method
-      assert(client.send(req("/hook1").GET().build(),
+      // wrong method: 405 names the one it takes (RFC 9110 §15.5.6)
+      val get = client.send(req("/hook1").GET().build(),
         java.net.http.HttpResponse.BodyHandlers.ofString())
-        .statusCode() == 405)
+      assert(get.statusCode() == 405)
+      assert(get.headers().firstValue("Allow").orElse("") == "POST")
       assert(post(item(2, 1704844860000L, 3.5, 4.5))
         .statusCode() == 200)
       // CRLF pretty-printed body: accepted AND spooled as ONE line
@@ -288,44 +214,5 @@ class StreamingSourceSpec extends SparkSpec {
       assert(dbgDir.listFiles()
         .count(_.getName.startsWith("part-")) == 1)
     } finally dbg.close()
-  }
-
-  test("min_ts option drops rows inside the streaming reader") {
-    // Spark's V2 filter pushdown rewrites batch relations only — a
-    // micro-batch ScanBuilder never receives pushFilters (verified:
-    // the DataFrame filter below leaves PushedFilters empty). The
-    // reference's noEarlierThan gate is config-driven, so the
-    // streaming source takes it as the min_ts OPTION; the DataFrame
-    // filter stays as the correctness backstop.
-    val dir = java.nio.file.Files.createTempDirectory("tp_stream_f").toFile
-    writeFile(dir, "part-00000",
-      Seq(row(1, 10, 1000), row(2, 20, 99000), row(3, 30, 500)))
-    val got = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = spark.readStream
-      .format("graft.sources.TrackPointSource")
-      .option("path", dir.getAbsolutePath)
-      .option("min_ts", "1000").load()
-      .filter(col("ts") >= 1000L)
-      .select(col("entity_id"))
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        got.synchronized { got ++= df.collect().map(_.getLong(0)) }
-        ()
-      }
-      .start()
-    try {
-      q.processAllAvailable()
-      assert(got.sorted.toSeq == Seq(1L, 2L), s"filter not applied: $got")
-      // the filter must be INSIDE the scan, not a post-filter only:
-      // the stream's source description advertises the pushed predicate
-      val planStr = q.lastProgress.sources.map(_.description).mkString
-      // ts must appear INSIDE the brackets: an empty pushed list
-      // still prints "PushedFilters: []" and ReadSchema contains
-      // "ts:bigint", so two independent contains() could not fail
-      // for the no-pushdown regression
-      assert("PushedFilters: \\[[^\\]]*ts".r
-          .findFirstIn(planStr).isDefined,
-        s"ts filter not pushed into the streaming reader: $planStr")
-    } finally q.stop()
   }
 }
